@@ -1,9 +1,11 @@
 """Transcript → quad-table expansion stage (the Spark face of to-rdf).
 
-One fused ``mapInPandas`` pass per input partition: regex-extract fenced
-JSON-LD blocks from turn text, parse, run the pure to-rdf core
-(rdflib_jsonld_spark.jsonld.tordf — SURVEY.md §2.D1-D11/C3-C6), and emit
-quad rows with (conv_id, turn_idx) lineage columns. Fusing extraction and
+One expansion UDF, ``expand_with_metrics``: a fused ``mapInPandas`` pass
+per input partition that regex-extracts fenced JSON-LD blocks from turn
+text, parses, runs the pure to-rdf core (rdflib_jsonld_spark.jsonld.tordf
+— SURVEY.md §2.D1-D11/C3-C6), and emits quad rows with (conv_id,
+turn_idx) lineage columns plus parse-error sentinel rows;
+``expand_transcripts`` is its filtered view. Fusing extraction and
 expansion keeps the whole per-turn path NARROW (zero shuffles until
 linking — SURVEY.md §3.4) and crosses the Arrow boundary once.
 
@@ -112,44 +114,23 @@ def quads_for_turn(conv_id: str, turn_idx: int, text: str,
     return rows, errors
 
 
-def expand_transcripts(transcripts: DataFrame,
-                       registry: dict | None = None) -> DataFrame:
-    """transcripts(conv_id, turn_idx, text, …) → quads DataFrame.
-
-    Narrow (no shuffle): one Arrow-batched pass per input partition.
-    Column pruning: only (conv_id, turn_idx, text) are read — with a
-    parquet source Catalyst pushes this into the scan (ReadSchema).
-    ``registry`` merges extra pre-fetched remote contexts over the
-    built-in one (sources/registry.py load_registry_dir).
-    """
-    pruned = transcripts.select("conv_id", "turn_idx", "text")
-    reg = {**REGISTRY, **(registry or {})}
-
-    def expand(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ctx = Context(registry=reg).load(CONTEXT_V1_IRI)
-        for pdf in batches:
-            out: list[tuple] = []
-            for conv_id, turn_idx, text in zip(
-                    pdf["conv_id"], pdf["turn_idx"], pdf["text"]):
-                rows, _ = quads_for_turn(conv_id, int(turn_idx), text, ctx,
-                                         registry=reg)
-                out.extend(rows)
-            if out:
-                yield pd.DataFrame(out, columns=QUAD_COLS)
-
-    return pruned.mapInPandas(expand, schema=QUAD_SCHEMA)
-
-
 METRICS_SCHEMA = T.StructType(QUAD_SCHEMA.fields + [
     T.StructField("_kg_errors", T.IntegerType(), False),
 ])
 
+ERROR_SUBJECT = "_:error"  #: s and p of the parse-error sentinel rows
+
 
 def expand_with_metrics(transcripts: DataFrame,
                         registry: dict | None = None) -> DataFrame:
-    """Variant that carries per-turn parse-error counts for the lineage/
-    metrics sink (SURVEY.md §4.3.3). Error turns emit a sentinel row with
-    s='_:error' so counts survive even when no quads do."""
+    """transcripts(conv_id, turn_idx, text, …) → quads + ``_kg_errors``.
+
+    Narrow (no shuffle): one Arrow-batched pass per input partition; only
+    (conv_id, turn_idx, text) are read (parquet ReadSchema pruning).
+    ``registry`` merges extra pre-fetched remote contexts over the
+    built-in one (sources/registry.py load_registry_dir). Quad rows carry
+    ``_kg_errors = 0``; a turn with parse failures adds one
+    ``ERROR_SUBJECT`` sentinel row holding its count (SURVEY.md §4.3.3)."""
     pruned = transcripts.select("conv_id", "turn_idx", "text")
     reg = {**REGISTRY, **(registry or {})}
 
@@ -163,12 +144,24 @@ def expand_with_metrics(transcripts: DataFrame,
                                             ctx, registry=reg)
                 out.extend(r + (0,) for r in rows)
                 if errs:
-                    out.append((None, "_:error", True, "_:error", "literal",
-                                "", None, None, conv_id, int(turn_idx), errs))
+                    out.append((None, ERROR_SUBJECT, True, ERROR_SUBJECT,
+                                "literal", "", None, None, conv_id,
+                                int(turn_idx), errs))
             if out:
                 yield pd.DataFrame(out, columns=QUAD_COLS + ["_kg_errors"])
 
     return pruned.mapInPandas(expand, schema=METRICS_SCHEMA)
+
+
+def drop_error_rows(quads: DataFrame) -> DataFrame:
+    """Sentinel rows and ``_kg_errors`` removed: the plain quad table."""
+    return quads.where(F.col("s") != ERROR_SUBJECT).drop("_kg_errors")
+
+
+def expand_transcripts(transcripts: DataFrame,
+                       registry: dict | None = None) -> DataFrame:
+    """transcripts → quads: :func:`expand_with_metrics`, filtered."""
+    return drop_error_rows(expand_with_metrics(transcripts, registry))
 
 
 def dedup_quads(quads: DataFrame) -> DataFrame:

@@ -11,12 +11,13 @@ Resume model (north_rule: "resumable from checkpoint with per-partition
 lineage + metrics"):
 - Work is split into ``n_slices`` deterministic conv-hash slices
   (``pmod(xxhash64(conv_id), n_slices)``) — the unit of restart.
-- Each slice writes quads to ``quads/slice=<i>/`` and then a JSON marker
-  ``_lineage/slice_<i>.json`` with {rows_in, quads_out, checksum}; marker
-  write is last, so a crash mid-slice leaves no marker and the slice
-  re-runs. Because expansion is a pure function of the input slice
-  (deterministic bnodes — SURVEY.md §4.3.1), re-running yields identical
-  bytes, making the whole pipeline idempotent.
+- Each slice's expansion runs once: quads, ``_:error`` sentinel rows and
+  ``_kg_errors`` go to ``quads/slice=<i>/``; one aggregate over that
+  parquet fills ``_lineage/slice_<i>.json`` {slice, rows_in, quads_out,
+  n_parse_errors, checksum, wall_s, turns_per_s}, written LAST, so a crash
+  mid-slice leaves no marker and the slice re-runs. Expansion is a pure
+  function of the input slice (deterministic bnodes — SURVEY.md §4.3.1),
+  so re-running yields identical bytes. ``read_quads`` drops sentinels.
 """
 
 from __future__ import annotations
@@ -24,18 +25,21 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import time
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+
+from rdflib_jsonld_spark.operators.expand import ERROR_SUBJECT, drop_error_rows
+
+_QUAD_HASH = ("xxhash64(coalesce(g,''), s, p, o_kind, o_value, coalesce("
+              "o_datatype,''), coalesce(o_lang,''), conv_id, turn_idx)")
 
 
 def quad_checksum(quads: DataFrame) -> int:
-    """Order-independent set digest of quad identity columns (G4 key)."""
-    row = quads.agg(F.expr(
-        "bit_xor(xxhash64(coalesce(g,''), s, p, o_kind, o_value, "
-        "coalesce(o_datatype,''), coalesce(o_lang,''), conv_id, turn_idx))"
-    ).alias("h")).collect()[0]
-    return row["h"] if row["h"] is not None else 0
+    """Order-independent set digest (``bit_xor`` of ``_QUAD_HASH``) of
+    quad identity columns (G4 key)."""
+    return quads.agg(F.bit_xor(F.expr(_QUAD_HASH))).first()[0] or 0
 
 
 def read_graph(spark: SparkSession, path: str) -> DataFrame:
@@ -91,7 +95,8 @@ class ResumableQuadWriter:
     def run(self, transcripts: DataFrame,
             expand_fn: Callable[[DataFrame], DataFrame],
             fail_after: int | None = None) -> dict:
-        """Process all pending slices; returns summary metrics.
+        """Process all pending slices, each expanded, counted (observed
+        ``rows_in``) and written in one job; returns the summary.
 
         ``fail_after`` injects a crash after N slices (resume tests,
         SURVEY.md §5.2.6)."""
@@ -101,27 +106,28 @@ class ResumableQuadWriter:
         for i in range(self.n_slices):
             if os.path.exists(self._marker(i)):
                 continue
+            t0 = time.perf_counter()
             part = sliced.where(F.col("_slice") == i).drop("_slice")
-            rows_in = part.count()
-            quads = expand_fn(part)
-            n_errors = 0
-            if "_kg_errors" in quads.columns:
-                # expand_with_metrics path: error-sentinel rows carry parse
-                # failure counts; record them in lineage, keep data clean
-                err_row = quads.where(F.col("s") == "_:error") \
-                    .agg(F.sum("_kg_errors").alias("n")).collect()[0]
-                n_errors = int(err_row["n"] or 0)
-                quads = quads.where(F.col("s") != "_:error") \
-                    .drop("_kg_errors")
+            seen = Observation()
+            quads = expand_fn(part.observe(seen, F.count(F.lit(1)).alias("n")))
+            if "_kg_errors" not in quads.columns:
+                quads = quads.withColumn("_kg_errors", F.lit(0))
             slice_path = os.path.join(self.data_dir, f"slice={i}")
             quads.write.mode("overwrite").parquet(slice_path)
-            written = self.spark.read.parquet(slice_path)
+            is_quad = F.col("s") != ERROR_SUBJECT
+            n, errs, h = self.spark.read.parquet(slice_path).agg(
+                F.count(F.when(is_quad, 1)), F.sum("_kg_errors"),
+                F.bit_xor(F.when(is_quad, F.expr(_QUAD_HASH)))).first()
+            rows_in = seen.get["n"]
+            wall_s = time.perf_counter() - t0
             metrics = {
                 "slice": i,
                 "rows_in": rows_in,
-                "quads_out": written.count(),
-                "n_parse_errors": n_errors,
-                "checksum": quad_checksum(written),
+                "quads_out": n,
+                "n_parse_errors": int(errs or 0),
+                "checksum": h or 0,
+                "wall_s": round(wall_s, 3),
+                "turns_per_s": round(rows_in / wall_s, 1),
             }
             # marker LAST → crash before this line re-runs the slice
             with open(self._marker(i), "w") as f:
@@ -144,7 +150,7 @@ class ResumableQuadWriter:
         return out
 
     def read_quads(self) -> DataFrame:
-        return self.spark.read.parquet(self.data_dir)
+        return drop_error_rows(self.spark.read.parquet(self.data_dir))
 
     def reset(self) -> None:
         shutil.rmtree(self.out_dir, ignore_errors=True)

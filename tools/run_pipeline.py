@@ -58,7 +58,7 @@ def main() -> None:
     from rdflib_jsonld_spark.operators.linking import (
         canonical_mapping, canonicalize_quads, entity_mention_counts)
     from rdflib_jsonld_spark.sources.quads_io import (
-        ResumableQuadWriter, write_quads)
+        ResumableQuadWriter, read_graph, write_quads)
     from rdflib_jsonld_spark.sources import transcripts as tr
 
     builder = (SparkSession.builder.appName("kg-pipeline")
@@ -126,8 +126,8 @@ def main() -> None:
     canon = canonicalize_quads(quads, mapping)
 
     # stage 4: bucket(s)-partitioned graph table + entity metrics
-    write_quads(canon, os.path.join(args.output, "graph"),
-                n_buckets=args.buckets)
+    graph_path = os.path.join(args.output, "graph")
+    write_quads(canon, graph_path, n_buckets=args.buckets)
     counts = entity_mention_counts(quads, mapping)
     counts.write.mode("overwrite").parquet(
         os.path.join(args.output, "entity_counts"))
@@ -155,7 +155,8 @@ def main() -> None:
         "expansion": summary,
         "n_quads_dedup": quads.count(),
         "n_linked_nodes": mapping.count(),
-        "n_canonical_quads": canon.count(),
+        # read back, not canon.count(): that would re-run the rewrite join
+        "n_canonical_quads": read_graph(spark, graph_path).count(),
     }
     with open(os.path.join(args.output, "metrics.json"), "w") as f:
         json.dump(metrics, f, indent=2)
