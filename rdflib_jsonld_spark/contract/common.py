@@ -18,49 +18,46 @@ _OWL_SAMEAS = "http://www.w3.org/2002/07/owl#sameAs"
 # query starts from the same documents-bridge expansion plan, and within
 # one gate/bench process the Python (mapInPandas) expansion dominates the
 # per-query cost (VERDICT r03 #5). At production scale this table is the
-# materialized Iceberg quad store (tools/run_pipeline.py) — the cache
-# models that persistence; it does not change any query's semantics.
+# materialized Iceberg quad store (plans.pipeline.construct_graph) — the
+# cache models that persistence; it does not change any query's semantics.
 _QUAD_CACHE: dict = {}
+
+
+def _shared_quads(spark: SparkSession, key: tuple, transcripts,
+                  dedup: bool) -> DataFrame:
+    """Persisted expansion of ``transcripts()`` under
+    ``(applicationId, *key, dedup)``; the dedup variant derives from the
+    persisted raw table, so the Python expansion runs once per corpus,
+    not once per variant."""
+    full_key = (spark.sparkContext.applicationId, *key, dedup)
+    df = _QUAD_CACHE.get(full_key)
+    if df is None:
+        from rdflib_jsonld_spark.operators.expand import (
+            dedup_quads, expand_transcripts)
+        if dedup:
+            df = dedup_quads(_shared_quads(spark, key, transcripts, False))
+        else:
+            df = expand_transcripts(transcripts())
+        df = df.persist()
+        _QUAD_CACHE[full_key] = df
+    return df
 
 
 def shared_doc_quads(spark: SparkSession, sf_dir: str, *,
                      dedup: bool = True) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, dedup)
-    df = _QUAD_CACHE.get(key)
-    if df is None:
-        from rdflib_jsonld_spark.operators.expand import (
-            dedup_quads, expand_transcripts)
-        from rdflib_jsonld_spark.sources.doc_transcripts import (
-            documents_as_transcripts)
-        if dedup:
-            # derive from the persisted raw table so the Python
-            # expansion runs once per corpus, not once per variant
-            df = dedup_quads(
-                shared_doc_quads(spark, sf_dir, dedup=False)).persist()
-        else:
-            docs = _t(spark, sf_dir, "documents")
-            df = expand_transcripts(
-                documents_as_transcripts(docs)).persist()
-        _QUAD_CACHE[key] = df
-    return df
+    from rdflib_jsonld_spark.sources.doc_transcripts import (
+        documents_as_transcripts)
+    return _shared_quads(
+        spark, (sf_dir,),
+        lambda: documents_as_transcripts(_t(spark, sf_dir, "documents")),
+        dedup)
 
 
 def shared_transcript_quads(spark: SparkSession, *, n_convs: int = 150,
                             seed: int = 42,
                             dedup: bool = True) -> DataFrame:
     """Same persistence contract for the synthetic-generator corpus."""
-    key = (spark.sparkContext.applicationId, "synthetic", n_convs, seed,
-           dedup)
-    df = _QUAD_CACHE.get(key)
-    if df is None:
-        from rdflib_jsonld_spark.operators.expand import (
-            dedup_quads, expand_transcripts)
-        from rdflib_jsonld_spark.sources import transcripts as tr
-        if dedup:
-            df = dedup_quads(shared_transcript_quads(
-                spark, n_convs=n_convs, seed=seed, dedup=False)).persist()
-        else:
-            t = tr.transcripts_df(spark, n_convs=n_convs, seed=seed)
-            df = expand_transcripts(t).persist()
-        _QUAD_CACHE[key] = df
-    return df
+    from rdflib_jsonld_spark.sources import transcripts as tr
+    return _shared_quads(
+        spark, ("synthetic", n_convs, seed),
+        lambda: tr.transcripts_df(spark, n_convs=n_convs, seed=seed), dedup)

@@ -1,22 +1,12 @@
 import pytest
 
-from pyspark.sql import SparkSession
+from rdflib_jsonld_spark.plans.pipeline import build_session
 
 
 @pytest.fixture(scope="session")
 def spark():
-    s = (
-        SparkSession.builder
-        .master("local[4]")
-        .appName("rdflib_jsonld_spark-tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "8g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    s = build_session("local[4]", "rdflib_jsonld_spark-tests",
+                      shuffle_partitions=8, driver_memory="8g")
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

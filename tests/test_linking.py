@@ -104,26 +104,6 @@ def test_pipeline_partition_independence(spark):
     assert run(3) == run(13)
 
 
-def test_sql_views_over_graph(spark):
-    """SQL API parity: spark.sql over registered pipeline views matches
-    the DataFrame results."""
-    from rdflib_jsonld_spark.plans.pipeline import (
-        construct_graph, register_views)
-    stages = construct_graph(tr.transcripts_df(spark, 15, partitions=3))
-    names = register_views(stages)
-    assert "kg_quads" in names and "kg_entity_counts" in names
-    sql_top = spark.sql("""
-        SELECT p, count(*) AS n FROM kg_quads
-        GROUP BY p ORDER BY n DESC, p LIMIT 5""").collect()
-    df_top = (stages["quads"].groupBy("p")
-              .agg(F.count(F.lit(1)).alias("n"))
-              .orderBy(F.desc("n"), F.asc("p")).limit(5).collect())
-    assert [tuple(r) for r in sql_top] == [tuple(r) for r in df_top]
-    total = spark.sql(
-        "SELECT sum(n_mentions) FROM kg_entity_counts").collect()[0][0]
-    assert total > 0
-
-
 def test_canonicalize_broadcast_plan(spark):
     """F3 rewrite must broadcast the canonical map (entities ≪ quads)."""
     quads = expand_transcripts(tr.transcripts_df(spark, 5, partitions=2))

@@ -19,7 +19,9 @@ import time
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import functions as F
+
+from rdflib_jsonld_spark.plans.pipeline import build_session
 
 
 def probe_corpus(spark, n_words: int = 30000):
@@ -42,11 +44,8 @@ def probe_corpus(spark, n_words: int = 30000):
 def main():
     target = int(sys.argv[1]) if len(sys.argv) > 1 else 1024
     batch_k = int(sys.argv[2]) if len(sys.argv) > 2 else 64
-    spark = (SparkSession.builder.master("local[32]")
-             .config("spark.sql.shuffle.partitions", "32")
-             .config("spark.ui.enabled", "false")
-             .config("spark.driver.memory", "8g")
-             .getOrCreate())
+    spark = build_session("local[32]", "bpe-scale-probe",
+                          shuffle_partitions=32, driver_memory="8g")
     from rdflib_jsonld_spark.operators.bpe import learn_bpe_batched
     docs = probe_corpus(spark)
     # rounds budget: generous upper bound; learn_bpe_batched breaks

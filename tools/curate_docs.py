@@ -54,19 +54,14 @@ def main() -> None:
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
     from rdflib_jsonld_spark.operators.curation import (
         c4_quality_flags, cap_per_source, gopher_quality_flags,
         sample_mixture)
     from rdflib_jsonld_spark.operators.dedup import corpus_chunk_dedup
+    from rdflib_jsonld_spark.plans.pipeline import build_session
 
-    builder = (SparkSession.builder.appName("curate-docs")
-               .config("spark.sql.adaptive.enabled", "true")
-               .config("spark.sql.adaptive.skewJoin.enabled", "true")
-               .config("spark.sql.execution.arrow.pyspark.enabled", "true"))
-    if args.master:
-        builder = builder.master(args.master)
-    spark = builder.getOrCreate()
+    spark = build_session(args.master, "curate-docs")
     spark.sparkContext.setLogLevel("WARN")
 
     docs = spark.read.parquet(args.input)

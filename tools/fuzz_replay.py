@@ -23,16 +23,11 @@ def main():
     with open(sys.argv[1]) as f:
         exec(f.read(), ns)
 
-    from pyspark.sql import SparkSession
+    from rdflib_jsonld_spark.plans.pipeline import build_session
     from sparql_fuzz import decode_engine, quads_df, row_key
 
-    spark = (SparkSession.builder.master("local[4]")
-             .config("spark.sql.shuffle.partitions", "1")
-             .config("spark.default.parallelism", "1")
-             .config("spark.sql.adaptive.enabled", "false")
-             .config("spark.ui.enabled", "false")
-             .config("spark.driver.memory", "4g")
-             .appName("fuzz-replay").getOrCreate())
+    spark = build_session("local[4]", "fuzz-replay", shuffle_partitions=1,
+                          driver_memory="4g")
     spark.sparkContext.setLogLevel("ERROR")
 
     from rdflib_jsonld_spark.operators.sparql import sparql

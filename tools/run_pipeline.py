@@ -7,10 +7,15 @@ Package the library and submit:
     spark-submit --py-files /tmp/kgp.zip tools/run_pipeline.py \
         --input synthetic:2000 --output /tmp/kg_out --slices 8
 
-Stages (SURVEY.md §3.4): resumable expansion (per-slice lineage markers) →
-linking (adaptive CC) → canonical rewrite → bucket(s)-partitioned graph
-table + JSON metrics. Re-running with the same --output resumes: completed
-slices are skipped via their lineage markers.
+The stages (SURVEY.md §3.4: resumable expansion with per-slice lineage
+markers → dedup → linking (adaptive CC) → canonical rewrite →
+bucket(s)-partitioned graph table + entity counts) are
+``plans.pipeline.construct_graph``; this script only parses arguments,
+bridges the ``--input`` forms to transcripts, runs the optional exports
+and ``--query`` over the canonical rewrite, and writes
+``<output>/metrics.json``. Without ``--master`` the session takes its
+master and UI settings from spark-submit. Re-running with the same
+--output resumes: completed slices are skipped via their lineage markers.
 """
 
 from __future__ import annotations
@@ -52,23 +57,11 @@ def main() -> None:
                     help="override master (default: from spark-submit)")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-    from rdflib_jsonld_spark.operators.expand import (
-        dedup_quads, expand_with_metrics)
-    from rdflib_jsonld_spark.operators.linking import (
-        canonical_mapping, canonicalize_quads, entity_mention_counts)
-    from rdflib_jsonld_spark.sources.quads_io import (
-        ResumableQuadWriter, read_graph, write_quads)
+    from rdflib_jsonld_spark.plans.pipeline import (
+        build_session, construct_graph)
     from rdflib_jsonld_spark.sources import transcripts as tr
 
-    builder = (SparkSession.builder.appName("kg-pipeline")
-               .config("spark.sql.adaptive.enabled", "true")
-               .config("spark.sql.adaptive.skewJoin.enabled", "true")
-               .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-               .config("spark.sql.session.timeZone", "UTC"))
-    if args.master:
-        builder = builder.master(args.master)
-    spark = builder.getOrCreate()
+    spark = build_session(args.master, "kg-pipeline")
     spark.sparkContext.setLogLevel("WARN")
 
     if args.input.startswith("synthetic:"):
@@ -108,29 +101,15 @@ def main() -> None:
     else:
         transcripts = tr.read_transcripts(spark, args.input)
 
-    # stage 1: resumable expansion with per-slice lineage (+ parse-error
-    # counts surfaced through the metrics-carrying expansion variant)
     extra_registry = None
     if args.contexts:
         from rdflib_jsonld_spark.sources.registry import load_registry_dir
         extra_registry = load_registry_dir(args.contexts)
 
-    writer = ResumableQuadWriter(spark, args.output, n_slices=args.slices)
-    summary = writer.run(
-        transcripts,
-        lambda df: expand_with_metrics(df, registry=extra_registry))
-    quads = dedup_quads(writer.read_quads())
-
-    # stage 2-3: linking + canonical rewrite
-    mapping = canonical_mapping(quads).cache()
-    canon = canonicalize_quads(quads, mapping)
-
-    # stage 4: bucket(s)-partitioned graph table + entity metrics
-    graph_path = os.path.join(args.output, "graph")
-    write_quads(canon, graph_path, n_buckets=args.buckets)
-    counts = entity_mention_counts(quads, mapping)
-    counts.write.mode("overwrite").parquet(
-        os.path.join(args.output, "entity_counts"))
+    stages, metrics = construct_graph(
+        spark, transcripts, args.output, n_slices=args.slices,
+        n_buckets=args.buckets, registry=extra_registry)
+    canon = stages["canonical_quads"]
     if args.export_nquads:
         from rdflib_jsonld_spark.sources.nquads_io import write_nquads
         write_nquads(canon, os.path.join(args.output, "nquads"),
@@ -151,13 +130,6 @@ def main() -> None:
         for row in res.limit(20).collect():
             print(json.dumps(row.asDict(), default=str))
 
-    metrics = {
-        "expansion": summary,
-        "n_quads_dedup": quads.count(),
-        "n_linked_nodes": mapping.count(),
-        # read back, not canon.count(): that would re-run the rewrite join
-        "n_canonical_quads": read_graph(spark, graph_path).count(),
-    }
     with open(os.path.join(args.output, "metrics.json"), "w") as f:
         json.dump(metrics, f, indent=2)
     print(json.dumps(metrics))

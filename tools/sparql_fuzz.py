@@ -984,17 +984,10 @@ def main():
     start = int(sys.argv[2]) if len(sys.argv) > 2 else 0
     repro = os.environ.get("REPRO")
 
-    from pyspark.sql import SparkSession
-    spark = (SparkSession.builder.master(
-        f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
-        .config("spark.sql.shuffle.partitions", "1")
-        # dozen-row inputs: 1-partition scans keep the compat-join
-        # unions from fanning out to hundreds of no-op tasks
-        .config("spark.default.parallelism", "1")
-        .config("spark.sql.adaptive.enabled", "false")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .appName("sparql-fuzz").getOrCreate())
+    from rdflib_jsonld_spark.plans.pipeline import build_session
+    spark = build_session(
+        f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]", "sparql-fuzz",
+        shuffle_partitions=1, driver_memory="8g")
     spark.sparkContext.setLogLevel("ERROR")
 
     stats = Counter()
