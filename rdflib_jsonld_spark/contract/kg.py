@@ -821,7 +821,7 @@ def q_kg_star_annotation_docs(spark, sf_dir) -> DataFrame:
     import pandas as pd
     from pyspark.sql import types as T
     from rdflib_jsonld_spark.jsonld import to_rdf
-    from rdflib_jsonld_spark.operators.expand import _term_cols
+    from rdflib_jsonld_spark.operators.expand import quad_to_cells
     from rdflib_jsonld_spark.operators.star import with_quoted_components
 
     vocab = KG + "vocab#"
@@ -844,15 +844,9 @@ def q_kg_star_annotation_docs(spark, sf_dir) -> DataFrame:
                            "@id": f"{ent}{(did * 7 + 3) % 97}",
                            "@annotation": {
                                f"{vocab}weight": (did % 5) + 1}}}
-                for g, s, p, o in to_rdf(doc):
-                    s_str, _ = _term_cols(s)
-                    if o[0] == "lit":
-                        rows.append((s_str, p[1], "literal", o[1]))
-                    else:
-                        o_str, _ = _term_cols(o)
-                        rows.append((s_str, p[1],
-                                     "triple" if o[0] == "qt" else "iri",
-                                     o_str))
+                for q in to_rdf(doc):
+                    _, s, _, p, kind, value, _, _ = quad_to_cells(q)
+                    rows.append((s, p, kind, value))
             yield pd.DataFrame(rows, columns=[f.name for f in schema])
 
     quads = doc_ids.mapInPandas(gen, schema=schema).persist()

@@ -37,6 +37,7 @@ from .errors import (ConflictingIndexes, InvalidAnnotation,
                      InvalidSetOrListObject, InvalidTypedValue,
                      InvalidTypeValue, InvalidValueObject,
                      InvalidValueObjectValue)
+from .tordf import _as_list
 
 _ABS_IRI_RE = _re.compile(r"^[A-Za-z][A-Za-z0-9+.\-]*:")
 
@@ -191,7 +192,9 @@ def _expand_element(ctx: Context, active_key: str | None, element,
 
         if expanded_key == keys.TYPE:
             types = []
-            for t in _raw_array(value):
+            # the to-rdf walk's alias-aware @set unwrap: both engines
+            # accept and reject the same @type values
+            for t in _as_list(value, ctx):
                 if not isinstance(t, str):
                     # [spec] §5.1 step 13.4.4
                     raise InvalidTypeValue(repr(t))
@@ -764,8 +767,8 @@ def _raw_array(v) -> list:
     if isinstance(v, dict) and keys.SET in v:
         # sibling rule ([spec] step 14.2) applies to keyword-position
         # set objects too — KEYWORD siblings are never droppable, so
-        # they error even in this alias-blind helper (sweep 35:
-        # {"@type": {"@set": [], "@id": []}} silently dropped the @id)
+        # they error even in this alias-blind helper (sweep 35: an @id
+        # beside a keyword-position @set was silently dropped)
         bad = [k for k in v
                if k not in (keys.SET, keys.INDEX, keys.CONTEXT)
                and k in keys.KEYWORDS]

@@ -31,6 +31,8 @@ import re
 
 from pyspark.sql import DataFrame, functions as F
 
+from .expand import CORE_SCHEMA, QUAD_KEY_COLS
+
 XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
 
 
@@ -827,9 +829,5 @@ def instantiate_template(sols: DataFrame,
     if out is None:
         # every template triple was statically invalid (typed-literal
         # subject/predicate) — an empty quad table
-        return sols.sparkSession.createDataFrame(
-            [], schema="g string, s string, s_is_bnode boolean, "
-                       "p string, o_kind string, o_value string, "
-                       "o_datatype string, o_lang string")
-    return out.dropDuplicates(
-        ["g", "s", "p", "o_kind", "o_value", "o_datatype", "o_lang"])
+        return sols.sparkSession.createDataFrame([], schema=CORE_SCHEMA)
+    return out.dropDuplicates(QUAD_KEY_COLS)

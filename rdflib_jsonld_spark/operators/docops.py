@@ -30,7 +30,7 @@ from rdflib_jsonld_spark.jsonld.compare import isomorphic
 from rdflib_jsonld_spark.jsonld.expansion import expand
 from rdflib_jsonld_spark.jsonld.flatten import flatten
 from rdflib_jsonld_spark.jsonld.tordf import to_rdf
-from rdflib_jsonld_spark.operators.expand import extract_blocks
+from rdflib_jsonld_spark.operators.expand import extract_blocks, parse_block
 from rdflib_jsonld_spark.sources.registry import CONTEXT_V1_IRI, REGISTRY
 
 DOC_SCHEMA = T.StructType([
@@ -50,14 +50,6 @@ ROUNDTRIP_SCHEMA = T.StructType([
 ])
 
 
-def _parse_fast(block: str, ctx: Context):
-    """(parsed doc sans known context, resolved ctx) or (doc, None)."""
-    doc = json.loads(block)
-    if isinstance(doc, dict) and doc.get("@context") == CONTEXT_V1_IRI:
-        return {k: v for k, v in doc.items() if k != "@context"}, ctx
-    return doc, None
-
-
 def _doc_stage(transcripts: DataFrame, transform) -> DataFrame:
     pruned = transcripts.select("conv_id", "turn_idx", "text")
 
@@ -69,9 +61,7 @@ def _doc_stage(transcripts: DataFrame, transform) -> DataFrame:
                     pdf["conv_id"], pdf["turn_idx"], pdf["text"]):
                 for k, block in enumerate(extract_blocks(text)):
                     try:
-                        doc, fast_ctx = _parse_fast(block, ctx)
-                        nodes = transform(
-                            doc, fast_ctx if fast_ctx is not None else None)
+                        nodes = transform(*parse_block(block, ctx))
                     except Exception:
                         continue
                     out.append((conv_id, int(turn_idx), k, len(nodes),
@@ -150,7 +140,7 @@ def canonical_hash_stage(transcripts: DataFrame,
                     pdf["conv_id"], pdf["turn_idx"], pdf["text"]):
                 for k, block in enumerate(extract_blocks(text)):
                     try:
-                        doc, fast_ctx = _parse_fast(block, ctx)
+                        doc, fast_ctx = parse_block(block, ctx)
                         if prepare is not None:
                             doc = prepare(doc)
                         quads = to_rdf(doc, ctx=fast_ctx,
@@ -180,7 +170,7 @@ def compact_roundtrip_stage(transcripts: DataFrame) -> DataFrame:
                     pdf["conv_id"], pdf["turn_idx"], pdf["text"]):
                 for k, block in enumerate(extract_blocks(text)):
                     try:
-                        doc, fast_ctx = _parse_fast(block, ctx)
+                        doc, fast_ctx = parse_block(block, ctx)
                         direct = to_rdf(doc, ctx=fast_ctx, registry=REGISTRY)
                         expanded = expand(doc, ctx=fast_ctx,
                                           registry=REGISTRY)

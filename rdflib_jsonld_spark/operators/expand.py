@@ -18,6 +18,11 @@ Scale notes:
   counter, SURVEY.md §4.3.1 / D11).
 - Malformed JSON blocks are counted and dropped (B3 error path); counts
   surface via the `_kg_errors` column of `expand_with_metrics`.
+
+Term codec: :func:`quad_to_cells` / :func:`cells_to_quad` are the one
+pair that spells RDF terms as quad-table cells and reads them back;
+every reader (JSON-LD, Turtle, N-Quads star path) and every writer that
+goes through term tuples (Turtle sink, JSON-LD serializer) calls them.
 """
 
 from __future__ import annotations
@@ -31,7 +36,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from rdflib_jsonld_spark.jsonld.context import Context
-from rdflib_jsonld_spark.jsonld.tordf import BNODE, IRI, LIT, to_rdf
+from rdflib_jsonld_spark.jsonld.keys import XSD_STRING
+from rdflib_jsonld_spark.jsonld.nquads import parse_term
+from rdflib_jsonld_spark.jsonld.tordf import BNODE, IRI, LIT, QT, to_rdf
+from rdflib_jsonld_spark.operators.star import term_to_star
 from rdflib_jsonld_spark.sources.registry import CONTEXT_V1_IRI, REGISTRY
 
 QUAD_SCHEMA = T.StructType([
@@ -51,6 +59,57 @@ QUAD_COLS = [f.name for f in QUAD_SCHEMA.fields]
 #: The quad identity (graph set semantics, G4) excludes lineage columns.
 QUAD_KEY_COLS = ["g", "s", "p", "o_kind", "o_value", "o_datatype", "o_lang"]
 
+#: The eight core cells of a quad, without lineage (what readers emit).
+CORE_SCHEMA = T.StructType(QUAD_SCHEMA.fields[:8])
+
+_O_KIND = {BNODE: "bnode", QT: "triple"}
+
+
+def _cell(t: tuple) -> str:
+    """One non-literal term → its cell spelling: IRIs raw, bnodes
+    ``_:label``, quoted triples ``<< … >>`` (operators/star.py)."""
+    if t[0] == BNODE:
+        return "_:" + t[1]
+    if t[0] == QT:
+        return term_to_star(t)
+    return t[1]
+
+
+def quad_to_cells(q: tuple) -> tuple:
+    """Term quad → the eight core cells ``(g, s, s_is_bnode, p, o_kind,
+    o_value, o_datatype, o_lang)``. With :func:`cells_to_quad` this is
+    the one place the quad table's term spelling is decided; callers
+    append their own lineage columns."""
+    g, s, p, o = q
+    if o[0] == LIT:
+        obj = ("literal", o[1], o[2], o[3])
+    else:
+        obj = (_O_KIND.get(o[0], "iri"), _cell(o), None, None)
+    return (None if g is None else _cell(g), _cell(s), s[0] == BNODE,
+            _cell(p)) + obj
+
+
+def _term(v: str) -> tuple:
+    if v.startswith("<<"):
+        return parse_term(v, decode=False)[0]
+    if v.startswith("_:"):
+        return (BNODE, v[2:])
+    return (IRI, v)
+
+
+def cells_to_quad(g, s, p, o_kind, o_value, o_datatype, o_lang) -> tuple:
+    """Inverse of :func:`quad_to_cells` (``s_is_bnode`` is implied by the
+    ``_:`` spelling). A NULL literal datatype reads as xsd:string. Quoted
+    spellings parse with the N-Quads term reader, so their bnode labels
+    must avoid whitespace and ``< " >`` and not end in '.', and their
+    language tags come back lowercased."""
+    if o_kind == "literal":
+        o = (LIT, o_value, o_datatype or XSD_STRING, o_lang)
+    else:
+        o = _term(o_value)
+    return (_term(g) if isinstance(g, str) else None, _term(s), _term(p), o)
+
+
 _FENCE_RE = re.compile(r"```ld\n(.*?)\n```", re.DOTALL)
 
 
@@ -59,59 +118,47 @@ def extract_blocks(text: str) -> list[str]:
     return _FENCE_RE.findall(text)
 
 
-def _term_cols(t: tuple) -> tuple[str, bool]:
-    """term → (string form, is_bnode). Bnodes keep the '_:' prefix;
-    quoted triples (JSON-LD-star @annotation / embedded @id) take the
-    canonical '<< … >>' table spelling (operators/star.py)."""
-    if t[0] == BNODE:
-        return "_:" + t[1], True
-    if t[0] == "qt":
-        from rdflib_jsonld_spark.operators.star import term_to_star
-        return term_to_star(t), False
-    return t[1], False
+def parse_block(block: str, ctx: Context):
+    """One block → (parsed doc, ``ctx``) when it names the v1 context
+    (dropped from the doc: the broadcast-resolved fast path), else
+    (doc, None). Raises what ``json.loads`` raises."""
+    doc = json.loads(block)
+    if isinstance(doc, dict) and doc.get("@context") == CONTEXT_V1_IRI:
+        return {k: v for k, v in doc.items() if k != "@context"}, ctx
+    return doc, None
+
+
+def turn_quads(conv_id: str, turn_idx: int, text: str, ctx: Context,
+               registry: dict | None = None) -> tuple[list[tuple], int]:
+    """Pure per-turn to-rdf: (term quads of every block, n_parse_errors).
+    Block ``k`` salts its blank nodes with ``{conv_id}/{turn_idx}/{k}#``,
+    so nodes of different blocks never merge."""
+    reg = registry if registry is not None else REGISTRY
+    quads: list[tuple] = []
+    errors = 0
+    for k, block in enumerate(extract_blocks(text)):
+        try:
+            doc, local_ctx = parse_block(block, ctx)
+        except (ValueError, RecursionError):
+            # RecursionError: maliciously deep JSON must count as a parse
+            # error, not kill the executor task (one bad doc ≠ dead job)
+            errors += 1
+            continue
+        try:
+            quads.extend(to_rdf(doc, ctx=local_ctx, registry=reg,
+                                bnode_prefix=f"{conv_id}/{turn_idx}/{k}#"))
+        except Exception:
+            errors += 1
+    return quads, errors
 
 
 def quads_for_turn(conv_id: str, turn_idx: int, text: str,
                    ctx: Context,
                    registry: dict | None = None) -> tuple[list[tuple], int]:
     """Pure per-turn worker: returns (quad rows, n_parse_errors)."""
-    reg = registry if registry is not None else REGISTRY
-    rows: list[tuple] = []
-    errors = 0
-    for k, block in enumerate(extract_blocks(text)):
-        try:
-            doc = json.loads(block)
-        except (ValueError, RecursionError):
-            # RecursionError: maliciously deep JSON must count as a parse
-            # error, not kill the executor task (one bad doc ≠ dead job)
-            errors += 1
-            continue
-        if isinstance(doc, dict) and doc.get("@context") == CONTEXT_V1_IRI:
-            doc = {key: v for key, v in doc.items() if key != "@context"}
-            local_ctx = ctx  # broadcast-resolved fast path
-        else:
-            local_ctx = None
-        try:
-            quads = to_rdf(doc, ctx=local_ctx, registry=reg,
-                           bnode_prefix=f"{conv_id}/{turn_idx}/{k}#")
-        except Exception:
-            errors += 1
-            continue
-        for g, s, p, o in quads:
-            g_str = _term_cols(g)[0] if g is not None else None
-            s_str, s_bn = _term_cols(s)
-            p_str, _ = _term_cols(p)
-            if o[0] == LIT:
-                _, lex, dt, lang = o
-                rows.append((g_str, s_str, s_bn, p_str, "literal", lex,
-                             dt, lang, conv_id, turn_idx))
-            else:
-                o_str, o_bn = _term_cols(o)
-                o_kind = "bnode" if o_bn else (
-                    "triple" if o[0] == "qt" else "iri")
-                rows.append((g_str, s_str, s_bn, p_str, o_kind, o_str,
-                             None, None, conv_id, turn_idx))
-    return rows, errors
+    quads, errors = turn_quads(conv_id, turn_idx, text, ctx, registry)
+    lineage = (conv_id, turn_idx)
+    return [quad_to_cells(q) + lineage for q in quads], errors
 
 
 METRICS_SCHEMA = T.StructType(QUAD_SCHEMA.fields + [

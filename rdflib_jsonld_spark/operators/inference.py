@@ -38,7 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .linking import transitive_closure
-from .update import QUAD_KEY, _anti_on_key, _conform
+from .expand import QUAD_KEY_COLS
+from .update import _anti_on_key, _conform
 
 RDFS = "http://www.w3.org/2000/01/rdf-schema#"
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
@@ -147,7 +148,7 @@ def rdfs_closure(quads: DataFrame, max_iter: int = 20,
     new = inferred[0]
     for part in inferred[1:]:
         new = new.unionByName(part)
-    new = new.dropDuplicates(QUAD_KEY)
+    new = new.dropDuplicates(QUAD_KEY_COLS)
     fresh = _anti_on_key(_conform(new, quads), quads)
     return quads.unionByName(fresh)
 
@@ -283,7 +284,7 @@ def owl_property_closure(quads: DataFrame, max_iter: int = 20
     new = inferred[0]
     for part in inferred[1:]:
         new = new.unionByName(part)
-    new = new.dropDuplicates(QUAD_KEY)
+    new = new.dropDuplicates(QUAD_KEY_COLS)
     fresh = _anti_on_key(_conform(new, quads), quads)
     return quads.unionByName(fresh)
 

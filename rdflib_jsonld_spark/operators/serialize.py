@@ -19,9 +19,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from rdflib_jsonld_spark.jsonld import keys
 from rdflib_jsonld_spark.jsonld.fromrdf import from_rdf
-from rdflib_jsonld_spark.jsonld.tordf import BNODE, IRI, LIT
+from rdflib_jsonld_spark.operators.expand import QUAD_KEY_COLS, cells_to_quad
 
 DOC_SCHEMA = T.StructType([
     T.StructField("conv_id", T.StringType(), False),
@@ -32,27 +31,10 @@ DOC_SCHEMA = T.StructType([
 
 
 def row_to_quad(r) -> tuple:
-    """Quad-table row → term-tuple quad (inverse of expand._term_cols)."""
-    def node(val: str):
-        if val.startswith("_:"):
-            return (BNODE, val[2:])
-        return (IRI, val)
-
-    g = node(r.g) if r.g is not None else None
-    s = node(r.s)
-    p = node(r.p)
-    if r.o_kind == "literal":
-        o = (LIT, r.o_value, r.o_datatype or keys.XSD_STRING, r.o_lang)
-    else:
-        o = node(r.o_value)
-    return (g, s, p, o)
-
-
-def quads_pdf_to_tuples(pdf: pd.DataFrame) -> list[tuple]:
-    out = []
-    for r in pdf.itertuples(index=False):
-        out.append(row_to_quad(r))
-    return out
+    """Quad-table row → term-tuple quad: :func:`expand.cells_to_quad`
+    over the row's seven quad-identity cells."""
+    return cells_to_quad(r.g, r.s, r.p, r.o_kind, r.o_value, r.o_datatype,
+                         r.o_lang)
 
 
 def serialize_documents(quads: DataFrame, context_data=None,
@@ -72,7 +54,7 @@ def serialize_documents(quads: DataFrame, context_data=None,
 
     def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
         conv_id, turn_idx = key
-        tuples = quads_pdf_to_tuples(pdf)
+        tuples = list(map(cells_to_quad, *(pdf[c] for c in QUAD_KEY_COLS)))
         tree = from_rdf(tuples, context_data=context_data,
                         use_native_types=use_native_types,
                         use_rdf_type=use_rdf_type, auto_compact=auto_compact,

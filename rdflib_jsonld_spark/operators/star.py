@@ -20,12 +20,15 @@ A quoted term occupies one STRING cell in its canonical flat spelling
 Component spellings match the table's own column conventions (bnodes
 ``_:label`` raw, literal lexicals unescaped on extraction), so a
 decomposed component equi-joins the plain ``s``/``o_value`` columns
-directly. The encoding is produced by :func:`term_to_star` (pure, used
-by the Turtle/N-Quads IO bridges) and decomposed by
-:func:`with_quoted_components` — one JVM ``regexp_extract`` projection,
-no Python in the row path. One level of nesting is decomposable per
-call (apply again to go deeper); arbitrarily nested spellings still
-round-trip as opaque strings.
+directly. The quad-table term codec (operators/expand.py
+``quad_to_cells`` / ``cells_to_quad``) is the one producer and consumer
+of cell spellings on the Python side: every reader and term-tuple
+writer goes through it, and it spells quoted terms with
+:func:`term_to_star` and reads them back with the N-Quads term parser.
+On the JVM side :func:`with_quoted_components` decomposes the spelling
+— one ``regexp_extract`` projection, no Python in the row path. One
+level of nesting is decomposable per call (apply again to go deeper);
+arbitrarily nested spellings still round-trip as opaque strings.
 
 ``match_quoted(quads, inner, pred, annot_var)`` is the SPARQL-star BGP
 primitive: rows whose SUBJECT is a quoted triple matching the

@@ -4,9 +4,10 @@
 operations and returns a NEW quad DataFrame (the next snapshot of the
 store). Nothing mutates: each operation is pure set algebra over the
 input — a deletion is a null-safe anti-join on the quad identity key,
-an insertion is an anti-joined union — so the whole sequence stays one
-lazy Catalyst plan that AQE sizes at runtime, and at warehouse scale
-the result is simply what gets written back as the next table version.
+an insertion is an anti-joined union — each op a Catalyst plan that
+AQE sizes at runtime, its result checkpointed before the next op reads
+it (see :func:`update`), and at warehouse scale the result is simply
+what gets written back as the next table version.
 
 Supported operations (SPARQL 1.1 Update §3.1, ``[spec]``
 https://www.w3.org/TR/sparql11-update/):
@@ -55,17 +56,11 @@ from functools import reduce
 from pyspark.sql import DataFrame, functions as F
 
 from .bgp import instantiate_template
+from .expand import CORE_SCHEMA, QUAD_KEY_COLS
 from .sparql import (Group, SparqlError, XSD, _canon_number, _eval_group,
                      _Parser)
 
-#: Quad identity — graph set semantics; lineage columns excluded.
-QUAD_KEY = ["g", "s", "p", "o_kind", "o_value", "o_datatype", "o_lang"]
-
 _RDF_LANGSTRING = "http://www.w3.org/1999/02/22-rdf-syntax-ns#langString"
-
-_CORE_SCHEMA = ("g string, s string, s_is_bnode boolean, p string, "
-                "o_kind string, o_value string, o_datatype string, "
-                "o_lang string")
 
 
 # ---------------------------------------------------------------------------
@@ -412,10 +407,10 @@ def _anti_on_key(base: DataFrame, other: DataFrame) -> DataFrame:
     (still a hash join), right side deduped and renamed so the anti
     never self-references."""
     d = other.select(
-        *[F.col(c).alias(f"__u_{c}") for c in QUAD_KEY]).dropDuplicates()
+        *[F.col(c).alias(f"__u_{c}") for c in QUAD_KEY_COLS]).dropDuplicates()
     cond = reduce(lambda a, b: a & b,
                   [_key_col(base, c).eqNullSafe(
-                      _key_col(d, f"__u_{c}")) for c in QUAD_KEY])
+                      _key_col(d, f"__u_{c}")) for c in QUAD_KEY_COLS])
     return base.join(d, cond, "left_anti")
 
 
@@ -440,43 +435,37 @@ def _instantiate_quads(sols: DataFrame, tmpl: list[tuple],
                                     graph=term if term is not None
                                     else with_g)
         out = part if out is None else out.unionByName(part)
-    return out.dropDuplicates(QUAD_KEY)
+    return out.dropDuplicates(QUAD_KEY_COLS)
 
 
 def update(quads: DataFrame, text: str, *, max_iter: int = 20,
-           stats: dict | None = None,
-           materialize: str = "checkpoint") -> DataFrame:
+           stats: dict | None = None) -> DataFrame:
     """Apply a SPARQL Update request to a quad table, returning the new
     quad table (input columns preserved; inserted rows carry NULL in
     non-quad columns). Operations in a ``;``-sequence apply in order,
     each over the previous result.
 
-    ``materialize`` controls how each op's result store is handed to
-    the next op: ``checkpoint`` (default; eager localCheckpoint per
-    mutating op, previous checkpoint unpersisted once its successor is
-    materialized), ``persist`` (lazy cache per op), ``none`` (one pure
-    lazy plan). Each mutating op references its input store 2-5 times
-    (WHERE eval + delete anti-join + insert anti-join + union), so a
-    lazy ;-sequence duplicates each op's subtree multiplicatively —
-    measured 7.4s lazy vs 4.0s checkpointed for the 3-op bench rewrite
-    at sf0.1 warm (r04 A/B, 3 reps). At cluster scale this trades one
-    full-store materialization per op (spillable, executor-local)
-    against O(ops²) redundant anti-join subtree evals; CLEAR and empty
-    sequences stay lazy filters either way."""
+    Each mutating op's result store is eagerly ``localCheckpoint``-ed
+    before the next op reads it (the previous checkpoint is unpersisted
+    once its successor is materialized). Each mutating op references
+    its input store 2-5 times (WHERE eval + delete anti-join + insert
+    anti-join + union), so a lazy ;-sequence duplicates each op's
+    subtree multiplicatively — measured 7.4s lazy vs 4.0s checkpointed
+    for the 3-op bench rewrite at sf0.1 warm (r04 A/B, 3 reps), and the
+    lazy plans exceeded Janino codegen limits in the update fuzzer. At
+    cluster scale this trades one full-store materialization per op
+    (spillable, executor-local) against O(ops²) redundant anti-join
+    subtree evals; CLEAR and empty sequences stay lazy filters."""
     spark = quads.sparkSession
     cur = quads
     ckpts: list[DataFrame] = []
 
     def _materialize(df: DataFrame) -> DataFrame:
-        if materialize == "persist":
-            return df.persist()
-        if materialize == "checkpoint":
-            out = df.localCheckpoint(eager=True)
-            while ckpts:
-                ckpts.pop().unpersist()
-            ckpts.append(out)
-            return out
-        return df
+        out = df.localCheckpoint(eager=True)
+        while ckpts:
+            ckpts.pop().unpersist()
+        ckpts.append(out)
+        return out
 
     for op in _UpdateParser(text).parse_update():
         kind = op[0]
@@ -537,7 +526,7 @@ def update(quads: DataFrame, text: str, *, max_iter: int = 20,
             rows = spark.createDataFrame(
                 [(g, s, s.startswith("_:"), p, k, v, dt, lang)
                  for g, s, p, k, v, dt, lang in op[1]],
-                schema=_CORE_SCHEMA)
+                schema=CORE_SCHEMA)
             if kind == "insert_data":
                 fresh = _anti_on_key(_conform(rows, cur), cur)
                 cur = _materialize(cur.unionByName(fresh))

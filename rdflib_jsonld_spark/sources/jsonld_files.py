@@ -26,30 +26,17 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from rdflib_jsonld_spark.jsonld.context import Context
-from rdflib_jsonld_spark.jsonld.tordf import BNODE, LIT, to_rdf
-from rdflib_jsonld_spark.operators.expand import QUAD_SCHEMA
+from rdflib_jsonld_spark.jsonld.tordf import to_rdf
+from rdflib_jsonld_spark.operators.expand import (QUAD_COLS, QUAD_SCHEMA,
+                                                 quad_to_cells)
 from rdflib_jsonld_spark.sources.registry import REGISTRY
 
 
-def _doc_rows(doc, doc_key: str, base, registry, ctx) -> list[tuple]:
-    quads = to_rdf(doc, base=base, registry=registry, ctx=ctx,
-                   bnode_prefix=f"{doc_key}#")
-    rows = []
-    for g, s, p, o in quads:
-        g_str = (("_:" + g[1]) if g[0] == BNODE else g[1]) \
-            if g is not None else None
-        s_str = ("_:" + s[1]) if s[0] == BNODE else s[1]
-        p_str = ("_:" + p[1]) if p[0] == BNODE else p[1]
-        if o[0] == LIT:
-            rows.append((g_str, s_str, s[0] == BNODE, p_str, "literal",
-                         o[1], o[2], o[3], doc_key, 0))
-        else:
-            o_str = ("_:" + o[1]) if o[0] == BNODE else o[1]
-            rows.append((g_str, s_str, s[0] == BNODE, p_str,
-                         "bnode" if o[0] == BNODE else "iri",
-                         o_str, None, None, doc_key, 0))
-    return rows
+def _rows(value: str, key: str, base: str, registry) -> list[tuple]:
+    """One document's text → quad rows, bnodes salted with ``key``."""
+    quads = to_rdf(json.loads(value), base=base, registry=registry,
+                   bnode_prefix=f"{key}#")
+    return [quad_to_cells(q) + (key, 0) for q in quads]
 
 
 def read_jsonld_lines(spark: SparkSession, path: str,
@@ -71,7 +58,6 @@ def read_jsonld_lines(spark: SparkSession, path: str,
                      "value"))
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in QUAD_SCHEMA.fields]
         for pdf in batches:
             out: list[tuple] = []
             for src, line_id, value in zip(pdf["src"], pdf["line_id"],
@@ -79,13 +65,12 @@ def read_jsonld_lines(spark: SparkSession, path: str,
                 if not value.strip():
                     continue
                 try:
-                    doc = json.loads(value)
-                    key = f"{src}/{line_id}"
-                    out.extend(_doc_rows(doc, key, base or src, reg, None))
+                    out.extend(_rows(value, f"{src}/{line_id}",
+                                     base or src, reg))
                 except (ValueError, RecursionError):
                     continue  # malformed/hostile doc ≠ dead task
             if out:
-                yield pd.DataFrame(out, columns=cols)
+                yield pd.DataFrame(out, columns=QUAD_COLS)
 
     return lines.mapInPandas(parse, schema=QUAD_SCHEMA)
 
@@ -100,16 +85,14 @@ def read_jsonld_files(spark: SparkSession, path: str,
              .select(F.input_file_name().alias("src"), "value"))
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in QUAD_SCHEMA.fields]
         for pdf in batches:
             out: list[tuple] = []
             for src, value in zip(pdf["src"], pdf["value"]):
                 try:
-                    doc = json.loads(value)
-                    out.extend(_doc_rows(doc, src, base or src, reg, None))
+                    out.extend(_rows(value, src, base or src, reg))
                 except (ValueError, RecursionError):
                     continue  # malformed/hostile doc ≠ dead task
             if out:
-                yield pd.DataFrame(out, columns=cols)
+                yield pd.DataFrame(out, columns=QUAD_COLS)
 
     return files.mapInPandas(parse, schema=QUAD_SCHEMA)

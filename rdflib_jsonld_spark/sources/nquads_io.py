@@ -26,20 +26,10 @@ from typing import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from rdflib_jsonld_spark.jsonld import keys
-
-NQ_READ_SCHEMA = T.StructType([
-    T.StructField("g", T.StringType(), True),
-    T.StructField("s", T.StringType(), False),
-    T.StructField("s_is_bnode", T.BooleanType(), False),
-    T.StructField("p", T.StringType(), False),
-    T.StructField("o_kind", T.StringType(), False),
-    T.StructField("o_value", T.StringType(), False),
-    T.StructField("o_datatype", T.StringType(), True),
-    T.StructField("o_lang", T.StringType(), True),
-])
+from rdflib_jsonld_spark.operators.expand import CORE_SCHEMA, quad_to_cells
 
 
 def _escape_col(c):
@@ -208,14 +198,13 @@ def parse_nquads_lines(lines: DataFrame,
     import re as _re
     from rdflib_jsonld_spark.jsonld.nquads import (_unescape, decode_label,
                                                    parse_line)
-    from rdflib_jsonld_spark.operators.star import term_to_star
 
     def _star_rows(values) -> list[tuple]:
         # RDF-star slow path: lines containing '<<' go through the pure
-        # recursive parser; quoted terms land in their canonical table
-        # spelling (star.py), plain terms exactly as the fast path spells
-        # them. Raises on malformed lines like the pure parser; in
-        # permissive mode they are skipped.
+        # recursive parser and the quad-table term codec (quoted terms
+        # in their canonical star.py spelling, plain terms exactly as
+        # the fast path spells them). Raises on malformed lines like the
+        # pure parser; in permissive mode they are skipped.
         # decode passes through to parse_term so the slow path honours
         # decode_labels exactly like the fast path's _decode_bn (ADVICE
         # r04 high: one foreign '_:_eb0' otherwise split into two terms
@@ -228,26 +217,8 @@ def parse_nquads_lines(lines: DataFrame,
                 if strict:
                     raise
                 continue
-            if q is None:
-                continue
-            g, s, pp, o = q
-
-            def node(t):
-                if t[0] == "qt":
-                    return term_to_star(t)
-                return ("_:" + t[1]) if t[0] == "bnode" else t[1]
-
-            g_str = node(g) if g is not None else None
-            if o[0] == "lit":
-                rows.append((g_str, node(s), s[0] == "bnode", node(pp),
-                             "literal", o[1], o[2], o[3]))
-            elif o[0] == "qt":
-                rows.append((g_str, node(s), False, node(pp),
-                             "triple", term_to_star(o), None, None))
-            else:
-                rows.append((g_str, node(s), s[0] == "bnode", node(pp),
-                             "bnode" if o[0] == "bnode" else "iri",
-                             node(o), None, None))
+            if q is not None:
+                rows.append(quad_to_cells(q))
         return rows
 
     unesc_mark = _re.compile(r"\\")
@@ -274,7 +245,7 @@ def parse_nquads_lines(lines: DataFrame,
         return series
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in NQ_READ_SCHEMA.fields]
+        cols = CORE_SCHEMA.fieldNames()
         for pdf in batches:
             v = pdf["value"]
             star = v.str.contains("<<", regex=False)
@@ -336,4 +307,4 @@ def parse_nquads_lines(lines: DataFrame,
                 out = pd.concat([out, star_out], ignore_index=True)
             yield out
 
-    return lines.mapInPandas(parse, schema=NQ_READ_SCHEMA)
+    return lines.mapInPandas(parse, schema=CORE_SCHEMA)

@@ -31,46 +31,14 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from rdflib_jsonld_spark.jsonld import turtle as ttl
-from rdflib_jsonld_spark.jsonld.tordf import BNODE, IRI, LIT
+from rdflib_jsonld_spark.operators.expand import (
+    CORE_SCHEMA, QUAD_KEY_COLS, cells_to_quad, quad_to_cells)
 
-TURTLE_READ_SCHEMA = T.StructType([
-    T.StructField("g", T.StringType(), True),
-    T.StructField("s", T.StringType(), False),
-    T.StructField("s_is_bnode", T.BooleanType(), False),
-    T.StructField("p", T.StringType(), False),
-    T.StructField("o_kind", T.StringType(), False),
-    T.StructField("o_value", T.StringType(), False),
-    T.StructField("o_datatype", T.StringType(), True),
-    T.StructField("o_lang", T.StringType(), True),
-    T.StructField("src", T.StringType(), False),
-])
+TURTLE_READ_SCHEMA = T.StructType(
+    CORE_SCHEMA.fields + [T.StructField("src", T.StringType(), False)])
+_READ_COLS = TURTLE_READ_SCHEMA.fieldNames()
 
 _TEXT_SCHEMA = T.StructType([T.StructField("value", T.StringType(), False)])
-
-
-def _term_str(t: tuple) -> str:
-    if t[0] == "qt":
-        # RDF-star quoted term → canonical table spelling (star.py)
-        from rdflib_jsonld_spark.operators.star import term_to_star
-        return term_to_star(t)
-    return ("_:" + t[1]) if t[0] == BNODE else t[1]
-
-
-def _quad_rows(quads: list, src: str) -> list[tuple]:
-    rows = []
-    for g, s, p, o in quads:
-        g_str = _term_str(g) if g is not None else None
-        if o[0] == LIT:
-            rows.append((g_str, _term_str(s), s[0] == BNODE, _term_str(p),
-                         "literal", o[1], o[2], o[3], src))
-        elif o[0] == "qt":
-            rows.append((g_str, _term_str(s), s[0] == BNODE, _term_str(p),
-                         "triple", _term_str(o), None, None, src))
-        else:
-            rows.append((g_str, _term_str(s), s[0] == BNODE, _term_str(p),
-                         "bnode" if o[0] == BNODE else "iri",
-                         _term_str(o), None, None, src))
-    return rows
 
 
 def read_turtle(spark: SparkSession, path: str,
@@ -86,7 +54,6 @@ def read_turtle(spark: SparkSession, path: str,
              .select(F.input_file_name().alias("src"), "value"))
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in TURTLE_READ_SCHEMA.fields]
         for pdf in batches:
             out: list[tuple] = []
             for src, value in zip(pdf["src"], pdf["value"]):
@@ -95,23 +62,11 @@ def read_turtle(spark: SparkSession, path: str,
                                       bnode_prefix=f"{src}#")
                 except (ttl.TurtleParseError, RecursionError):
                     continue
-                out.extend(_quad_rows(quads, src))
+                out.extend(quad_to_cells(q) + (src,) for q in quads)
             if out:
-                yield pd.DataFrame(out, columns=cols)
+                yield pd.DataFrame(out, columns=_READ_COLS)
 
     return files.mapInPandas(parse, schema=TURTLE_READ_SCHEMA)
-
-
-def _row_to_quad(g, s, p, o_kind, o_value, o_datatype, o_lang) -> tuple:
-    def term(v):
-        return (BNODE, v[2:]) if v.startswith("_:") else (IRI, v)
-
-    if o_kind == "literal":
-        o = (LIT, o_value, o_datatype, o_lang)
-    else:
-        o = term(o_value)
-    return (term(g) if g is not None and not pd.isna(g) else None,
-            term(s), term(p), o)
 
 
 def turtle_part_documents(quads: DataFrame,
@@ -123,19 +78,19 @@ def turtle_part_documents(quads: DataFrame,
     rows raise inside the task, surfacing a real modeling error instead
     of silently dropping graphs).
     """
-    cols = ["g", "s", "p", "o_kind", "o_value", "o_datatype", "o_lang"]
     ser = ttl.serialize_trig if trig else ttl.serialize
     pfx = dict(prefixes) if prefixes is not None else None
 
     def to_doc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         tuples: list[tuple] = []
         for pdf in batches:
-            for row in zip(*(pdf[c] for c in cols)):
-                tuples.append(_row_to_quad(*row))
+            tuples.extend(map(cells_to_quad,
+                              *(pdf[c] for c in QUAD_KEY_COLS)))
         if tuples:
             yield pd.DataFrame({"value": [ser(tuples, pfx)]})
 
-    return quads.select(*cols).mapInPandas(to_doc, schema=_TEXT_SCHEMA)
+    return quads.select(*QUAD_KEY_COLS).mapInPandas(to_doc,
+                                                    schema=_TEXT_SCHEMA)
 
 
 def write_turtle(quads: DataFrame, path: str,
@@ -156,14 +111,13 @@ def parse_turtle_documents(docs: DataFrame, base: str | None = None,
     same contract the N-Quads pair keeps — sources/nquads_io.py)."""
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in TURTLE_READ_SCHEMA.fields]
         for pdf in batches:
             out: list[tuple] = []
             for i, value in enumerate(pdf["value"]):
                 quads = ttl.parse(value, base=base,
                                   bnode_prefix=bnode_prefix)
-                out.extend(_quad_rows(quads, f"doc/{i}"))
+                out.extend(quad_to_cells(q) + (f"doc/{i}",) for q in quads)
             if out:
-                yield pd.DataFrame(out, columns=cols)
+                yield pd.DataFrame(out, columns=_READ_COLS)
 
     return docs.mapInPandas(parse, schema=TURTLE_READ_SCHEMA)

@@ -68,18 +68,18 @@ def deduplicate_content(stream: DataFrame, text_col: str = "text",
 def with_canonical_graph_hash(transcripts: DataFrame) -> DataFrame:
     """Annotate each turn with the RDFC-1.0 canonical sha256 of the
     dataset formed by ALL its fenced blocks (jsonld/canonicalize.py) —
-    NULL when no block parses. Narrow Arrow pass; works identically on
-    batch and streaming DataFrames."""
+    NULL when no block parses. The blocks expand exactly as in the batch
+    stage (:func:`operators.expand.turn_quads`: one blank-node salt per
+    block, so two blocks' anonymous nodes never merge). Narrow Arrow
+    pass; works identically on batch and streaming DataFrames."""
     import pandas as pd
     from pyspark.sql import types as T
 
     from rdflib_jsonld_spark.jsonld.canonicalize import canonical_hash
     from rdflib_jsonld_spark.jsonld.context import Context
-    from rdflib_jsonld_spark.jsonld.tordf import to_rdf
-    from rdflib_jsonld_spark.operators.expand import extract_blocks
+    from rdflib_jsonld_spark.operators.expand import turn_quads
     from rdflib_jsonld_spark.sources.registry import (CONTEXT_V1_IRI,
                                                       REGISTRY)
-    import json
 
     schema = T.StructType(list(transcripts.schema.fields)
                           + [T.StructField("canon_hash", T.StringType(),
@@ -89,21 +89,9 @@ def with_canonical_graph_hash(transcripts: DataFrame) -> DataFrame:
         ctx = Context(registry=REGISTRY).load(CONTEXT_V1_IRI)
         for pdf in batches:
             hashes = []
-            for text in pdf["text"]:
-                quads: list = []
-                for block in extract_blocks(text):
-                    try:
-                        doc = json.loads(block)
-                        if isinstance(doc, dict) \
-                                and doc.get("@context") == CONTEXT_V1_IRI:
-                            doc = {k: v for k, v in doc.items()
-                                   if k != "@context"}
-                            quads.extend(to_rdf(doc, ctx=ctx,
-                                                registry=REGISTRY))
-                        else:
-                            quads.extend(to_rdf(doc, registry=REGISTRY))
-                    except Exception:
-                        continue
+            for conv_id, turn_idx, text in zip(
+                    pdf["conv_id"], pdf["turn_idx"], pdf["text"]):
+                quads, _ = turn_quads(conv_id, turn_idx, text, ctx)
                 hashes.append(canonical_hash(quads) if quads else None)
             pdf = pdf.copy()
             pdf["canon_hash"] = pd.Series(hashes, index=pdf.index,

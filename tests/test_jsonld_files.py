@@ -21,7 +21,11 @@ DOCS = [
      "ex:children": {"@list": [{"@id": "ex:c1"}, {"@id": "ex:c2"}]}},
     {"@context": {"ex": "http://e/"},
      "@id": "ex:g", "@graph": [{"@id": "ex:b", "ex:q": 5}]},
+    # JSON-LD-star: the annotation's subject is a quoted triple
+    {"@context": {"ex": "http://e/"}, "@id": "ex:s",
+     "ex:knows": {"@id": "ex:o", "@annotation": {"ex:w": 2}}},
 ]
+QUOTED = "<< <http://e/s> <http://e/knows> <http://e/o> >>"
 
 
 def _write_jsonl(tmp_path, docs):
@@ -43,6 +47,8 @@ def test_jsonl_source_matches_pure_core(spark, tmp_path):
     assert any(r["o_lang"] == "en" for r in rows)
     assert sum(1 for r in rows
                if r["p"].endswith("22-rdf-syntax-ns#first")) == 2
+    assert [(r["s"], r["s_is_bnode"], r["o_value"]) for r in rows
+            if r["p"] == "http://e/w"] == [(QUOTED, False, "2")]
 
 
 def test_jsonl_source_skips_malformed_and_blank(spark, tmp_path):
@@ -71,6 +77,7 @@ def test_wholefile_source(spark, tmp_path):
     nb = [r for r in b if not any(isinstance(v, str) and v.startswith("_:")
                                   for v in r)]
     assert na == nb and len(a) == len(b)
+    assert sum(1 for r in a if r[1] == QUOTED) == 1
 
 
 def test_lineage_carries_source(spark, tmp_path):

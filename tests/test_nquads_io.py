@@ -348,25 +348,13 @@ def test_document_star_quads_roundtrip_distributed(spark, tmp_path):
     quotes) survive the distributed sink/source round trip with labels
     consistently sentinel-encoded at every nesting depth."""
     from rdflib_jsonld_spark.jsonld import to_rdf
-    from rdflib_jsonld_spark.jsonld.tordf import BNODE, LIT
-    from rdflib_jsonld_spark.operators.expand import _term_cols
+    from rdflib_jsonld_spark.operators.expand import quad_to_cells
     EX = "http://ex/"
     doc = {"@context": {"ex": EX}, "@id": "ex:a",
            "ex:p": {"@id": "_:inner/salt#1",
                     "@annotation": {"ex:src": {"@id": "ex:doc",
                         "@annotation": {"ex:note": 'two words "q" <<'}}}}}
-    rows = []
-    for g, s, p, o in to_rdf(doc):
-        s_str, s_bn = _term_cols(s)
-        if o[0] == LIT:
-            rows.append((None, s_str, s_bn, p[1], "literal",
-                         o[1], o[2], o[3]))
-        else:
-            o_str, o_bn = _term_cols(o)
-            kind = "bnode" if o[0] == BNODE else (
-                "triple" if o[0] == "qt" else "iri")
-            rows.append((None, s_str, s_bn, p[1], kind, o_str,
-                         None, None))
+    rows = [quad_to_cells(q) for q in to_rdf(doc)]
     df = spark.createDataFrame(
         rows, "g string, s string, s_is_bnode boolean, p string, "
               "o_kind string, o_value string, o_datatype string, "

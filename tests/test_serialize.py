@@ -101,14 +101,27 @@ def test_auto_compact_derives_prefixes():
 
 def test_spark_serialize_roundtrip(spark):
     """Distributed round-trip: expand N convs, serialize per document,
-    re-expand each emitted JSON-LD doc, compare quad multisets."""
-    df = tr.transcripts_df(spark, n_convs=20, seed=42, partitions=4)
+    re-expand each emitted JSON-LD doc, compare quad multisets. One extra
+    turn carries JSON-LD-star annotations (quoted-triple subjects, one
+    nested): its document must be isomorphic to the source block's."""
+    import datetime
+    star_doc = {"@context": {"ex": EX}, "@id": "ex:a",
+                "ex:knows": {"@id": "ex:b", "@annotation": {
+                    "ex:w": 0.5, "ex:src": {"@id": "_:d", "@annotation": {
+                        "ex:page": 3}}}}}
+    star_turn = spark.createDataFrame(
+        [("star", 0, "assistant", f"```ld\n{json.dumps(star_doc)}\n```",
+          None, datetime.datetime(2024, 1, 1))], tr.TRANSCRIPT_SCHEMA)
+    df = tr.transcripts_df(spark, n_convs=20, seed=42, partitions=4) \
+        .unionByName(star_turn)
     quads = expand_transcripts(df).cache()
     docs = serialize_documents(quads).collect()
     assert len(docs) > 0
-    originals = {}
+    originals = {("star", 0): to_rdf(star_doc)}
     for r in quads.collect():
-        originals.setdefault((r.conv_id, r.turn_idx), []).append(row_to_quad(r))
+        if r.conv_id != "star":
+            originals.setdefault((r.conv_id, r.turn_idx), []).append(
+                row_to_quad(r))
     assert set(originals) == {(d.conv_id, d.turn_idx) for d in docs}
     for d in docs:
         tree = json.loads(d.jsonld)

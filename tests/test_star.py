@@ -12,7 +12,7 @@ tagged literals, inner variables joining plain patterns).
 import pytest
 
 from rdflib_jsonld_spark.jsonld.nquads import QT, parse_line, quad_to_nq
-from rdflib_jsonld_spark.jsonld.tordf import BNODE, IRI, LIT
+from rdflib_jsonld_spark.jsonld.tordf import IRI, LIT
 from rdflib_jsonld_spark.jsonld.turtle import parse as parse_ttl
 from rdflib_jsonld_spark.jsonld.turtle import serialize as ser_ttl
 
@@ -145,8 +145,7 @@ def test_sparql_star_object_position_and_join(star_quads):
 
 def _star_doc_quads(spark):
     from rdflib_jsonld_spark.jsonld import to_rdf
-    from rdflib_jsonld_spark.jsonld.tordf import BNODE, LIT
-    from rdflib_jsonld_spark.operators.expand import _term_cols
+    from rdflib_jsonld_spark.operators.expand import quad_to_cells
     EX = "http://ex/"
     doc = {"@context": {"ex": EX}, "@id": "ex:a",
            "ex:knows": [
@@ -155,18 +154,7 @@ def _star_doc_quads(spark):
                    "ex:src": {"@id": "ex:doc",
                               "@annotation": {"ex:page": 3}}}},
                {"@id": "ex:c", "@annotation": {"ex:certainty": 0.4}}]}
-    rows = []
-    for g, s, p, o in to_rdf(doc):
-        s_str, s_bn = _term_cols(s)
-        if o[0] == LIT:
-            rows.append((None, s_str, s_bn, p[1], "literal",
-                         o[1], o[2], o[3]))
-        else:
-            o_str, _ = _term_cols(o)
-            kind = "bnode" if o[0] == BNODE else (
-                "triple" if o[0] == "qt" else "iri")
-            rows.append((None, s_str, s_bn, p[1], kind, o_str,
-                         None, None))
+    rows = [quad_to_cells(q) for q in to_rdf(doc)]
     return spark.createDataFrame(
         rows, "g string, s string, s_is_bnode boolean, p string, "
               "o_kind string, o_value string, o_datatype string, "

@@ -90,7 +90,7 @@ def test_stream_graph_dedup_isomorphic(spark, tmp_path):
     """Semantic graph dedup: turns whose fenced blocks are ISOMORPHIC
     (different bnode-free JSON key order, different surrounding prose,
     different keys) collapse; distinct graphs and no-block turns all
-    pass through."""
+    pass through, and each block's blank nodes stay its own."""
     import datetime
     from rdflib_jsonld_spark.sources.transcripts import TRANSCRIPT_SCHEMA
     from rdflib_jsonld_spark.streaming.incremental import (
@@ -104,6 +104,12 @@ def test_stream_graph_dedup_isomorphic(spark, tmp_path):
               '"@context":{"@vocab":"http://x.org/"}}\n```')   # iso to a1
     blk_b = ('```ld\n{"@context":{"@vocab":"http://x.org/"},'
              '"p":[{"q":"3"}]}\n```')
+    # two blocks = two anonymous nodes; one block with two names = one
+    # node: not isomorphic, so neither turn may drop the other
+    ctx = '"@context":{"@vocab":"http://x.org/"}'
+    two_blocks = "".join(f'```ld\n{{{ctx},"name":"{v}"}}\n```\n'
+                         for v in "ab")
+    one_block = f'```ld\n{{{ctx},"name":["a","b"]}}\n```'
     ts = datetime.datetime(2024, 1, 1, 12, 0, 0)
     rows = [
         ("c1", 0, "user", "note " + blk_a1, None, ts),
@@ -111,6 +117,8 @@ def test_stream_graph_dedup_isomorphic(spark, tmp_path):
         ("c3", 0, "user", blk_b, None, ts),                    # distinct
         ("c4", 0, "user", "no block here", None, ts),          # passes
         ("c5", 0, "user", "also blockless", None, ts),         # passes
+        ("c6", 0, "user", two_blocks, None, ts),               # distinct
+        ("c7", 0, "user", one_block, None, ts),                # distinct
     ]
     spark.createDataFrame(rows, TRANSCRIPT_SCHEMA).write.parquet(inp)
     stream = deduplicate_graphs(read_transcript_stream(spark, inp))
@@ -119,9 +127,9 @@ def test_stream_graph_dedup_isomorphic(spark, tmp_path):
          .outputMode("append").trigger(availableNow=True).start())
     q.awaitTermination()
     got = spark.read.parquet(out)
-    assert got.count() == 4                       # one of c1/c2 dropped
+    assert got.count() == 6                       # one of c1/c2 dropped
     kept = {r.conv_id for r in got.collect()}
-    assert {"c3", "c4", "c5"} <= kept
+    assert {"c3", "c4", "c5", "c6", "c7"} <= kept
     assert len({"c1", "c2"} & kept) == 1
 
 

@@ -202,9 +202,22 @@ class TestSpark:
     def test_sink_source_roundtrip_label_exact(self, spark):
         from rdflib_jsonld_spark.sources.turtle_io import (
             parse_turtle_documents, turtle_part_documents)
-        quads = self._mention_quads(spark)
         cols = ["g", "s", "s_is_bnode", "p", "o_kind", "o_value",
                 "o_datatype", "o_lang"]
+        # RDF-star rows: a quoted subject (nested, with a salted bnode
+        # and an escaped literal) and a quoted object
+        qt = "<< <http://e/a> <http://e/p> _:c/0/1#b0 >>"
+        star = spark.createDataFrame([
+            (None, qt, False, "http://e/w", "literal", "2",
+             XSD + "integer", None),
+            (None, f'<< {qt} <http://e/n> "say \\"hi\\"\\n" >>', False,
+             "http://e/src", "iri", "http://e/doc", None, None),
+            ("http://e/g", "_:c/0/1#b0", True, "http://e/about", "triple",
+             qt, None, None)],
+            "g string, s string, s_is_bnode boolean, p string, "
+            "o_kind string, o_value string, o_datatype string, "
+            "o_lang string")
+        quads = self._mention_quads(spark).select(*cols).unionByName(star)
         docs = turtle_part_documents(quads, trig=True)
         back = parse_turtle_documents(docs)
         a = {tuple(r) for r in quads.select(*cols).collect()}
