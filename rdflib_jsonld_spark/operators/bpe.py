@@ -24,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from .rounds import release
+
 
 def _word_counts(docs: DataFrame, text_col: str) -> DataFrame:
     words = F.filter(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
@@ -108,9 +110,9 @@ def learn_bpe_batched(docs: DataFrame, n_rounds: int = 2,
             step += 1
             nxt = nxt.withColumn("sym", _apply_merge(a, b))
         nxt = nxt.localCheckpoint(eager=True)
-        cur.unpersist()
+        release(cur)
         cur = nxt
-    cur.unpersist()
+    release(cur)
     schema = T.StructType([
         T.StructField("step", T.LongType(), False),
         T.StructField("lhs", T.StringType(), False),

@@ -17,9 +17,9 @@ Scale posture (10^12-edge ready):
   shuffle shape as one round of distributed CC; AQE handles skewed hubs
   (the same reason E6 salting exists for aggregations is why the
   contribution agg keys on dst, never on a hot constant);
-- ``localCheckpoint`` per iteration with explicit unpersist of the
-  previous round, exactly the CC-loop storage discipline
-  (linking.py:163-166) — plans stay O(1) deep, storage O(1) rounds;
+- ``localCheckpoint`` per iteration, the previous one freed by
+  ``rounds.release`` (``unpersist()`` does not free a checkpoint) —
+  plans stay O(1) deep, storage O(1) rounds;
 - the only driver actions are one scalar row per iteration (N once,
   dangling mass per round) — bounded at any scale;
 - iteration count is FIXED (default 10), not convergence-tested: a fixed
@@ -31,6 +31,8 @@ Scale posture (10^12-edge ready):
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from .rounds import frontier_rounds, release
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
@@ -94,7 +96,7 @@ def pagerank(edges: DataFrame, iterations: int = 10,
                        .alias("rank"),
                        ranks.out_degree)
                .localCheckpoint(eager=True))
-        ranks.unpersist()
+        release(ranks)
         ranks = nxt
     e.unpersist()
     nodes.unpersist()
@@ -174,7 +176,7 @@ def label_propagation(edges: DataFrame, iterations: int = 5) -> DataFrame:
 
     Per round: one join (labels ⋈ symmetrized edges) and two hash
     aggregates ((node, label) counts → per-node argmax). Same
-    localCheckpoint/unpersist storage discipline as CC/PageRank; at
+    localCheckpoint/release storage discipline as CC/PageRank; at
     10^12 edges the (node, label) aggregate is the same shuffle shape
     as one CC round, AQE-skew-tolerant.
     """
@@ -196,7 +198,7 @@ def label_propagation(edges: DataFrame, iterations: int = 5) -> DataFrame:
                .select(F.col("src").alias("node"),
                        F.col("w.label").alias("label"))
                .localCheckpoint(eager=True))
-        labels.unpersist()
+        release(labels)
         labels = nxt
     e.unpersist()
     return labels
@@ -212,8 +214,8 @@ def bfs_distances(edges: DataFrame, sources: list,
     Frontier-expansion BFS as iterative joins: each level is one
     equi-join of the current frontier with the edge set plus one
     anti-join against the settled set — the textbook distributed BFS
-    (Pregel's traversal pattern) on DataFrames, with the CC/PageRank
-    checkpoint discipline. Level count ≤ graph diameter (capped by
+    (Pregel's traversal pattern) on DataFrames, run by
+    ``rounds.frontier_rounds``. Level count ≤ graph diameter (capped by
     ``max_depth``); one bounded emptiness probe per level is the only
     driver action. Complements the SPARQL property-path operators,
     which answer reachability but not DISTANCE.
@@ -226,23 +228,16 @@ def bfs_distances(edges: DataFrame, sources: list,
          .dropDuplicates(["src", "dst"]).persist())
     nodes = (e.select(F.col("src").alias("node"))
              .unionByName(e.select(F.col("dst").alias("node"))).distinct())
-    dist = (nodes.where(F.col("node").isin(list(sources)))
-            .select("node", F.lit(0).alias("dist"))
-            .localCheckpoint(eager=True))
-    frontier = dist
-    for d in range(1, max_depth + 1):
-        nxt = (frontier.join(e, frontier.node == e.src)
-               .select(F.col("dst").alias("node")).distinct()
-               .join(dist, "node", "left_anti")
-               .select("node", F.lit(d).alias("dist"))
-               .localCheckpoint(eager=True))
-        if nxt.limit(1).count() == 0:
-            nxt.unpersist()
-            break
-        merged = dist.unionByName(nxt).localCheckpoint(eager=True)
-        dist.unpersist()
-        frontier.unpersist()
-        dist, frontier = merged, nxt
+
+    def step(frontier, dist, d):
+        return (frontier.join(e, frontier.node == e.src)
+                .select(F.col("dst").alias("node")).distinct()
+                .join(dist, "node", "left_anti")
+                .select("node", F.lit(d).alias("dist")))
+
+    dist = frontier_rounds(
+        nodes.where(F.col("node").isin(list(sources)))
+        .select("node", F.lit(0).alias("dist")), step, max_depth)
     e.unpersist()
     return dist
 
@@ -259,9 +254,9 @@ def weighted_distances(edges: DataFrame, sources: list,
     nodes whose distance improved last round (one equi-join + one
     min-agg), folds improvements into the settled table, and stops when
     a round improves nothing (≤ longest shortest-path edge count
-    rounds, capped by ``max_iters``). One bounded emptiness probe per
-    round is the only driver action; per-round state is
-    localCheckpoint-ed and unpersisted like the CC/PageRank loops.
+    rounds, capped by ``max_iters``). ``rounds.frontier_rounds`` runs
+    the loop: one bounded emptiness probe per round is the only driver
+    action, and superseded rounds are released.
     Non-negative weights converge to exact distances; a negative cycle
     is bounded by ``max_iters`` (Bellman-Ford semantics on the
     ≤ max_iters-edge path set).
@@ -274,31 +269,25 @@ def weighted_distances(edges: DataFrame, sources: list,
     e = e.where(F.col("src") != F.col("dst")).persist()
     nodes = (e.select(F.col("src").alias("node"))
              .unionByName(e.select(F.col("dst").alias("node"))).distinct())
-    dist = (nodes.where(F.col("node").isin(list(sources)))
-            .select("node", F.lit(0).cast("long").alias("dist"))
-            .localCheckpoint(eager=True))
-    frontier = dist
-    for _ in range(max_iters):
+
+    def step(frontier, dist, _):
         cand = (frontier.join(e, frontier.node == e.src)
                 .select(F.col("dst").alias("node"),
                         (F.col("dist") + F.col("w")).alias("dist"))
                 .groupBy("node").agg(F.min("dist").alias("dist")))
-        improved = (cand.join(dist.select("node",
-                                          F.col("dist").alias("_old")),
-                              "node", "left")
-                    .where(F.col("_old").isNull()
-                           | (F.col("dist") < F.col("_old")))
-                    .select("node", "dist")
-                    .localCheckpoint(eager=True))
-        if improved.limit(1).count() == 0:
-            improved.unpersist()
-            break
-        merged = (dist.unionByName(improved)
-                  .groupBy("node").agg(F.min("dist").alias("dist"))
-                  .localCheckpoint(eager=True))
-        dist.unpersist()
-        if frontier is not dist:
-            frontier.unpersist()
-        dist, frontier = merged, improved
+        return (cand.join(dist.select("node", F.col("dist").alias("_old")),
+                          "node", "left")
+                .where(F.col("_old").isNull()
+                       | (F.col("dist") < F.col("_old")))
+                .select("node", "dist"))
+
+    def keep_min(dist, improved):
+        return (dist.unionByName(improved)
+                .groupBy("node").agg(F.min("dist").alias("dist")))
+
+    dist = frontier_rounds(
+        nodes.where(F.col("node").isin(list(sources)))
+        .select("node", F.lit(0).cast("long").alias("dist")),
+        step, max_iters, merge=keep_min)
     e.unpersist()
     return dist

@@ -65,7 +65,7 @@ def _quad_rows(df: DataFrame, s, s_is_bnode, p, o_kind, o_value
         F.lit(None).cast("string").alias("o_lang"))
 
 
-def rdfs_closure(quads: DataFrame, max_iter: int = 20,
+def rdfs_closure(quads: DataFrame,
                  include_schema_closure: bool = True) -> DataFrame:
     """Materialize RDFS entailment; returns input ∪ inferred, set-
     deduped on the quad key (input columns preserved, inferred rows
@@ -78,11 +78,9 @@ def rdfs_closure(quads: DataFrame, max_iter: int = 20,
             .select("p").distinct().collect():
         has.add(r["p"])
 
-    sco = transitive_closure(_edges(quads, RDFS + "subClassOf"),
-                             max_iter) \
+    sco = transitive_closure(_edges(quads, RDFS + "subClassOf")) \
         if RDFS + "subClassOf" in has else None
-    spo = transitive_closure(_edges(quads, RDFS + "subPropertyOf"),
-                             max_iter) \
+    spo = transitive_closure(_edges(quads, RDFS + "subPropertyOf")) \
         if RDFS + "subPropertyOf" in has else None
 
     inferred: list[DataFrame] = []
@@ -156,8 +154,7 @@ def rdfs_closure(quads: DataFrame, max_iter: int = 20,
 OWL = "http://www.w3.org/2002/07/owl#"
 
 
-def owl_property_closure(quads: DataFrame, max_iter: int = 20
-                         ) -> DataFrame:
+def owl_property_closure(quads: DataFrame) -> DataFrame:
     """Materialize the OWL property-characteristic rules that are safe
     as one ordered pass ([spec] OWL 2 RL, W3C Rec — rules prp-inv1/2,
     prp-symp, prp-trp; the reference has no inference, same breadth
@@ -272,7 +269,7 @@ def owl_property_closure(quads: DataFrame, max_iter: int = 20
                            & (F.col("o_kind") != "literal"))
                  .select(F.col("s").alias("src"),
                          F.col("o_value").alias("dst")))
-        closure = transitive_closure(edges, max_iter)
+        closure = transitive_closure(edges)
         inferred.append(_quad_rows(
             closure, F.col("src"), F.col("src").startswith("_:"),
             F.lit(p), F.when(F.col("dst").startswith("_:"),

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from rdflib_jsonld_spark.sources.registry import OWL_SAMEAS, VOCAB
+from .rounds import release
 
 ABOUT = VOCAB + "about"
 SURFACE = VOCAB + "surface"
@@ -132,7 +133,14 @@ def _driver_union_find(rows) -> list[tuple[str, str]]:
     return [(n, find(n)) for n in sorted(nodes) if find(n) != n]
 
 
-def connected_components(edges: DataFrame, max_iter: int = 20,
+def _set_digest(pairs: DataFrame) -> tuple:
+    """Fixpoint test of a distinct pair set: bit_xor is overflow-free
+    under ANSI mode and order-independent, a sound set digest."""
+    return tuple(pairs.agg(F.count(F.lit(1)), F.expr(
+        "bit_xor(xxhash64(src, dst))")).collect()[0])
+
+
+def connected_components(edges: DataFrame,
                          driver_threshold: int = 200_000) -> DataFrame:
     """(src, dst) undirected edges → (node, root) with root = component min.
 
@@ -141,8 +149,8 @@ def connected_components(edges: DataFrame, max_iter: int = 20,
     O(E α(E)) beats ~10 shuffle rounds by two orders of magnitude for the
     post-blocking entity graph, which is tiny relative to the quad table
     even at 10^12 turns (|entities| ≪ |mentions|). Above it, alternate
-    large-star/small-star (Kiveris et al.) until the edge set reaches a
-    fixpoint (checksum + count compare). localCheckpoint per round cuts
+    large-star/small-star (Kiveris et al., proven to converge) until
+    :func:`_set_digest` stops changing. localCheckpoint per round cuts
     lineage so plans stay O(1) deep (SURVEY.md §2.F2).
     """
     e = edges.select("src", "dst").where(F.col("src") != F.col("dst"))
@@ -156,29 +164,24 @@ def connected_components(edges: DataFrame, max_iter: int = 20,
         spark = edges.sparkSession
         pairs = _driver_union_find([(r.src, r.dst) for r in probe])
         return spark.createDataFrame(pairs, ["node", "root"])
-    prev_sig = None
-    for _ in range(max_iter):
-        nxt = _small_star(_large_star(e)).localCheckpoint(eager=True)
-        # free the previous round's checkpoint blocks — without this the
+    cur, prev_sig = e, None
+    while True:
+        nxt = _small_star(_large_star(cur)).localCheckpoint(eager=True)
+        # free the previous round's checkpoint — without this the
         # executor storage grows by one edge-set per round (surfaced as
         # GC-locker stalls at ~1M edges; fatal at web scale)
-        e.unpersist()
-        e = nxt
-        # bit_xor is overflow-free under ANSI mode and order-independent;
-        # the edge set is distinct, so xor-of-hashes is a sound set digest.
-        sig = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(src, dst))").alias("h"),
-        ).collect()[0]
-        cur = (sig["n"], sig["h"])
-        if cur == prev_sig:
+        if cur is not e:
+            release(cur)
+        cur = nxt
+        sig = _set_digest(cur)
+        if sig == prev_sig:
             break
-        prev_sig = cur
+        prev_sig = sig
     # At fixpoint every edge points at its component root.
-    return e.select(F.col("src").alias("node"), F.col("dst").alias("root"))
+    return cur.select(F.col("src").alias("node"), F.col("dst").alias("root"))
 
 
-def transitive_closure(edges: DataFrame, max_iter: int = 20) -> DataFrame:
+def transitive_closure(edges: DataFrame) -> DataFrame:
     """Directed transitive closure of an edge set — the SPARQL ``p+``
     property-path primitive over the constructed graph (follow-on to
     the BGP surface: ``?x p+ ?y`` = closure of the p edge list).
@@ -186,11 +189,11 @@ def transitive_closure(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     Algorithm: **path doubling** — each round joins the closure with
     itself, so paths of length ≤ 2^k are covered after k rounds:
     O(log diameter) shuffle rounds, not O(diameter) like naive
-    chaining (a 1M-long chain needs 20 rounds, not 1M).
-    ``localCheckpoint`` per round cuts lineage exactly like the CC
-    loop; the fixpoint test reuses the bit_xor set digest. Cycles
-    yield their self-pairs ((a,a) for a on a cycle), matching SPARQL
-    path semantics; explicit self-loops are length-1 paths and kept.
+    chaining (a 1M-long chain needs 21 rounds, not 1M), looping until
+    :func:`_set_digest` stops changing. ``localCheckpoint`` per round
+    cuts lineage exactly like the CC loop. Cycles yield their self-pairs
+    ((a,a) for a on a cycle), matching SPARQL path semantics; explicit
+    self-loops are length-1 paths and kept.
 
     Scale: each round is one equi-join + distinct on the pair key —
     AQE-splittable; the state is the closure pair set, which for the
@@ -199,22 +202,19 @@ def transitive_closure(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     closure = edges.select("src", "dst").distinct() \
         .localCheckpoint(eager=True)
     prev_sig = None
-    for _ in range(max_iter):
+    while True:
         a, b = closure.alias("a"), closure.alias("b")
         step = (a.join(b, F.col("a.dst") == F.col("b.src"))
                 .select(F.col("a.src").alias("src"),
                         F.col("b.dst").alias("dst")))
         nxt = closure.unionByName(step).distinct() \
             .localCheckpoint(eager=True)
-        closure.unpersist()
+        release(closure)
         closure = nxt
-        sig = closure.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(src, dst))").alias("h")).collect()[0]
-        cur = (sig["n"], sig["h"])
-        if cur == prev_sig:
+        sig = _set_digest(closure)
+        if sig == prev_sig:
             break
-        prev_sig = cur
+        prev_sig = sig
     return closure
 
 

@@ -40,13 +40,14 @@ Semantics notes ([spec] §9.3 evaluation, §18.4 ALP):
   convention): bnodes as ``_:label``, literals by lexical form.
 
 Scale: every combinator is JVM-side column algebra; the only iterative
-piece is the closure (path doubling = O(log diameter) shuffle rounds,
-``localCheckpoint`` per round — linking.py:181). ``match_path`` with a
-constant endpoint switches to SEEDED evaluation (frontier expansion from
-the constant, O(path-length + diameter) small rounds) so a bounded query
-like ``<e> sameAs* ?x`` never materializes the full closure — the ALP
-shape of [spec] §18.4. An unseeded ``star``/``opt`` materializes the
-node universe (≤ 2× quad count rows) — intended for alias-graph-sized
+piece is the closure, which always runs to its fixpoint (no round cap):
+path doubling (O(log diameter) shuffle rounds,
+``linking.transitive_closure``) or, when ``match_path`` has a constant
+endpoint, SEEDED frontier expansion from the constant
+(``rounds.frontier_rounds``, one small round per hop), so a query like
+``<e> sameAs* ?x`` never materializes the full closure — the ALP shape
+of [spec] §18.4. An unseeded ``star``/``opt`` materializes the node
+universe (≤ 2× quad count rows) — intended for alias-graph-sized
 relations, same posture as transitive_closure.
 """
 
@@ -57,6 +58,7 @@ import re
 from pyspark.sql import DataFrame, functions as F
 
 from .linking import transitive_closure
+from .rounds import frontier_rounds, release
 
 # ---------------------------------------------------------------------------
 # AST constructors (plain tuples: picklable, hashable, printable)
@@ -328,7 +330,7 @@ def _pairs(df: DataFrame) -> DataFrame:
 
 
 def eval_path(quads: DataFrame, path: tuple,
-              graph: str | None = None, max_iter: int = 20) -> DataFrame:
+              graph: str | None = None) -> DataFrame:
     """Full-relation evaluation: DISTINCT (src, dst) pairs the path
     connects anywhere in the graph. ``graph`` scopes like the BGP GRAPH
     clause (None = any graph, "*" = named graphs only, else constant)."""
@@ -341,17 +343,17 @@ def eval_path(quads: DataFrame, path: tuple,
         return _pairs(q.where(~F.col("p").isin(*path[1])).select(
             F.col("s").alias("src"), _enc_obj().alias("dst"))).distinct()
     if kind == "inv":
-        inner = eval_path(quads, path[1], graph, max_iter)
+        inner = eval_path(quads, path[1], graph)
         return inner.select(F.col("dst").alias("src"),
                             F.col("src").alias("dst"))
     if kind == "seq":
         # parts 2..n evaluate SEEDED from the left accumulator's dst set:
         # a trailing closure/star never materializes the full relation
         # (nor the node-universe identity) — only the reachable slice
-        acc = eval_path(quads, path[1], graph, max_iter)
+        acc = eval_path(quads, path[1], graph)
         for part in path[2:]:
             mid = acc.select(F.col("dst").alias("src")).distinct()
-            right = _eval_from(quads, _push_inv(part), mid, graph, max_iter)
+            right = _eval_from(quads, _push_inv(part), mid, graph)
             acc = (acc.alias("a")
                    .join(right.alias("b"), F.col("a.dst") == F.col("b.src"))
                    .select(F.col("a.src").alias("src"),
@@ -359,17 +361,16 @@ def eval_path(quads: DataFrame, path: tuple,
                    .distinct())
         return acc
     if kind == "alt":
-        acc = eval_path(quads, path[1], graph, max_iter)
+        acc = eval_path(quads, path[1], graph)
         for part in path[2:]:
-            acc = acc.union(eval_path(quads, part, graph, max_iter))
+            acc = acc.union(eval_path(quads, part, graph))
         return acc.distinct()
     if kind == "plus":
-        return transitive_closure(
-            eval_path(quads, path[1], graph, max_iter), max_iter=max_iter)
+        return transitive_closure(eval_path(quads, path[1], graph))
     if kind in ("star", "opt"):
-        base = eval_path(quads, path[1], graph, max_iter)
+        base = eval_path(quads, path[1], graph)
         if kind == "star":
-            base = transitive_closure(base, max_iter=max_iter)
+            base = transitive_closure(base)
         ident = graph_nodes(quads, graph).select(
             F.col("node").alias("src"), F.col("node").alias("dst"))
         return base.union(ident).distinct()
@@ -398,66 +399,18 @@ def _push_inv(path: tuple, invert: bool = False) -> tuple:
     raise ValueError(f"unknown path node {path!r}")
 
 
-def _seeded_closure(edges: DataFrame, seeds: DataFrame,
-                    max_iter: int, include_zero: bool) -> DataFrame:
-    """(origin, node) pairs reachable from each seed via >=1 (or >=0 when
-    ``include_zero``) edge steps: frontier BFS with a visited set,
-    O(diameter) small rounds, ``localCheckpoint`` per round.
-
-    Constraint propagation is disabled for the loop's plans (restored
-    after): Spark 4.1's LogicalRDD constraint rewrite chokes on
-    checkpoints derived from anti-joins-against-checkpoints
-    ("key not found: origin#N" from UnionBase.rewriteConstraints when the
-    next round unions them). The loop's join keys gain nothing from
-    propagated constraints — every relation here is already distinct and
-    non-null by construction."""
-    spark = edges.sparkSession
-    prop_key = "spark.sql.constraintPropagation.enabled"
-    prev = spark.conf.get(prop_key)
-    spark.conf.set(prop_key, "false")
-    try:
-        origins = seeds.select(F.col("src").alias("origin")).distinct()
-        if include_zero:
-            visited = origins.select("origin", F.col("origin").alias("node"))
-        else:
-            visited = (origins.join(
-                edges, origins["origin"] == edges["src"])
-                .select("origin", F.col("dst").alias("node")).distinct())
-        visited = visited.localCheckpoint(eager=True)
-        frontier = visited
-        for _ in range(max_iter):
-            step = (frontier.alias("f")
-                    .join(edges.alias("e"), F.col("f.node") == F.col("e.src"))
-                    .select(F.col("f.origin").alias("origin"),
-                            F.col("e.dst").alias("node"))
-                    .distinct())
-            new = step.join(visited, on=["origin", "node"], how="left_anti") \
-                .localCheckpoint(eager=True)
-            if new.limit(1).count() == 0:
-                break
-            nxt = visited.union(new).localCheckpoint(eager=True)
-            visited.unpersist()
-            visited = nxt
-            frontier = new
-    finally:
-        spark.conf.set(prop_key, prev)
-    return visited.select(F.col("origin").alias("src"),
-                          F.col("node").alias("dst"))
-
-
 def eval_path_from(quads: DataFrame, path: tuple, seeds: DataFrame,
-                   graph: str | None = None,
-                   max_iter: int = 20) -> DataFrame:
+                   graph: str | None = None) -> DataFrame:
     """Seeded evaluation: (src, dst) pairs where src ∈ ``seeds`` (a
     one-column ``src`` DataFrame). Never materializes the full closure —
     closures run as frontier BFS from the seeds and sequences thread the
     reached set left-to-right, so cost scales with the reachable
     neighborhood, not the graph ([spec] §18.4 ALP shape)."""
-    return _eval_from(quads, _push_inv(path), seeds, graph, max_iter)
+    return _eval_from(quads, _push_inv(path), seeds, graph)
 
 
 def _eval_from(quads: DataFrame, path: tuple, seeds: DataFrame,
-               graph: str | None, max_iter: int) -> DataFrame:
+               graph: str | None) -> DataFrame:
     seeds = seeds.select("src").distinct()
     kind = path[0]
     if kind in ("link", "nps"):
@@ -465,14 +418,14 @@ def _eval_from(quads: DataFrame, path: tuple, seeds: DataFrame,
     if kind == "inv":
         # normalized: inner is link/nps. ^p from seeds = p arriving AT
         # seeds — a predicate-filtered scan joined on dst, then swap
-        inner = eval_path(quads, path[1], graph, max_iter)
+        inner = eval_path(quads, path[1], graph)
         return (inner.join(seeds.select(F.col("src").alias("dst")), on="dst")
                 .select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     if kind == "seq":
-        acc = _eval_from(quads, path[1], seeds, graph, max_iter)
+        acc = _eval_from(quads, path[1], seeds, graph)
         for part in path[2:]:
             mid = acc.select(F.col("dst").alias("src")).distinct()
-            right = _eval_from(quads, part, mid, graph, max_iter)
+            right = _eval_from(quads, part, mid, graph)
             acc = (acc.alias("a")
                    .join(right.alias("b"), F.col("a.dst") == F.col("b.src"))
                    .select(F.col("a.src").alias("src"),
@@ -480,25 +433,37 @@ def _eval_from(quads: DataFrame, path: tuple, seeds: DataFrame,
                    .distinct())
         return acc
     if kind == "alt":
-        acc = _eval_from(quads, path[1], seeds, graph, max_iter)
+        acc = _eval_from(quads, path[1], seeds, graph)
         for part in path[2:]:
-            acc = acc.union(_eval_from(quads, part, seeds, graph, max_iter))
+            acc = acc.union(_eval_from(quads, part, seeds, graph))
         return acc.distinct()
     if kind in ("plus", "star"):
         # materialize the step relation once — the BFS loop scans it
         # every round (and it may carry a Python expansion upstream)
-        edges = eval_path(quads, path[1], graph, max_iter) \
-            .localCheckpoint(eager=True)
+        edges = eval_path(quads, path[1], graph).localCheckpoint(eager=True)
         # [spec] §18.4 ZeroLengthPath(term X, var Y) binds Y to X
         # UNCONDITIONALLY — a seeded (constant-endpoint) star includes
         # the seed itself even when it never occurs in the graph
         # (sweep 21; only the VAR-VAR zero-length path is restricted to
         # graph terms). Mid-sequence seeds always occur in the graph,
         # so this changes nothing for threaded sequences.
-        return _seeded_closure(edges, seeds, max_iter,
-                               include_zero=(kind == "star"))
+        def hop(frontier):   # (origin, node) → (origin, next node)
+            return (frontier.alias("f")
+                    .join(edges.alias("e"), F.col("f.node") == F.col("e.src"))
+                    .select(F.col("f.origin").alias("origin"),
+                            F.col("e.dst").alias("node"))
+                    .distinct())
+
+        zero = seeds.select(F.col("src").alias("origin"),
+                            F.col("src").alias("node"))
+        visited = frontier_rounds(
+            zero if kind == "star" else hop(zero),
+            lambda f, v, _: hop(f).join(v, ["origin", "node"], "left_anti"))
+        release(edges)   # the loop's checkpoints no longer read it
+        return visited.select(F.col("origin").alias("src"),
+                              F.col("node").alias("dst"))
     if kind == "opt":
-        base = _eval_from(quads, path[1], seeds, graph, max_iter)
+        base = _eval_from(quads, path[1], seeds, graph)
         ident = seeds.select("src", F.col("src").alias("dst"))
         return base.union(ident).distinct()
     raise ValueError(f"unknown path node {path!r}")
@@ -509,7 +474,7 @@ def _is_var(x: str) -> bool:
 
 
 def match_path(quads: DataFrame, subj: str, path: tuple | str, obj: str,
-               graph: str | None = None, max_iter: int = 20,
+               graph: str | None = None,
                distinct: bool = True) -> DataFrame:
     """One path pattern ``subj path obj`` → solution DataFrame, the
     path analogue of a ``match_bgp`` pattern. ``subj``/``obj`` are
@@ -531,14 +496,14 @@ def match_path(quads: DataFrame, subj: str, path: tuple | str, obj: str,
     if not s_var:
         seeds = quads.sparkSession.createDataFrame(
             [(a,) for a in subj_alts], ["src"])
-        pairs = eval_path_from(quads, path, seeds, graph, max_iter)
+        pairs = eval_path_from(quads, path, seeds, graph)
     elif not o_var:
         seeds = quads.sparkSession.createDataFrame(
             [(a,) for a in obj_alts], ["src"])
-        pairs = eval_path_from(quads, inv(path), seeds, graph, max_iter) \
+        pairs = eval_path_from(quads, inv(path), seeds, graph) \
             .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     else:
-        pairs = eval_path(quads, path, graph, max_iter)
+        pairs = eval_path(quads, path, graph)
 
     if s_var and o_var:
         if subj == obj:  # same variable both ends → cyclic constraint

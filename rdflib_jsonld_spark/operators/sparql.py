@@ -93,6 +93,7 @@ from .bgp import (TK_PREFIX, TYPED_PREFIX, _companion_cols, _is_var,
                   decode_literal, encode_literal, instantiate_template,
                   match_bgp, patch_companion_refs, term_key_of)
 from .paths import match_path
+from .rounds import frontier_rounds
 from .solutions import select_solutions
 
 __all__ = ["sparql", "parse_query", "SparqlError"]
@@ -3129,7 +3130,7 @@ def _merge_values(acc: DataFrame | None, names: list[str],
 
 
 def _eval_bgp(quads: DataFrame, triples: list[tuple], graph: str | None,
-              with_types: bool, stats, max_iter: int) -> DataFrame:
+              with_types: bool, stats) -> DataFrame:
     plain = [(s, p, o) for s, p, o in triples if isinstance(p, str)]
     paths = [(s, p, o) for s, p, o in triples if not isinstance(p, str)]
     if paths and graph is not None and _is_var(graph):
@@ -3143,7 +3144,7 @@ def _eval_bgp(quads: DataFrame, triples: list[tuple], graph: str | None,
     for s, p, o in paths:
         pg = "*" if graph == "*" else graph
         acc = _merge(acc, match_path(quads, s, p, o, graph=pg,
-                                     max_iter=max_iter, distinct=True))
+                                     distinct=True))
     return acc
 
 
@@ -3302,8 +3303,7 @@ def _group_var_sets(group: Group) -> tuple[set[str], set[str]]:
 
 
 def _eval_group(quads: DataFrame, group: Group, *, graph: str | None = None,
-                with_types: bool = False, stats=None,
-                max_iter: int = 20) -> DataFrame:
+                with_types: bool = False, stats=None) -> DataFrame:
     """Evaluate a group graph pattern to a solution DataFrame.
     Elements join in document order; FILTER constraints (including
     EXISTS groups) apply over the whole group, per spec."""
@@ -3315,7 +3315,7 @@ def _eval_group(quads: DataFrame, group: Group, *, graph: str | None = None,
 
     def ev(g: Group) -> DataFrame:
         return _eval_group(quads, g, graph=graph, with_types=with_types,
-                           stats=stats, max_iter=max_iter)
+                           stats=stats)
 
     def merge(df: DataFrame, how: str = "inner",
               el_c: set | frozenset = frozenset(),
@@ -3350,8 +3350,7 @@ def _eval_group(quads: DataFrame, group: Group, *, graph: str | None = None,
     for el in group.elements:
         kind = el[0]
         if kind == "bgp":
-            acc = merge(_eval_bgp(quads, el[1], graph, with_types,
-                                  stats, max_iter),
+            acc = merge(_eval_bgp(quads, el[1], graph, with_types, stats),
                         el_c=_bgp_pattern_vars(el[1]))
         elif kind == "optional":
             oc, om = _group_var_sets(el[1])
@@ -3419,7 +3418,7 @@ def _eval_group(quads: DataFrame, group: Group, *, graph: str | None = None,
                 gc = gc | {term[1:]}
             acc = merge(_eval_group(
                 quads, sub, graph=term, with_types=with_types,
-                stats=stats, max_iter=max_iter), el_c=gc, el_m=gm)
+                stats=stats), el_c=gc, el_m=gm)
         elif kind == "subselect":
             # Bottom-up per spec: the subquery evaluates against the
             # dataset (inheriting any active GRAPH scope), its solution
@@ -3435,8 +3434,7 @@ def _eval_group(quads: DataFrame, group: Group, *, graph: str | None = None,
             if with_types:
                 subq.keep_types = subq.needs_types = True
             ssols = _eval_group(quads, subq.where, graph=graph,
-                                with_types=with_types, stats=stats,
-                                max_iter=max_iter)
+                                with_types=with_types, stats=stats)
             acc = merge(_eval_select(ssols, subq), el_c=sc, el_m=sm)
         elif kind in ("filter", "exists"):
             deferred.append(el)
@@ -3464,30 +3462,26 @@ def _eval_group(quads: DataFrame, group: Group, *, graph: str | None = None,
     return acc
 
 
-def _describe(quads: DataFrame, nodes: DataFrame,
-              max_rounds: int = 8) -> DataFrame:
+def _describe(quads: DataFrame, nodes: DataFrame) -> DataFrame:
     """Concise bounded description: all quads whose subject is in
-    ``nodes``, plus (recursively) quads describing blank nodes reached
-    in object position — bounded semi-join rounds, each a small
-    broadcast-able frontier."""
-    seen = nodes.select(F.col("node")).distinct().localCheckpoint()
-    frontier = seen
-    for _ in range(max_rounds):
-        hop = (quads.join(frontier.withColumnRenamed("node", "s"),
-                          on="s", how="left_semi")
-               .where(F.col("o_kind") == "bnode")
-               .select(F.col("o_value").alias("node")).distinct())
-        frontier = hop.join(seen, on="node", how="left_anti") \
-            .localCheckpoint()
-        if frontier.limit(1).count() == 0:
-            break
-        seen = seen.unionByName(frontier).localCheckpoint()
+    ``nodes``, plus (recursively, to the fixpoint) quads describing
+    blank nodes reached in object position — semi-join rounds, each a
+    small broadcast-able frontier, so a long RDF list is described to
+    its end."""
+    def step(frontier, seen, _):
+        return (quads.join(frontier.withColumnRenamed("node", "s"),
+                           on="s", how="left_semi")
+                .where(F.col("o_kind") == "bnode")
+                .select(F.col("o_value").alias("node")).distinct()
+                .join(seen, on="node", how="left_anti"))
+
+    seen = frontier_rounds(nodes.select(F.col("node")).distinct(), step)
     return quads.join(seen.withColumnRenamed("node", "s"),
                       on="s", how="left_semi")
 
 
 def sparql(quads: DataFrame, query: str, *, stats: dict | None = None,
-           max_iter: int = 20, keep_types: bool = False) -> DataFrame:
+           keep_types: bool = False) -> DataFrame:
     """Run a SPARQL query string over a quad table.
 
     Returns a DataFrame: one column per projected variable (SELECT), a
@@ -3518,7 +3512,7 @@ def sparql(quads: DataFrame, query: str, *, stats: dict | None = None,
         # literal subject)
         q.needs_types = True
     sols = _eval_group(quads, q.where, with_types=q.needs_types,
-                       stats=stats, max_iter=max_iter)
+                       stats=stats)
     if q.post_values is not None:
         # [spec] §18.2.2.5: the trailing VALUES table joins the WHERE
         # solutions BEFORE grouping / solution modifiers

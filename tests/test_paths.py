@@ -158,6 +158,20 @@ def test_seeded_matches_full(spark, path):
         assert got == want, (path, seed)
 
 
+def test_seeded_closure_reaches_end_of_long_chain(spark):
+    """Seeded ``p+`` runs to its fixpoint: every node of a 30-hop chain
+    is reached, the same answer as the unseeded closure (a 20-round cap
+    used to stop the seeded loop at 21 nodes)."""
+    chain = [T(f"e{i}", "p", f"e{i + 1}") for i in range(30)]
+    df = quads_df(spark, chain)
+    want = {EX + f"e{i}" for i in range(1, 31)}
+    seeded = match_path(df, EX + "e0", plus(link(EX + "p")), "?x")
+    assert {r.x for r in seeded.collect()} == want
+    full = match_path(df, "?s", plus(link(EX + "p")), "?x") \
+        .where(F.col("s") == EX + "e0")
+    assert {r.x for r in full.collect()} == want
+
+
 def test_star_zero_length_constant_is_unconditional(spark):
     """[spec] §18.4 ZeroLengthPath(X, vy) with X constant binds ?y to X
     even when X never occurs in the graph (sweep 21; was restricted to

@@ -1,0 +1,89 @@
+"""Checkpoint lifetime of the iterative loops (operators/rounds.py).
+
+Every loop checkpoints each round; a superseded round must be freed
+before the call returns. ``DataFrame.unpersist()`` does not free a
+``localCheckpoint``, so this counts the RDDs that actually hold cached
+blocks in the JVM before and after each call."""
+
+import pytest
+from pyspark.sql import functions as F
+
+from rdflib_jsonld_spark.operators.graphstats import bfs_distances
+from rdflib_jsonld_spark.operators.linking import (connected_components,
+                                                   transitive_closure)
+from rdflib_jsonld_spark.operators.paths import match_path
+from rdflib_jsonld_spark.operators.rounds import frontier_rounds, release
+from rdflib_jsonld_spark.operators.update import update
+
+V = "http://ex.org/v#"
+E = "http://ex.org/e/"
+SAME_AS = "http://www.w3.org/2002/07/owl#sameAs"
+SCHEMA = ("g string, s string, s_is_bnode boolean, p string, o_kind string, "
+          "o_value string, o_datatype string, o_lang string")
+
+
+def chain_edges(spark, hops=12):
+    return spark.createDataFrame(
+        [(f"n{i}", f"n{i + 1}") for i in range(hops)], ["src", "dst"])
+
+
+def chain_quads(spark, p=SAME_AS, hops=12):
+    rows = [(None, f"{E}n{i}", False, p, "iri", f"{E}n{i + 1}", None, None)
+            for i in range(hops)]
+    rows += [(None, f"{E}n{i}", False, V + "name", "literal", f"N{i}",
+              None, None) for i in range(hops)]
+    return spark.createDataFrame(rows, SCHEMA)
+
+
+UPDATE_3OP = (
+    f"PREFIX v: <{V}> "
+    "DELETE { ?s v:name ?n } INSERT { ?s v:label ?n } "
+    "WHERE { ?s v:name ?n } ; "
+    f"INSERT {{ ?s v:linked true }} WHERE {{ ?s <{SAME_AS}> ?o }} ; "
+    "DELETE WHERE { ?s v:label ?l }")
+
+CALLS = {
+    "bfs_distances": lambda s: bfs_distances(chain_edges(s), ["n0"]),
+    "transitive_closure": lambda s: transitive_closure(chain_edges(s)),
+    "connected_components": lambda s: connected_components(
+        chain_edges(s), driver_threshold=0),
+    "seeded_sameAs_plus": lambda s: match_path(
+        chain_quads(s), E + "n0", f"<{SAME_AS}>+", "?x"),
+    "update_3op": lambda s: update(chain_quads(s), UPDATE_3OP),
+}
+
+
+def _cached_rdds(spark):
+    return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+
+
+@pytest.mark.parametrize("name", sorted(CALLS))
+def test_loop_releases_superseded_checkpoints(spark, name):
+    before = _cached_rdds(spark)
+    out = CALLS[name](spark)
+    assert out.count() > 0
+    # the result itself may be one live checkpoint; nothing else stays
+    assert _cached_rdds(spark) - before <= 1, name
+
+
+def test_frontier_rounds_cap_and_conf_restore(spark):
+    edges = chain_edges(spark, hops=6)
+    key = "spark.sql.constraintPropagation.enabled"
+    prev = spark.conf.get(key)
+
+    def step(frontier, seen, _):
+        return (frontier.join(edges, frontier.node == edges.src)
+                .select(F.col("dst").alias("node"))
+                .join(seen, "node", "left_anti"))
+
+    start = spark.createDataFrame([("n0",)], ["node"])
+    full = frontier_rounds(start, step)
+    capped = frontier_rounds(start, step, max_rounds=2)
+    assert sorted(r.node for r in full.collect()) == \
+        [f"n{i}" for i in range(7)]
+    assert sorted(r.node for r in capped.collect()) == ["n0", "n1", "n2"]
+    assert spark.conf.get(key) == prev   # the planning guard is undone
+    before = _cached_rdds(spark)
+    release(full)
+    release(capped)
+    assert _cached_rdds(spark) <= before - 2

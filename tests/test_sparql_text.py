@@ -375,6 +375,22 @@ def test_describe_follows_bnodes(quads):
     assert {r.s for r in byvar.collect()} == {E + "b"}
 
 
+def test_describe_follows_long_rdf_list(spark):
+    """The bnode closure runs to its fixpoint: a 12-item rdf:list is
+    described to its end (1 + 12×2 quads; an 8-round cap returned 17)."""
+    rdf = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
+    rows = [(None, E + "L", False, V + "items", "bnode", "_:l0", None, None)]
+    for i in range(12):
+        rest = f"_:l{i + 1}" if i < 11 else rdf + "nil"
+        rows += [(None, f"_:l{i}", True, rdf + "first", "literal", f"i{i}",
+                  None, None),
+                 (None, f"_:l{i}", True, rdf + "rest",
+                  "bnode" if i < 11 else "iri", rest, None, None)]
+    df = spark.createDataFrame(rows, SCHEMA)
+    out = sparql(df, PFX + "DESCRIBE e:L")
+    assert len(vals(out, "s", "p", "o_value")) == 25
+
+
 def test_describe_unbound_var_errors(quads):
     with pytest.raises(SparqlError, match="not bound"):
         sparql(quads, PFX + "DESCRIBE ?zz WHERE { ?x v:name ?n }")

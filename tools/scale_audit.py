@@ -118,8 +118,10 @@ Why each stage survives 1000×:
 - **SPARQL Update is set algebra on the quad key**: deletes are
   null-safe ANTI equi-joins (SortMergeJoin/broadcast, AQE-sized),
   inserts anti-joined unions — both shuffle on the same 7-column quad
-  identity the dedup stage already uses; a ;-sequence stays one lazy
-  plan and the result is simply the next table version to write back.
+  identity the dedup stage already uses; each op of a ;-sequence is
+  eagerly localCheckpoint-ed and the previous op's checkpoint freed,
+  so a request holds one store copy, and the result is simply the
+  next table version to write back.
 - **Framing / canonical hashing are per-document** (narrow Arrow
   stages, zero shuffle): graph-level dedup joins on the RDFC-1.0
   canonical sha256 — an 8-byte-ish key groupBy, never pairwise
@@ -127,8 +129,9 @@ Why each stage survives 1000×:
   into per-row errors instead of runaway tasks.
 - **Graph analytics iterate on the edge set, never the quad table**:
   PageRank/label-propagation are one key-partitioned join + hash agg
-  per fixed round with localCheckpoint/unpersist (storage O(1)
-  rounds); the triangle census orients edges by degree first, so wedge
+  per fixed round, checkpointed each round with the previous one
+  freed by operators/rounds.release (storage O(1) rounds); the
+  triangle census orients edges by degree first, so wedge
   volume is Σ out_deg² ≤ m^1.5 — a celebrity node contributes ~zero
   out-wedges. Driver state per round: one scalar.
 - **Curation/scoring stages are pure functions of (id, seed)**:
