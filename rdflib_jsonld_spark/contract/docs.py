@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, functions as F
 from rdflib_jsonld_spark.operators import dedup, multimodal, similarity
 from rdflib_jsonld_spark.operators.textstats import (
     STOPWORDS, with_lang_id, with_quality_score, with_token_counts)
+from rdflib_jsonld_spark.plans.driver import local_frame
 from rdflib_jsonld_spark.sources import transcripts as tr
 
 from rdflib_jsonld_spark.contract.common import _t
@@ -145,7 +146,7 @@ def q_doc_clf_train(spark, sf_dir) -> DataFrame:
                                       lr=1.0, n_rounds=5)
     rows = [(-1, round(float(bias), 6))] + \
         [(b, round(float(wb), 6)) for b, wb in enumerate(w)]
-    return spark.createDataFrame(rows, "bucket long, weight double") \
+    return local_frame(spark, rows, "bucket long, weight double") \
         .orderBy("bucket")
 
 
@@ -304,10 +305,10 @@ def q_kg_ifp_sameas(spark, sf_dir) -> DataFrame:
         "predicates": [
             {"predicate": ex + "nationKey",
              "template": ex + "nation/{c_nationkey}"}]})
-    decl = spark.createDataFrame(
-        [(None, ex + "nationKey", False, _RT, "iri",
-          OWL + "InverseFunctionalProperty", None, None,
-          "decl", 0)], quads.schema)
+    decl = local_frame(
+        spark, [(None, ex + "nationKey", False, _RT, "iri",
+                 OWL + "InverseFunctionalProperty", None, None,
+                 "decl", 0)], quads.schema)
     pairs = owl_sameas_rules(quads.unionByName(decl))
     # group pairs by the shared nation (recoverable from either member)
     return (pairs

@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from rdflib_jsonld_spark.operators.linking import (
     canonical_mapping, entity_mention_counts, mention_edges)
+from rdflib_jsonld_spark.plans.driver import local_frame
 from rdflib_jsonld_spark.sources.doc_transcripts import documents_as_transcripts
 from rdflib_jsonld_spark.sources import transcripts as tr
 
@@ -452,7 +453,7 @@ def q_kg_owl_property_closure(spark, sf_dir) -> DataFrame:
         OWL, RDF_TYPE as _RT, owl_property_closure)
     quads = shared_doc_quads(spark, sf_dir)
     vocab = KG + "vocab#"
-    decl = spark.createDataFrame([
+    decl = local_frame(spark, [
         (None, vocab + "about", False, OWL + "inverseOf", "iri",
          vocab + "aboutOf", None, None),
         (None, _OWL_SAMEAS, False, _RT, "iri",

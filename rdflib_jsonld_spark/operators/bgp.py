@@ -31,6 +31,7 @@ import re
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..plans.driver import local_frame
 from .expand import CORE_SCHEMA, QUAD_KEY_COLS
 
 XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
@@ -560,7 +561,8 @@ def match_bgp_extended(quads: DataFrame,
         companions |= set(_companion_cols(df.columns))
     if values is not None:
         var_names, rows = values
-        vdf = quads.sparkSession.createDataFrame(
+        vdf = local_frame(
+            quads.sparkSession,
             [tuple(r) if isinstance(r, (tuple, list)) else (r,)
              for r in rows], list(var_names))
         shared = sorted(bound & set(var_names))
@@ -829,5 +831,5 @@ def instantiate_template(sols: DataFrame,
     if out is None:
         # every template triple was statically invalid (typed-literal
         # subject/predicate) — an empty quad table
-        return sols.sparkSession.createDataFrame([], schema=CORE_SCHEMA)
+        return local_frame(sols.sparkSession, [], CORE_SCHEMA)
     return out.dropDuplicates(QUAD_KEY_COLS)

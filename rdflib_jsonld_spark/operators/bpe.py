@@ -24,6 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from ..plans.driver import local_frame
 from .rounds import release
 
 
@@ -120,7 +121,7 @@ def learn_bpe_batched(docs: DataFrame, n_rounds: int = 2,
         T.StructField("merged", T.StringType(), False),
         T.StructField("pair_count", T.LongType(), False),
     ])
-    return spark.createDataFrame(merges, schema)
+    return local_frame(spark, merges, schema)
 
 
 def learn_bpe_merges(docs: DataFrame, n_merges: int = 8,

@@ -22,10 +22,9 @@ concern, and here it is a PURE NARROW PROJECTION:
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, functions as F
 
+from ..plans.driver import local_frame
 from .search import TOKEN_SPLIT
 
 #: Weight tables above this ship as a broadcast-joined (bucket, weight)
@@ -48,12 +47,8 @@ def _weights_df(spark, weights, n_buckets: int) -> DataFrame:
     list; zero weights are dropped — absent buckets read as 0."""
     items = (enumerate(weights) if isinstance(weights, list)
              else weights.items())
-    pdf = pd.DataFrame([(int(b), float(v)) for b, v in items if v != 0.0],
-                       columns=["_b", "_w"])
-    if pdf.empty:
-        pdf = pd.DataFrame({"_b": pd.array([0], dtype="int64"),
-                            "_w": [0.0]})
-    return spark.createDataFrame(pdf)
+    rows = [(int(b), float(v)) for b, v in items if v != 0.0]
+    return local_frame(spark, rows or [(0, 0.0)], "_b long, _w double")
 
 
 def linear_text_classifier(docs: DataFrame, weights: dict[int, float],

@@ -37,6 +37,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..plans.driver import local_frame
 from .linking import transitive_closure
 from .expand import QUAD_KEY_COLS
 from .update import _anti_on_key, _conform
@@ -316,7 +317,7 @@ def owl_sameas_rules(quads: DataFrame) -> DataFrame:
         & (F.col("o_value") == OWL + "InverseFunctionalProperty"))
         .select("s").distinct().collect()]
     spark = quads.sparkSession
-    empty = spark.createDataFrame([], "src string, dst string")
+    empty = local_frame(spark, [], "src string, dst string")
     outs: list[DataFrame] = []
     for p in fp:
         vals = (quads.where((F.col("p") == p)

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from rdflib_jsonld_spark.plans.driver import local_frame
 from rdflib_jsonld_spark.sources.registry import OWL_SAMEAS, VOCAB
 from .rounds import release
 
@@ -161,9 +162,8 @@ def connected_components(edges: DataFrame,
     if not probe:
         return e.select(F.col("src").alias("node"), F.col("dst").alias("root"))
     if len(probe) <= driver_threshold:
-        spark = edges.sparkSession
         pairs = _driver_union_find([(r.src, r.dst) for r in probe])
-        return spark.createDataFrame(pairs, ["node", "root"])
+        return local_frame(edges.sparkSession, pairs, ["node", "root"])
     cur, prev_sig = e, None
     while True:
         nxt = _small_star(_large_star(cur)).localCheckpoint(eager=True)

@@ -35,6 +35,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from ..plans.driver import local_frame
+
 MEDIA_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType(), False),
     T.StructField("kind", T.StringType(), False),       # image|audio|video
@@ -352,4 +354,4 @@ def synthetic_media_df(spark, n: int = 64, seed: int = 42) -> DataFrame:
             w_, h_, dur = 12, 12, (5 + i % 4) * 40
         rows.append((i, kind, f"application/x-{kind}", payload,
                      w_, h_, dur))
-    return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)

@@ -57,6 +57,7 @@ import re
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..plans.driver import local_frame
 from .linking import transitive_closure
 from .rounds import frontier_rounds, release
 
@@ -494,12 +495,12 @@ def match_path(quads: DataFrame, subj: str, path: tuple | str, obj: str,
     subj_alts = None if s_var else _const_alts(subj)
     obj_alts = None if o_var else _const_alts(obj)
     if not s_var:
-        seeds = quads.sparkSession.createDataFrame(
-            [(a,) for a in subj_alts], ["src"])
+        seeds = local_frame(quads.sparkSession,
+                            [(a,) for a in subj_alts], "src string")
         pairs = eval_path_from(quads, path, seeds, graph)
     elif not o_var:
-        seeds = quads.sparkSession.createDataFrame(
-            [(a,) for a in obj_alts], ["src"])
+        seeds = local_frame(quads.sparkSession,
+                            [(a,) for a in obj_alts], "src string")
         pairs = eval_path_from(quads, inv(path), seeds, graph) \
             .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     else:

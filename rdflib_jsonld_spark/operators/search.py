@@ -28,6 +28,8 @@ import re
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..plans.driver import local_frame
+
 TOKEN_SPLIT = "[^a-z0-9]+"
 
 
@@ -81,13 +83,11 @@ def bm25_topk(index: DataFrame, query: str, k: int = 10,
     """
     terms = tokenize_query(query)
     if not terms:
-        return index.sparkSession.createDataFrame(
-            [], "doc long, score double")
+        return local_frame(index.sparkSession, [], "doc long, score double")
     if n_docs is None or avgdl is None:
         n_docs, avgdl = corpus_stats(index)
     if n_docs == 0:
-        return index.sparkSession.createDataFrame(
-            [], "doc long, score double")
+        return local_frame(index.sparkSession, [], "doc long, score double")
     hits = index.where(F.col("term").isin(terms)).persist()
     df_ = hits.groupBy("term").agg(
         F.count(F.lit(1)).cast("long").alias("df"))

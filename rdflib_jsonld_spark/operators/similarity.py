@@ -21,6 +21,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from ..plans.driver import local_frame
+
 
 def _cosine_expr(vec_col, qvec: list[float]):
     """cos(v, q) via JVM-side higher-order functions (no Python)."""
@@ -291,8 +293,7 @@ def ivf_topk_multi(embeddings: DataFrame, queries: DataFrame, k: int = 10,
         order = (((centroids - qv[None, :]) ** 2).sum(axis=1)) \
             .argsort()[:n_probe]
         probe_pairs.extend((int(r[0]), int(c)) for c in order)
-    probe = spark.createDataFrame(probe_pairs,
-                                  "query_id long, cluster int")
+    probe = local_frame(spark, probe_pairs, "query_id long, cluster int")
     cand = (assigns.join(F.broadcast(probe), "cluster")
             .select("query_id", id_col))
     e = embeddings.select(F.col(id_col).alias("nbr_id"),

@@ -92,6 +92,7 @@ from pyspark.sql import DataFrame, functions as F
 from .bgp import (TK_PREFIX, TYPED_PREFIX, _companion_cols, _is_var,
                   decode_literal, encode_literal, instantiate_template,
                   match_bgp, patch_companion_refs, term_key_of)
+from ..plans.driver import local_frame
 from .paths import match_path
 from .rounds import frontier_rounds
 from .solutions import select_solutions
@@ -3063,7 +3064,7 @@ def _merge_values(acc: DataFrame | None, names: list[str],
                     row += [cell, "iri", None, None, "iri"]
         data.append(tuple(row))
     schema = ", ".join(f"`{c}` string" for c in cols)
-    vdf = spark.createDataFrame(data or [], schema)
+    vdf = local_frame(spark, data, schema)
     if acc is None:
         return vdf
     shared = [n for n in names if n in acc.columns]
@@ -3553,8 +3554,8 @@ def sparql(quads: DataFrame, query: str, *, stats: dict | None = None,
         spark = quads.sparkSession
         parts = []
         if consts:
-            parts.append(spark.createDataFrame([(c,) for c in consts],
-                                               ["node"]))
+            parts.append(local_frame(spark, [(c,) for c in consts],
+                                     "node string"))
         for v in var_terms:
             if v not in sols.columns:
                 raise SparqlError(f"DESCRIBE variable ?{v} is not bound "

@@ -4,7 +4,8 @@
 operations and returns a NEW quad DataFrame (the next snapshot of the
 store). Nothing mutates: each operation is pure set algebra over the
 input — a deletion is a null-safe anti-join on the quad identity key,
-an insertion is an anti-joined union — each op a Catalyst plan that
+an insertion is an anti-joined union (INSERT DATA and LOAD rows made
+distinct on that key first) — each op a Catalyst plan that
 AQE sizes at runtime, its result checkpointed before the next op reads
 it (see :func:`update`), and at warehouse scale the result is simply
 what gets written back as the next table version.
@@ -55,6 +56,7 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..plans.driver import local_frame
 from .bgp import instantiate_template
 from .expand import CORE_SCHEMA, QUAD_KEY_COLS
 from .rounds import release
@@ -383,10 +385,6 @@ def _conform(df: DataFrame, like: DataFrame) -> DataFrame:
     return df.select(*[f.name for f in like.schema.fields])
 
 
-_RDF_LANGSTRING = ("http://www.w3.org/1999/02/22-rdf-syntax-ns#"
-                   "langString")
-
-
 def _key_col(df: DataFrame, c: str):
     """Quad-identity expression for one key column — RDF 1.1 TERM
     identity, not storage spelling (sweep 39): a plain literal ≡
@@ -405,14 +403,36 @@ def _key_col(df: DataFrame, c: str):
 
 def _anti_on_key(base: DataFrame, other: DataFrame) -> DataFrame:
     """base ∖ other on the quad identity key — null-safe equi-join
-    (still a hash join), right side deduped and renamed so the anti
-    never self-references."""
-    d = other.select(
-        *[F.col(c).alias(f"__u_{c}") for c in QUAD_KEY_COLS]).dropDuplicates()
+    (still a hash join), right side renamed so the anti never
+    self-references. The right side is not deduplicated: an anti-join
+    does not depend on its multiplicity, and for an insertion it is
+    the whole store."""
+    d = other.select(*[F.col(c).alias(f"__u_{c}") for c in QUAD_KEY_COLS])
     cond = reduce(lambda a, b: a & b,
                   [_key_col(base, c).eqNullSafe(
                       _key_col(d, f"__u_{c}")) for c in QUAD_KEY_COLS])
     return base.join(d, cond, "left_anti")
+
+
+def _data_key(row: tuple) -> tuple:
+    """:func:`_key_col` over one parsed DATA row ``(g, s, p, o_kind,
+    o_value, o_datatype, o_lang)``."""
+    *head, dt, lang = row
+    if dt in (XSD + "string", _RDF_LANGSTRING):
+        dt = None
+    return (*head, dt, lang.lower() if lang else lang)
+
+
+def _distinct_on_key(df: DataFrame) -> DataFrame:
+    """One row per quad identity (the :func:`_key_col` key), so a LOAD
+    never stores one term twice: a quad repeated in the file, or
+    spelled twice (``"v"@EN`` / ``"v"@en``, plain / ``xsd:string``).
+    The kept row is the least of its group, which makes the stored
+    spelling deterministic."""
+    keys = [_key_col(df, c).alias(f"__k_{c}") for c in QUAD_KEY_COLS]
+    return (df.groupBy(*keys)
+            .agg(F.min(F.struct(*df.columns)).alias("__row"))
+            .select("__row.*"))
 
 
 def _instantiate_quads(sols: DataFrame, tmpl: list[tuple],
@@ -444,7 +464,10 @@ def update(quads: DataFrame, text: str, *,
     """Apply a SPARQL Update request to a quad table, returning the new
     quad table (input columns preserved; inserted rows carry NULL in
     non-quad columns). Operations in a ``;``-sequence apply in order,
-    each over the previous result.
+    each over the previous result. The result is a set on the quad
+    identity key: INSERT DATA keeps the first spelling of a quad
+    repeated in its block (``"v"@EN`` and ``"v"@en`` are one term),
+    LOAD the least, and neither stores a quad the store already has.
 
     Each mutating op's result store is eagerly ``localCheckpoint``-ed
     before the next op reads it, and ``rounds.release`` frees the
@@ -522,13 +545,19 @@ def update(quads: DataFrame, text: str, *,
                 loaded = read_nquads(spark, path)
             if op[2] is not None:
                 loaded = loaded.withColumn("g", F.lit(op[2]))
-            cur = _materialize(
-                cur.unionByName(_anti_on_key(_conform(loaded, cur), cur)))
+            fresh = _anti_on_key(_distinct_on_key(_conform(loaded, cur)),
+                                 cur)
+            cur = _materialize(cur.unionByName(fresh))
         elif kind in ("insert_data", "delete_data"):
-            rows = spark.createDataFrame(
-                [(g, s, s.startswith("_:"), p, k, v, dt, lang)
-                 for g, s, p, k, v, dt, lang in op[1]],
-                schema=CORE_SCHEMA)
+            # one row per quad identity, first spelling kept: a quad
+            # repeated in the block is inserted once
+            uniq: dict[tuple, tuple] = {}
+            for q in op[1]:
+                uniq.setdefault(_data_key(q), q)
+            rows = local_frame(
+                spark, [(g, s, s.startswith("_:"), p, k, v, dt, lang)
+                        for g, s, p, k, v, dt, lang in uniq.values()],
+                CORE_SCHEMA)
             if kind == "insert_data":
                 fresh = _anti_on_key(_conform(rows, cur), cur)
                 cur = _materialize(cur.unionByName(fresh))

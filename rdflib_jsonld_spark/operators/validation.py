@@ -59,6 +59,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..plans.driver import local_frame
+
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 _XSD = "http://www.w3.org/2001/XMLSchema#"
 #: datatypes SPARQL's numeric operator mapping covers ([spec] SPARQL 1.1
@@ -117,9 +119,9 @@ def _focus_nodes(quads: DataFrame, shape: dict) -> DataFrame:
         return (quads.where(F.col("p") == shape["target_subjects_of"])
                 .select(F.col("s").alias("focus")).distinct())
     if "target_node" in shape:
-        spark = quads.sparkSession
-        return spark.createDataFrame(
-            [(n,) for n in shape["target_node"]], "focus string")
+        return local_frame(quads.sparkSession,
+                           [(n,) for n in shape["target_node"]],
+                           "focus string")
     raise ValueError(f"shape {shape.get('id')}: needs target_class / "
                      f"target_subjects_of / target_node")
 
@@ -323,7 +325,7 @@ def validate(quads: DataFrame, shapes: list[dict]) -> DataFrame:
                 F.lit("closed").alias("constraint"), "value"))
 
     if out is None:
-        return spark.createDataFrame(
-            [], "shape_id string, focus string, path string, "
+        return local_frame(
+            spark, [], "shape_id string, focus string, path string, "
                 "constraint string, value string")
     return out

@@ -28,9 +28,19 @@ import shutil
 import time
 from typing import Callable
 
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import (DataFrame, Observation, SparkSession, functions as F,
+                         types as T)
 
-from rdflib_jsonld_spark.operators.expand import ERROR_SUBJECT, drop_error_rows
+from rdflib_jsonld_spark.operators.expand import (
+    ERROR_SUBJECT, QUAD_SCHEMA, drop_error_rows)
+from rdflib_jsonld_spark.plans.driver import local_frame
+
+#: The graph table's one schema: :data:`QUAD_SCHEMA` plus the
+#: ``s_bucket`` partition column, typed as Parquet schema inference types
+#: a :func:`write_quads` table (every column nullable, the bucket an int).
+GRAPH_SCHEMA = T.StructType(
+    [T.StructField(f.name, f.dataType, True) for f in QUAD_SCHEMA.fields]
+    + [T.StructField("s_bucket", T.IntegerType(), True)])
 
 _QUAD_HASH = ("xxhash64(coalesce(g,''), s, p, o_kind, o_value, coalesce("
               "o_datatype,''), coalesce(o_lang,''), conv_id, turn_idx)")
@@ -43,8 +53,15 @@ def quad_checksum(quads: DataFrame) -> int:
 
 
 def read_graph(spark: SparkSession, path: str) -> DataFrame:
-    """Read a bucket(s)-partitioned graph table written by write_quads."""
-    return spark.read.parquet(path)
+    """Read a bucket(s)-partitioned graph table written by
+    :func:`write_quads`, with :data:`GRAPH_SCHEMA`.
+
+    The schema is given, not inferred: ``spark.read.parquet(path)``
+    alone runs one Spark job per call to read Parquet footers, and
+    cannot read a table that an update emptied (only ``_SUCCESS`` left).
+    With the schema the read starts no job and an empty table reads
+    back as 0 rows."""
+    return spark.read.schema(GRAPH_SCHEMA).parquet(path)
 
 
 def lookup_subjects(spark: SparkSession, path: str, subjects: list[str],
@@ -54,8 +71,7 @@ def lookup_subjects(spark: SparkSession, path: str, subjects: list[str],
     so only |distinct buckets| directories are scanned (the Iceberg
     bucket-transform pruning pattern; at 10^12 quads this is the
     difference between touching 1/32 of the table and all of it)."""
-    from pyspark.sql import Row
-    probe = spark.createDataFrame([Row(s=s) for s in subjects]) \
+    probe = local_frame(spark, [(s,) for s in subjects], "s string") \
         .withColumn("s_bucket", F.pmod(F.xxhash64("s"), F.lit(n_buckets)))
     buckets = [r.s_bucket for r in probe.select("s_bucket").distinct().collect()]
     g = read_graph(spark, path)
@@ -67,9 +83,15 @@ def write_quads(quads: DataFrame, path: str, n_buckets: int = 32) -> None:
     """Final graph table: directory-partitioned by subject hash bucket —
     the stand-in for Iceberg ``bucket(n, s)`` partition transforms
     (SURVEY.md §3.4 shuffle 4). Predicate-bucket layout would be the same
-    writer with p."""
+    writer with p.
+
+    Writes exactly the :data:`GRAPH_SCHEMA` columns, cast to its types
+    (an ``s_bucket`` already on ``quads``, e.g. from
+    :func:`read_graph`, is recomputed), so :func:`read_graph` can read
+    the table with that schema."""
     (quads
      .withColumn("s_bucket", F.pmod(F.xxhash64("s"), F.lit(n_buckets)))
+     .select(*[F.col(f.name).cast(f.dataType) for f in GRAPH_SCHEMA])
      .repartition("s_bucket")
      .write.mode("overwrite").partitionBy("s_bucket").parquet(path))
 
@@ -115,7 +137,8 @@ class ResumableQuadWriter:
             slice_path = os.path.join(self.data_dir, f"slice={i}")
             quads.write.mode("overwrite").parquet(slice_path)
             is_quad = F.col("s") != ERROR_SUBJECT
-            n, errs, h = self.spark.read.parquet(slice_path).agg(
+            n, errs, h = self.spark.read.schema(quads.schema) \
+                .parquet(slice_path).agg(
                 F.count(F.when(is_quad, 1)), F.sum("_kg_errors"),
                 F.bit_xor(F.when(is_quad, F.expr(_QUAD_HASH)))).first()
             rows_in = seen.get["n"]

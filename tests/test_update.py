@@ -110,6 +110,60 @@ def test_insert_data_and_set_semantics(quads):
     assert out.where(F.col("conv_id").isNull()).count() == 2
 
 
+def test_insert_repeated_quad_stored_once(quads):
+    """INSERT DATA stores a quad repeated in its block once, also when
+    the repeat differs only in language-tag case or in an explicit
+    ``xsd:string`` (the identity DELETE uses)."""
+    n = quads.count()
+    twice = update(quads, PFX + 'INSERT DATA { e:z v:p "v" . e:z v:p "v" }')
+    assert twice.count() == n + 1
+    typed = update(quads, PFX + 'INSERT DATA { e:z v:p "v" . e:z v:p '
+                   f'"v"^^<{XSD}string> }}')
+    assert typed.count() == n + 1
+    cased = update(quads, PFX + 'INSERT DATA { e:z v:p "v"@EN . '
+                                'e:z v:p "v"@en }')
+    assert [r.o_lang for r in cased.where(F.col("s") == E + "z")
+            .collect()] == ["en"]
+    assert update(cased, PFX + 'DELETE DATA { e:z v:p "v"@en }').count() \
+        == n
+
+
+def test_load_repeated_quad_stored_once(quads, tmp_path):
+    """LOAD stores a quad repeated in its file once, also when the
+    repeat differs only in language-tag case."""
+    n = quads.count()
+    nq = tmp_path / "repeat.nq"
+    nq.write_text(f'<{E}n> <{V}name> "New" .\n' * 2
+                  + f'<{E}n> <{V}p> "v"@en .\n<{E}n> <{V}p> "v"@EN .\n')
+    out = update(quads, f"LOAD <file://{nq}>")
+    assert out.count() == n + 2
+    assert [r.o_lang for r in out.where(F.col("p") == V + "p")
+            .collect()] == ["en"]
+
+
+def test_emptied_graph_reads_back_empty(quads, tmp_path):
+    """A graph table that CLEAR ALL emptied holds no data file, only
+    ``_SUCCESS``; it reads back as 0 rows with the graph schema."""
+    from rdflib_jsonld_spark.sources.quads_io import read_graph, write_quads
+    path = str(tmp_path / "graph")
+    write_quads(update(quads, "CLEAR ALL"), path, n_buckets=4)
+    back = read_graph(quads.sparkSession, path)
+    assert back.count() == 0
+    assert back.columns == quads.columns + ["s_bucket"]
+
+
+def test_anti_join_does_not_aggregate_store(quads):
+    """An insert anti-joins its rows against the whole store; the store
+    side is not deduplicated (an anti-join ignores its multiplicity),
+    so the plan has no Aggregate over it."""
+    from rdflib_jsonld_spark.operators.update import _anti_on_key
+    small = quads.limit(1)
+    plan = _anti_on_key(small, quads)._jdf.queryExecution() \
+        .optimizedPlan().toString()
+    assert "Aggregate" not in plan
+    assert "LeftAnti" in plan
+
+
 def test_delete_data_exact_identity(quads):
     # datatype must match the stored quad exactly
     miss = update(quads, PFX + 'DELETE DATA { e:a v:name "Alice" }')
