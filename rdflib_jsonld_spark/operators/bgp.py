@@ -21,8 +21,13 @@ when ``stats`` are supplied, connectivity-aware so no accidental cross
 joins) — exactly the static ordering a triple store would pick; pass
 ``optimize=False`` to keep author order. Variables bind the string form
 of terms (bnodes keep ``_:``); object bindings also carry hidden
-``<var>__kind/__datatype/__lang`` companions when ``with_types=True`` so
-CONSTRUCT can re-emit values with their original typing.
+``__typ_<var>__kind/__datatype/__lang`` companions when
+``with_types=True`` so CONSTRUCT can re-emit values with their original
+typing, and ``__tk_<var>`` term keys join as terms, not lexical forms.
+
+``match_bgp_extended`` (OPTIONAL / UNION / VALUES / FILTER / NOT EXISTS
+/ MINUS as keyword arguments) only builds a group graph pattern: the
+group algebra lives once, in ``sparql._eval_group``.
 """
 
 from __future__ import annotations
@@ -31,10 +36,12 @@ import re
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..jsonld.keys import RDF_LANGSTRING, XSD_STRING
 from ..plans.driver import local_frame
 from .expand import CORE_SCHEMA, QUAD_KEY_COLS
 
-XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
+#: a scheme prefix: the kwargs surface reads such a bare string as an IRI
+IRI_SHAPE = re.compile(r"[A-Za-z][A-Za-z0-9+.-]*:")
 
 
 def _is_var(x: str) -> bool:
@@ -106,7 +113,7 @@ def term_key_col(kind, dt, lang):
                             F.when(lang.isNotNull(),
                                    F.concat(F.lit("@"), F.lower(lang)))
                             .otherwise(F.coalesce(
-                                dt, F.lit(_XSD_STRING)))))
+                                dt, F.lit(XSD_STRING)))))
             .otherwise(kind))
 
 
@@ -116,7 +123,7 @@ def term_key_of(kind: str, dt: str | None, lang: str | None) -> str:
         return kind
     if lang:
         return "L@" + lang.lower()
-    return "L" + (dt or _XSD_STRING)
+    return "L" + (dt or XSD_STRING)
 
 
 def _shape_key_col(value):
@@ -127,9 +134,6 @@ def _shape_key_col(value):
 
 _ENC_LIT_RE = re.compile(
     r'^"((?:[^"\\]|\\.)*)"(?:@([A-Za-z0-9-]+)|\^\^(\S+))?$', re.S)
-_XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
-_RDF_LANGSTRING = ("http://www.w3.org/1999/02/22-rdf-syntax-ns#"
-                   "langString")
 
 
 def encode_literal(value: str, lang: str | None = None,
@@ -160,20 +164,19 @@ def decode_literal(term: str) -> tuple | None:
     return json.loads('"' + m.group(1) + '"'), m.group(2), m.group(3)
 
 
-def _encoded_literal_filter(df: DataFrame, lit: tuple) -> DataFrame:
-    """Exact-term match for an encoded literal constant: value, kind,
-    and lang (case-insensitive) / datatype (xsd:string ≡ plain)."""
-    value, lang, dt = lit
-    df = df.where((F.col("o_value") == value)
-                  & (F.col("o_kind") == "literal"))
-    if lang:
-        df = df.where(F.lower(F.col("o_lang")) == lang.lower())
-    else:
-        df = df.where(F.col("o_lang").isNull()
-                      & (F.coalesce(F.col("o_datatype"),
-                                    F.lit(_XSD_STRING))
-                         == (dt or _XSD_STRING)))
-    return df
+def _encoded_literal_filter(df: DataFrame, lit: tuple, kind: str = "o_kind",
+                            value: str = "o_value", dt: str = "o_datatype",
+                            lang: str = "o_lang") -> DataFrame:
+    """Exact-term match for an encoded literal constant over the named
+    kind/value/datatype/lang columns: value, kind, and lang
+    (case-insensitive) / datatype (xsd:string ≡ plain)."""
+    lex, lit_lang, lit_dt = lit
+    df = df.where((F.col(value) == lex) & (F.col(kind) == "literal"))
+    if lit_lang:
+        return df.where(F.lower(F.col(lang)) == lit_lang.lower())
+    return df.where(F.col(lang).isNull()
+                    & (F.coalesce(F.col(dt), F.lit(XSD_STRING))
+                       == (lit_dt or XSD_STRING)))
 
 
 def _pattern_df(quads: DataFrame, i: int, s: str, p: str, o: str,
@@ -268,16 +271,8 @@ def _pattern_df(quads: DataFrame, i: int, s: str, p: str, o: str,
         else:
             lit = decode_literal(io)
             if lit is not None:
-                lex, lang, dt = lit
-                df = df.where((F.col(qov_c) == lex)
-                              & (F.col(qok_c) == "literal"))
-                if lang:
-                    df = df.where(F.lower(F.col(qol_c)) == lang.lower())
-                else:
-                    df = df.where(
-                        F.col(qol_c).isNull()
-                        & (F.coalesce(F.col(qod_c), F.lit(_XSD_STRING))
-                           == (dt or _XSD_STRING)))
+                df = _encoded_literal_filter(df, lit, qok_c, qov_c, qod_c,
+                                             qol_c)
             else:
                 df = df.where(F.col(qov_c) == io)
 
@@ -481,6 +476,16 @@ def match_bgp(quads: DataFrame, patterns: list[tuple[str, str, str]],
     return acc
 
 
+def _values_cell(cell: str | None) -> str | None:
+    """A kwargs VALUES cell as an engine term spelling: ``None`` (UNDEF),
+    an encoded literal, a ``_:`` label or an IRI-shaped string stays as
+    it is; any other bare string is a plain literal."""
+    if cell is None or cell.startswith("_:") or IRI_SHAPE.match(cell) \
+            or decode_literal(cell) is not None:
+        return cell
+    return encode_literal(cell)
+
+
 def match_bgp_extended(quads: DataFrame,
                        patterns: list[tuple[str, str, str]],
                        optional: list[tuple[str, str, str]] | None = None,
@@ -490,102 +495,75 @@ def match_bgp_extended(quads: DataFrame,
                        not_exists: list[tuple[str, str, str]] | None = None,
                        minus: list[tuple[str, str, str]] | None = None,
                        distinct: bool = True,
-                       optimize: bool = True,
                        stats: dict[str, int] | None = None,
                        with_types: bool = False,
                        graph: str | None = None) -> DataFrame:
     """BGP + the SPARQL constructs a graph user reaches for beyond
-    conjunction, each mapped to its natural Spark join:
+    conjunction, as keyword arguments. They build one group graph
+    pattern, evaluated by the SPARQL group evaluator
+    (``sparql._eval_group``), so answers follow the spec's solution
+    compatibility ([spec] §18.3): terms join as terms, and an unbound
+    variable is compatible with any value.
 
-    - ``optional``: patterns LEFT-joined on their shared variables —
-      unmatched rows keep NULL bindings (SPARQL OPTIONAL semantics for
-      the non-correlated common case);
-    - ``filters``: SQL boolean expressions over the bound variable
-      columns (SPARQL FILTER), e.g. ``"conf > 0.5"`` — applied after all
-      joins so they can reference optional bindings (checked with
-      ``IS NOT NULL`` like SPARQL's bound());
-    - ``union``: alternative pattern groups — ``{patterns} UNION {g}``
-      for each group ``g``. Solution sets are combined with
-      ``unionByName(allowMissingColumns=True)``: variables unbound in a
-      branch are NULL-padded, exactly SPARQL's unbound semantics;
-    - ``values``: inline solution bindings ``(var_names, rows)`` —
-      SPARQL VALUES. Joined (inner) on the variables already bound;
-      variables new to the query attach via the bindings themselves. A
-      small driver-side literal table → Catalyst broadcasts it;
-    - ``not_exists``: FILTER NOT EXISTS group — drop solutions for which
-      the group matches with the shared variables substituted. Shared
-      vars → ``left_anti`` equi-join; NO shared vars → the group acts as
-      a global gate (any match empties the result), expressed as a
-      constant-true anti-join against ``limit(1)`` of the group;
-    - ``minus``: SPARQL MINUS group. Like NOT EXISTS on the shared
-      variables, EXCEPT that with no shared variables MINUS removes
-      nothing (the spec's domain-disjointness rule — the observable
-      difference between the two negation forms). NULL bindings (from
-      OPTIONAL) never match the anti-join key, mirroring MINUS's
-      treatment of unbound-vs-bound incompatibility for the common case.
+    - ``optional``: each pattern is its own ``OPTIONAL { pattern }``; a
+      pattern sharing no variable with the ones before it raises
+      ValueError;
+    - ``filters``: SQL boolean expressions over the variable columns
+      (SPARQL FILTER), e.g. ``"conf > 0.5"``, applied over the whole
+      group, so they can test optional bindings with ``IS NOT NULL``;
+    - ``union``: alternative pattern groups, ``{patterns} UNION {g}``
+      for each group ``g``; a variable missing from a branch is unbound
+      (NULL) in that branch's rows;
+    - ``values``: inline bindings ``(var_names, rows)`` (SPARQL VALUES).
+      A cell is an IRI, a ``_:`` label, an :func:`encode_literal`
+      spelling or ``None`` (UNDEF); any other bare string is read as a
+      plain literal (``encode_literal(cell)``). A row may be a bare cell
+      when there is one variable;
+    - ``not_exists``: ``FILTER NOT EXISTS { group }``; with no shared
+      variable, any match of the group removes every solution;
+    - ``minus``: ``MINUS { group }``; with no shared variable it removes
+      nothing (the spec's domain-disjointness rule).
 
-    Catalyst still owns join strategy/ordering; filters on required
-    variables are pushed through the joins by the optimizer. Anti-joins
-    broadcast when the negation group is small (AQE decides).
-
-    NULL-binding caveat (documented deviation): a variable that is NULL
-    in a solution (unbound — from a UNION pad or unmatched OPTIONAL)
-    never equals a join key, so OPTIONAL/VALUES joined after UNION and
-    the negation anti-joins treat unbound as NON-matching, whereas
-    SPARQL's compatibility relation treats unbound as compatible with
-    anything. All-bound solutions (every BGP-only query) are exact.
+    ``graph`` scopes every pattern as :func:`match_bgp` does. The result
+    has one column per variable, sorted, plus the sorted ``__typ_*``
+    companions when ``with_types``; ``distinct`` compares terms, not
+    lexical forms.
     """
-    acc = match_bgp(quads, patterns, distinct=False, optimize=optimize,
-                    stats=stats, with_types=with_types, graph=graph)
-    for grp in union or []:
-        alt = match_bgp(quads, grp, distinct=False, optimize=optimize,
-                        stats=stats, with_types=with_types, graph=graph)
-        acc = acc.unionByName(alt, allowMissingColumns=True)
-    companions = set(_companion_cols(acc.columns))
-    bound = set(acc.columns) - companions
-    typed: set[str] | None = (
-        {c[len(TYPED_PREFIX):].rsplit("__", 1)[0] for c in companions}
-        if with_types else None)
-    opt_first = _first_object_binders(optional or []) if with_types else {}
-    for i, (s, p, o) in enumerate(optional or []):
-        capture = with_types and _is_var(o) \
-            and o[1:] not in (typed or set()) and opt_first.get(o[1:]) == i
-        df, vars_i = _pattern_df(quads, 1000 + i, s, p, o, typed,
-                                 capture_types=capture)
-        shared = sorted(bound & vars_i)
-        if not shared:
+    from .sparql import Group, _eval_group
+    elements: list = [("bgp", list(patterns))]
+    if union:
+        elements = [("union", [Group(elements)] + [
+            Group([("bgp", list(g))]) for g in union])]
+    bound = {v for grp in [patterns, *(union or [])] for t in grp
+             for v in _pattern_vars(t)}
+    for i, pat in enumerate(optional or []):
+        if not bound & _pattern_vars(pat):
             raise ValueError(
                 f"optional pattern {i} shares no variable with the BGP")
-        acc = acc.join(df, on=shared, how="left")
-        bound |= vars_i
-        companions |= set(_companion_cols(df.columns))
+        bound |= _pattern_vars(pat)
+        elements.append(("optional", Group([("bgp", [pat])])))
     if values is not None:
-        var_names, rows = values
-        vdf = local_frame(
-            quads.sparkSession,
-            [tuple(r) if isinstance(r, (tuple, list)) else (r,)
-             for r in rows], list(var_names))
-        shared = sorted(bound & set(var_names))
-        acc = acc.join(vdf, on=shared, how="inner") if shared \
-            else acc.crossJoin(vdf)
-        bound |= set(var_names)
-    for group, is_minus in ((not_exists, False), (minus, True)):
-        if not group:
-            continue
-        sub = match_bgp(quads, group, distinct=False, optimize=optimize,
-                        stats=stats, graph=graph)
-        shared = sorted(bound & set(sub.columns))
-        if shared:
-            acc = acc.join(sub.select(*shared), on=shared, how="left_anti")
-        elif not is_minus:
-            # NOT EXISTS with a disconnected group: any match removes
-            # every solution — anti-join on TRUE against one probe row
-            acc = acc.join(sub.limit(1), on=F.lit(True), how="left_anti")
-        # MINUS with no shared variables removes nothing (spec rule)
-    for expr in filters or []:
-        acc = acc.where(F.expr(patch_companion_refs(expr, acc.columns)))
-    acc = acc.select(*sorted(bound), *sorted(companions))
-    return acc.distinct() if distinct else acc
+        names, rows = values
+        elements.append(("values", list(names), [
+            tuple(_values_cell(c) for c in
+                  (r if isinstance(r, (tuple, list)) else (r,)))
+            for r in rows]))
+    if not_exists:
+        elements.append(("exists", Group([("bgp", list(not_exists))]),
+                         False))
+    if minus:
+        elements.append(("minus", Group([("bgp", list(minus))])))
+    elements += [("filter", sql) for sql in filters or []]
+    sols = _eval_group(quads, Group(elements), graph=graph,
+                       with_types=with_types, stats=stats)
+    tks = sorted(c for c in sols.columns if c.startswith(TK_PREFIX))
+    companions = _companion_cols(sols.columns)
+    sols = sols.select(
+        *sorted(set(sols.columns) - set(tks) - set(companions)),
+        *(sorted(companions) if with_types else []), *tks)
+    if distinct:
+        sols = sols.distinct()   # term-level: term keys are in scope
+    return sols.drop(*tks)
 
 
 def construct(quads: DataFrame,
@@ -674,7 +652,7 @@ def _qt_template_col(term: tuple, have: set):
             comps.append(F.lit(sp))
         elif pos.startswith("_:"):
             comps.append(F.lit(pos))
-        elif re.match(r"^[A-Za-z][A-Za-z0-9+.-]*:", pos):
+        elif IRI_SHAPE.match(pos):
             comps.append(F.lit(f"<{pos}>"))
         else:
             esc = (pos.replace("\\", "\\\\").replace('"', '\\"')
@@ -778,7 +756,7 @@ def instantiate_template(sols: DataFrame,
             val, elang, edt = enc
             o_col = F.lit(val)
             kind = F.lit("literal")
-            dt = F.lit(_RDF_LANGSTRING if elang
+            dt = F.lit(RDF_LANGSTRING if elang
                        else (edt or XSD_STRING)).cast("string")
             lang = F.lit(elang).cast("string")
         else:

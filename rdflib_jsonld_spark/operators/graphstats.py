@@ -32,6 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..plans.driver import local_frame
 from .rounds import frontier_rounds, release
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
@@ -119,7 +120,8 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
 
     Wedges (open + closed paths of length 2) come from Σ C(deg, 2), one
     hash aggregate; the global clustering coefficient is 3·triangles /
-    wedges.
+    wedges. The census runs eagerly (one action) and leaves no cached
+    frame behind.
     """
     e = (edges.select(F.least("src", "dst").alias("a"),
                       F.greatest("src", "dst").alias("b"))
@@ -162,7 +164,12 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
                           3.0 * F.col("n_triangles") / F.col("n_wedges"))
                    .otherwise(F.lit(0.0))
                    .alias("clustering_coefficient")))
-    return out
+    # the census is one row: compute it while deg/oriented are cached,
+    # free them, and hand the row back as a LocalRelation
+    row = out.first()
+    deg.unpersist()
+    oriented.unpersist()
+    return local_frame(edges.sparkSession, [row], out.schema)
 
 
 def label_propagation(edges: DataFrame, iterations: int = 5) -> DataFrame:

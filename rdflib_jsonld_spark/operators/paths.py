@@ -36,8 +36,9 @@ Semantics notes ([spec] §9.3 evaluation, §18.4 ALP):
   inverse and mixed member forms (``!^a``, ``!(a|^b)``) desugar at
   parse time via the spec's own algebra translation
   ``alt(NPS(fwd), inv(NPS(rev)))`` ([spec] §18.2.2.3 — sweep 10).
-- terms are compared by their binding string (the engine-wide BGP
-  convention): bnodes as ``_:label``, literals by lexical form.
+- path edges spell their object term exactly (``_enc_obj``: a literal
+  keeps its language tag or datatype, xsd:string ≡ plain), so closure
+  joins and distinct() compare TERMS; bnodes are ``_:label``.
 
 Scale: every combinator is JVM-side column algebra; the only iterative
 piece is the closure, which always runs to its fixpoint (no round cap):
@@ -53,10 +54,9 @@ relations, same posture as transitive_closure.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, functions as F
 
+from ..jsonld.keys import XSD_STRING
 from ..plans.driver import local_frame
 from .linking import transitive_closure
 from .rounds import frontier_rounds, release
@@ -237,9 +237,6 @@ def _scoped(quads: DataFrame, graph: str | None) -> DataFrame:
     return quads.where(F.col("g") == graph)
 
 
-_XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
-
-
 def _enc_obj():
     """Self-describing spelling of the OBJECT term for path edges:
     literals as ``"esc"``, ``"esc"@lang`` (tag lowercased), or
@@ -251,7 +248,7 @@ def _enc_obj():
     esc = F.regexp_replace(F.col("o_value"), r'([\\"])', r'\\$1')
     quoted = F.concat(F.lit('"'), esc, F.lit('"'))
     lang = F.lower(F.col("o_lang"))
-    dt = F.expr(f"nullif(o_datatype, '{_XSD_STRING}')")
+    dt = F.expr(f"nullif(o_datatype, '{XSD_STRING}')")
     lit = (F.when(lang.isNotNull(), F.concat(quoted, F.lit("@"), lang))
            .when(dt.isNotNull(), F.concat(quoted, F.lit("^^"), dt))
            .otherwise(quoted))
@@ -266,7 +263,7 @@ def _enc_const(value: str, lang: str | None = None,
     body = value.replace("\\", "\\\\").replace('"', '\\"')
     if lang:
         return f'"{body}"@{lang.lower()}'
-    if dt and dt != _XSD_STRING:
+    if dt and dt != XSD_STRING:
         return f'"{body}"^^{dt}'
     return f'"{body}"'
 
@@ -278,12 +275,11 @@ def _const_alts(term: str) -> list[str]:
     ``_:`` bare constant stays bare; a bare NON-IRI-shaped constant
     (kwargs surface's plain-literal convention) seeds both its bare
     and plain-literal spellings."""
-    from .bgp import decode_literal
+    from .bgp import IRI_SHAPE, decode_literal
     lit = decode_literal(term)
     if lit is not None:
         return [_enc_const(*lit)]
-    if term.startswith("_:") \
-            or re.match(r"[A-Za-z][A-Za-z0-9+.-]*:", term):
+    if term.startswith("_:") or IRI_SHAPE.match(term):
         return [term]
     return [term, _enc_const(term)]
 
@@ -347,25 +343,10 @@ def eval_path(quads: DataFrame, path: tuple,
         inner = eval_path(quads, path[1], graph)
         return inner.select(F.col("dst").alias("src"),
                             F.col("src").alias("dst"))
-    if kind == "seq":
-        # parts 2..n evaluate SEEDED from the left accumulator's dst set:
-        # a trailing closure/star never materializes the full relation
-        # (nor the node-universe identity) — only the reachable slice
-        acc = eval_path(quads, path[1], graph)
-        for part in path[2:]:
-            mid = acc.select(F.col("dst").alias("src")).distinct()
-            right = _eval_from(quads, _push_inv(part), mid, graph)
-            acc = (acc.alias("a")
-                   .join(right.alias("b"), F.col("a.dst") == F.col("b.src"))
-                   .select(F.col("a.src").alias("src"),
-                           F.col("b.dst").alias("dst"))
-                   .distinct())
-        return acc
-    if kind == "alt":
-        acc = eval_path(quads, path[1], graph)
-        for part in path[2:]:
-            acc = acc.union(eval_path(quads, part, graph))
-        return acc.distinct()
+    if kind in ("seq", "alt"):
+        return _seq_alt(kind, path[1:], lambda part, mid: (
+            eval_path(quads, part, graph) if mid is None
+            else _eval_from(quads, _push_inv(part), mid, graph)))
     if kind == "plus":
         return transitive_closure(eval_path(quads, path[1], graph))
     if kind in ("star", "opt"):
@@ -376,6 +357,29 @@ def eval_path(quads: DataFrame, path: tuple,
             F.col("node").alias("src"), F.col("node").alias("dst"))
         return base.union(ident).distinct()
     raise ValueError(f"unknown path node {path!r}")
+
+
+def _seq_alt(kind: str, parts: tuple, ev) -> DataFrame:
+    """``seq`` / ``alt`` over path parts. ``ev(part, mid)`` evaluates
+    one part: seeded from ``mid`` (a one-column ``src`` frame), or, when
+    ``mid`` is None, as the caller evaluates a part on its own. A
+    sequence evaluates parts 2..n SEEDED from the dst set reached so
+    far, so a trailing closure/star never materializes the full relation
+    (nor the node-universe identity), only the reachable slice; an
+    alternative unions its parts."""
+    acc = ev(parts[0], None)
+    for part in parts[1:]:
+        if kind == "alt":
+            acc = acc.union(ev(part, None))
+            continue
+        mid = acc.select(F.col("dst").alias("src")).distinct()
+        acc = (acc.alias("a")
+               .join(ev(part, mid).alias("b"),
+                     F.col("a.dst") == F.col("b.src"))
+               .select(F.col("a.src").alias("src"),
+                       F.col("b.dst").alias("dst"))
+               .distinct())
+    return acc.distinct() if kind == "alt" else acc
 
 
 def _push_inv(path: tuple, invert: bool = False) -> tuple:
@@ -422,22 +426,9 @@ def _eval_from(quads: DataFrame, path: tuple, seeds: DataFrame,
         inner = eval_path(quads, path[1], graph)
         return (inner.join(seeds.select(F.col("src").alias("dst")), on="dst")
                 .select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    if kind == "seq":
-        acc = _eval_from(quads, path[1], seeds, graph)
-        for part in path[2:]:
-            mid = acc.select(F.col("dst").alias("src")).distinct()
-            right = _eval_from(quads, part, mid, graph)
-            acc = (acc.alias("a")
-                   .join(right.alias("b"), F.col("a.dst") == F.col("b.src"))
-                   .select(F.col("a.src").alias("src"),
-                           F.col("b.dst").alias("dst"))
-                   .distinct())
-        return acc
-    if kind == "alt":
-        acc = _eval_from(quads, path[1], seeds, graph)
-        for part in path[2:]:
-            acc = acc.union(_eval_from(quads, part, seeds, graph))
-        return acc.distinct()
+    if kind in ("seq", "alt"):
+        return _seq_alt(kind, path[1:], lambda part, mid: _eval_from(
+            quads, part, seeds if mid is None else mid, graph))
     if kind in ("plus", "star"):
         # materialize the step relation once — the BFS loop scans it
         # every round (and it may carry a Python expansion upstream)

@@ -1,8 +1,9 @@
 """SPARQL SELECT solution modifiers + aggregation over BGP solution sets.
 
 Completes the query surface above ``operators/bgp.py``: a solution
-table (one column per variable, as produced by match_bgp /
-match_bgp_extended / the paths evaluator) goes through the SPARQL 1.1
+table (one column per variable, as produced by match_bgp or by the one
+group-pattern evaluator ``sparql._eval_group``, which match_bgp_extended
+and the SPARQL text front-end both call) goes through the SPARQL 1.1
 SELECT pipeline — BIND, GROUP BY + aggregates, HAVING, projection,
 DISTINCT, ORDER BY, OFFSET/LIMIT — each mapped to its one natural
 DataFrame operation so Catalyst owns the physical plan:
@@ -444,8 +445,9 @@ def sparql_select(quads: DataFrame, patterns: list[tuple[str, str, str]],
                   *, optional=None, filters=None, union=None, values=None,
                   not_exists=None, minus=None, graph=None, stats=None,
                   **modifiers) -> DataFrame:
-    """Full SELECT query form: match_bgp_extended WHERE clause +
-    select_solutions modifiers, one call. ``modifiers`` are
+    """Full SELECT query form: match_bgp_extended WHERE clause (a group
+    pattern evaluated by ``sparql._eval_group``) + select_solutions
+    modifiers, one call. ``modifiers`` are
     select_solutions keyword arguments. The WHERE solution set stays
     non-distinct (bag semantics) so aggregates count multiplicities,
     matching the spec's default; pass ``distinct=True`` for set results."""

@@ -47,10 +47,13 @@ Supported surface (the subset a pipeline user actually types):
 Documented deviations (deterministic choices / v1 restrictions, each
 raising a clear error rather than silently mis-answering):
 
-- Terms are compared by their binding string (engine-wide convention);
-  a literal constant in a pattern matches on the lexical form only.
-- Unbound (NULL) bindings never satisfy a join key — the same
-  NULL-binding caveat as match_bgp_extended (bgp.py).
+- Group patterns follow the spec's solution compatibility ([spec]
+  §18.3): joins, OPTIONAL, VALUES and EXISTS / MINUS compare TERMS
+  (value plus the ``__tk_*`` term key: kind, language tag, datatype
+  with xsd:string ≡ plain), and an unbound (NULL) variable is
+  compatible with any value. ``_eval_group`` is the only evaluator of
+  this algebra; the kwargs surface (``bgp.match_bgp_extended``) builds
+  a ``Group`` and calls it.
 - SPARQL's type-error-is-false filter semantics are approximated with
   ``try_cast``: a failed numeric coercion yields NULL which drops the
   row — the same observable outcome for comparisons.

@@ -56,14 +56,13 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..jsonld.keys import RDF_LANGSTRING, XSD_STRING
 from ..plans.driver import local_frame
 from .bgp import instantiate_template
 from .expand import CORE_SCHEMA, QUAD_KEY_COLS
 from .rounds import release
 from .sparql import (Group, SparqlError, XSD, _canon_number, _eval_group,
                      _Parser)
-
-_RDF_LANGSTRING = "http://www.w3.org/1999/02/22-rdf-syntax-ns#langString"
 
 
 # ---------------------------------------------------------------------------
@@ -334,7 +333,7 @@ class _UpdateParser(_Parser):
                 # strings carry explicit xsd:string, tagged ones
                 # rdf:langString — DATA quads must match to delete
                 dt = self._expand_datatype(t.datatype) if t.datatype \
-                    else (_RDF_LANGSTRING if t.lang else XSD + "string")
+                    else (RDF_LANGSTRING if t.lang else XSD_STRING)
                 return ("lit", t.text, dt, t.lang)
             if t.kind == "NUMBER":
                 lex = _canon_number(t.text)
@@ -394,8 +393,8 @@ def _key_col(df: DataFrame, c: str):
     convention is NULL — the raw key silently missed those deletes."""
     col = df[c]
     if c.endswith("o_datatype"):
-        return F.nullif(F.nullif(col, F.lit(XSD + "string")),
-                        F.lit(_RDF_LANGSTRING))
+        return F.nullif(F.nullif(col, F.lit(XSD_STRING)),
+                        F.lit(RDF_LANGSTRING))
     if c.endswith("o_lang"):
         return F.lower(col)
     return col
@@ -418,7 +417,7 @@ def _data_key(row: tuple) -> tuple:
     """:func:`_key_col` over one parsed DATA row ``(g, s, p, o_kind,
     o_value, o_datatype, o_lang)``."""
     *head, dt, lang = row
-    if dt in (XSD + "string", _RDF_LANGSTRING):
+    if dt in (XSD_STRING, RDF_LANGSTRING):
         dt = None
     return (*head, dt, lang.lower() if lang else lang)
 

@@ -2,7 +2,8 @@
 
 from pyspark.sql import functions as F
 
-from rdflib_jsonld_spark.operators.bgp import match_bgp
+from rdflib_jsonld_spark.jsonld.keys import XSD_STRING
+from rdflib_jsonld_spark.operators.bgp import encode_literal, match_bgp
 from rdflib_jsonld_spark.operators.expand import (
     QUAD_SCHEMA, dedup_quads, expand_transcripts)
 from rdflib_jsonld_spark.sources import transcripts as tr
@@ -437,3 +438,188 @@ def test_bgp_constants_push_down_to_parquet_scan(spark, tmp_path):
     # column pruning: the scan schema must not read o_datatype/o_lang
     scan = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
     assert scan and "o_datatype" not in scan[0] and "o_lang" not in scan[0]
+
+
+# --- term-exact group algebra on the kwargs surface -------------------------
+
+def _term_quads(spark, rows):
+    """Quads from (s, p, o_kind, o_value, o_lang) rows, default graph."""
+    return spark.createDataFrame(
+        [(None, s, s.startswith("_:"), p, k, v, None, lang, "c", 0)
+         for s, p, k, v, lang in rows], schema=QUAD_SCHEMA)
+
+
+def test_optional_never_joins_a_literal_to_an_iri(spark):
+    """?s p ?o OPTIONAL { ?o q ?w }: ?o is the literal "http://x/z", and
+    a literal is never a subject, so <http://x/z> q <w> must not bind
+    ?w (terms join as terms, [spec] §18.3)."""
+    from rdflib_jsonld_spark.operators.bgp import match_bgp_extended
+    q = _term_quads(spark, [
+        ("http://x/s", "http://x/p", "literal", "http://x/z", None),
+        ("http://x/z", "http://x/q", "iri", "http://x/w", None),
+    ])
+    out = match_bgp_extended(q, [("?s", "http://x/p", "?o")],
+                             optional=[("?o", "http://x/q", "?w")])
+    assert [tuple(r) for r in out.collect()] == [
+        ("http://x/z", "http://x/s", None)]
+
+
+def test_negation_compares_terms_not_text(spark):
+    """?o = "v"@en is not the plain "v" of { ?t r ?o }: both FILTER NOT
+    EXISTS and MINUS keep the row."""
+    from rdflib_jsonld_spark.operators.bgp import match_bgp_extended
+    q = _term_quads(spark, [
+        ("http://x/s", "http://x/p", "literal", "v", "en"),
+        ("http://x/t", "http://x/r", "literal", "v", None),
+    ])
+    pat = [("?s", "http://x/p", "?o")]
+    neg = [("?t", "http://x/r", "?o")]
+    for kw in ("not_exists", "minus"):
+        out = match_bgp_extended(q, pat, **{kw: neg}, with_types=True)
+        assert [(r["s"], r["o"], r["__typ_o__lang"])
+                for r in out.collect()] == [
+            ("http://x/s", "v", "en")], kw
+
+
+def test_union_then_optional_binds_the_unbound_branch_var(spark):
+    """{?x name ?n} UNION {?y age ?n} OPTIONAL {?k knows ?x}: in the
+    second branch ?x is unbound, which is compatible with any value, so
+    the OPTIONAL binds ?x = d, ?k = k there."""
+    from rdflib_jsonld_spark.operators.bgp import match_bgp_extended
+    q = _quads(spark, [
+        ("e:a", "e:name", "alice", "literal"),
+        ("e:b", "e:age", "30", "literal"),
+        ("e:k", "e:knows", "e:d", "iri"),
+    ])
+    out = match_bgp_extended(q, [("?x", "e:name", "?n")],
+                             union=[[("?y", "e:age", "?n")]],
+                             optional=[("?k", "e:knows", "?x")])
+    assert out.columns == ["k", "n", "x", "y"]
+    assert {tuple(r) for r in out.collect()} == {
+        (None, "alice", "e:a", None), ("e:k", "30", "e:d", "e:b")}
+
+
+def _random_group_case(rng):
+    """One random graph and kwargs query over a term pool that mixes
+    IRIs, plain literals, @en literals and literals spelled like IRIs,
+    plus the same query as naive-evaluator algebra."""
+    X = "http://x/"
+    iris = [("iri", X + n) for n in ("n0", "n1", "n2")]
+    lits = [("lit", "v", None, None), ("lit", "v", None, "en"),
+            ("lit", X + "n1", None, None), ("lit", "w", None, "en")]
+    preds = [X + "p", X + "q"]
+    quads = sorted({(None, rng.choice(iris), ("iri", rng.choice(preds)),
+                     rng.choice(iris + lits))
+                    for _ in range(rng.randint(6, 12))}, key=repr)
+
+    def term(t):          # naive term → kwargs cell / constant
+        if t[0] == "iri":
+            return t[1]
+        return encode_literal(t[1], lang=t[3])
+
+    def var(n):
+        return ("var", n)
+
+    def kw_pat(s, p, o):
+        return tuple(x if isinstance(x, str) else "?" + x[1]
+                     for x in (s, p, o))
+
+    def bgp(*pats):
+        return ("bgp", [tuple(x if isinstance(x, tuple) else ("iri", x)
+                              for x in t) for t in pats])
+
+    base = [(var("x"), rng.choice(preds), var("y"))]
+    kwargs = {}
+    algebra = bgp(*base)
+    feats = rng.sample(["union", "optional", "values", "not_exists",
+                        "minus"], rng.randint(1, 3))
+    if "union" in feats:
+        alt = [(var("z"), rng.choice(preds), var("y"))]
+        kwargs["union"] = [[kw_pat(*t) for t in alt]]
+        algebra = ("union", algebra, bgp(*alt))
+    if "optional" in feats:
+        # joins on ?y (maybe a literal) or on ?x (unbound in UNION's
+        # second branch)
+        opt = rng.choice([(var("y"), rng.choice(preds), var("w")),
+                          (var("w"), rng.choice(preds), var("x"))])
+        kwargs["optional"] = [kw_pat(*opt)]
+        algebra = ("optional", algebra, bgp(opt))
+    if "values" in feats:
+        rows = [(rng.choice(iris + lits + [None]),) for _ in range(3)]
+        kwargs["values"] = (["y"], [tuple(None if c is None else term(c)
+                                          for c in r) for r in rows])
+        algebra = ("values", ["y"], rows, algebra)
+    neg = [rng.choice([(var("t"), rng.choice(preds), var("y")),
+                       (var("y"), rng.choice(preds), var("t"))])]
+    if "minus" in feats:
+        kwargs["minus"] = [kw_pat(*t) for t in neg]
+        algebra = ("minus", algebra, bgp(*neg))
+    if "not_exists" in feats:
+        kwargs["not_exists"] = [kw_pat(*t) for t in neg]
+        algebra = ("filter", ("exists", False, bgp(*neg)), algebra)
+    return quads, [kw_pat(*t) for t in base], kwargs, algebra
+
+
+def _canon(t):
+    """Term identity key: lang lowercased, xsd:string ≡ plain."""
+    if t is None or t[0] != "lit":
+        return t
+    lang = t[3].lower() if t[3] else None
+    dt = None if lang or t[2] == XSD_STRING else t[2]
+    return ("lit", t[1], dt, lang)
+
+
+def test_group_algebra_vs_naive_evaluator_mixed_terms(spark):
+    """Randomized differential of match_bgp_extended against the naive
+    spec evaluator (tests/naive_sparql.py): OPTIONAL, UNION, VALUES,
+    NOT EXISTS and MINUS over objects that mix IRIs, plain literals,
+    @en literals and literals spelled like IRIs, compared as bags of
+    exact terms."""
+    import random
+    from collections import Counter
+
+    from naive_sparql import Evaluator
+    from rdflib_jsonld_spark.operators.bgp import match_bgp_extended
+
+    for seed in range(24):
+        quads, base, kwargs, algebra = _random_group_case(
+            random.Random(seed))
+        df = _term_quads(spark, [
+            (s[1], p[1], "iri" if o[0] == "iri" else "literal", o[1],
+             o[3] if o[0] == "lit" else None) for _, s, p, o in quads])
+        out = match_bgp_extended(df, base, distinct=False, with_types=True,
+                                 **kwargs)
+        names = [c for c in out.columns if not c.startswith("__typ_")]
+        got = Counter()
+        for r in out.collect():
+            row = []
+            for n in names:
+                kind = r[f"__typ_{n}__kind"] \
+                    if f"__typ_{n}__kind" in out.columns else None
+                if r[n] is None:
+                    row.append(None)
+                elif kind == "literal":
+                    row.append(_canon(("lit", r[n], r[f"__typ_{n}__datatype"],
+                                       r[f"__typ_{n}__lang"])))
+                else:
+                    row.append(("iri", r[n]))
+            got[tuple(row)] += 1
+        want = Counter(tuple(_canon(sol.get(n)) for n in names)
+                       for sol in Evaluator(quads).eval(algebra))
+        assert got == want, (seed, kwargs, quads)
+
+
+def test_group_algebra_lives_only_in_the_sparql_evaluator():
+    """OPTIONAL / UNION / VALUES / negation are evaluated once, by
+    sparql._eval_group: the kwargs surface (bgp.py, solutions.py) runs
+    no outer, semi or anti join of its own."""
+    import pathlib
+    import re
+    ops = (pathlib.Path(__file__).resolve().parents[1]
+           / "rdflib_jsonld_spark" / "operators")
+    join_kind = re.compile(
+        r"""left_?anti|left_?semi|["']left(_?outer)?["']""", re.I)
+    for name in ("bgp.py", "solutions.py"):
+        hits = [ln for ln in (ops / name).read_text().splitlines()
+                if join_kind.search(ln)]
+        assert not hits, (name, hits)

@@ -140,6 +140,19 @@ class TestTriangles:
         got = self._run(spark, edges)
         assert (got.n_edges, got.n_triangles) == (3, 1)
 
+    def test_census_leaves_no_cached_frame(self, spark):
+        """The degree and orientation frames are cached for the census
+        and freed before it returns: one call on a 4-edge graph adds no
+        entry to the storage info, and the result reads back."""
+        def cached():
+            return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+
+        before = cached()
+        got = self._run(spark, [("a", "b"), ("b", "c"), ("c", "a"),
+                                ("c", "d")])
+        assert (got.n_nodes, got.n_edges, got.n_triangles) == (4, 4, 1)
+        assert cached() <= before
+
 
 @pytest.mark.usefixtures("spark")
 class TestLabelPropagation:
