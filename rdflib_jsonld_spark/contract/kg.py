@@ -823,7 +823,7 @@ def q_kg_star_annotation_docs(spark, sf_dir) -> DataFrame:
     from pyspark.sql import types as T
     from rdflib_jsonld_spark.jsonld import to_rdf
     from rdflib_jsonld_spark.operators.expand import quad_to_cells
-    from rdflib_jsonld_spark.operators.star import with_quoted_components
+    from rdflib_jsonld_spark.operators.star import quoted_components
 
     vocab = KG + "vocab#"
     ent = KG + "e/doc/"
@@ -851,10 +851,10 @@ def q_kg_star_annotation_docs(spark, sf_dir) -> DataFrame:
             yield pd.DataFrame(rows, columns=[f.name for f in schema])
 
     quads = doc_ids.mapInPandas(gen, schema=schema).persist()
-    ann = (with_quoted_components(
-               quads.where(F.col("s").startswith("<<")), "s", "q")
-           .where(F.col("p") == vocab + "weight")
-           .select(F.col("qs").alias("src"), F.col("qo_value").alias("e"),
+    qs, _, _, qo_value, _, _ = quoted_components(F.col("s"))
+    ann = (quads.where(F.col("s").startswith("<<")
+                       & (F.col("p") == vocab + "weight"))
+           .select(qs.alias("src"), qo_value.alias("e"),
                    F.col("o_value").cast("long").alias("w")))
     base = (quads.where(F.col("p") == vocab + "cites")
             .select(F.col("s").alias("src"),

@@ -37,8 +37,10 @@ import re
 from pyspark.sql import DataFrame, functions as F
 
 from ..jsonld.keys import RDF_LANGSTRING, XSD_STRING
+from ..jsonld.tordf import BNODE, IRI, LIT
 from ..plans.driver import local_frame
 from .expand import CORE_SCHEMA, QUAD_KEY_COLS
+from .star import quoted_components, term_to_star
 
 #: a scheme prefix: the kwargs surface reads such a bare string as an IRI
 IRI_SHAPE = re.compile(r"[A-Za-z][A-Za-z0-9+.-]*:")
@@ -56,15 +58,36 @@ def collect_predicate_stats(quads: DataFrame) -> dict[str, int]:
             quads.groupBy("p").agg(F.count(F.lit(1)).alias("n")).collect()}
 
 
-def _pattern_vars(pat: tuple[str, str, str]) -> set[str]:
-    out = set()
-    for x in pat:
-        if _is_var(x):
-            out.add(x[1:])
-        elif isinstance(x, tuple) and x[0] == "qt":
-            # RDF-star quoted pattern ("qt", s, p, o): inner vars join
-            out |= {y[1:] for y in x[1:] if _is_var(y)}
-    return out
+def leaves(term, only: str = "spo"):
+    """Every leaf term of a pattern term, descending through quoted
+    triples ``("qt", s, p, o)`` at any depth; with :func:`map_leaves`,
+    the one walker of pattern, template and DATA terms. ``only`` keeps
+    the leaves whose innermost slot is one of ``"s"``, ``"p"``, ``"o"``
+    (a bare term counts as an object). A triple pattern is walked as
+    ``leaves(("qt", s, p, o))``. Non-quoted tuples (property paths,
+    DATA-block literals) are leaves."""
+    if not (isinstance(term, tuple) and term[0] == "qt"):
+        if "o" in only:
+            yield term
+        return
+    for slot, inner in zip("spo", term[1:]):
+        if isinstance(inner, tuple) and inner[0] == "qt":
+            yield from leaves(inner, only)
+        elif slot in only:
+            yield inner
+
+
+def map_leaves(term, f, node=lambda s, p, o: ("qt", s, p, o)):
+    """Rebuild a pattern term: every leaf becomes ``f(leaf)`` and every
+    quoted triple ``node(s, p, o)`` of its rebuilt components (by
+    default the same ``("qt", s, p, o)`` shape)."""
+    if isinstance(term, tuple) and term[0] == "qt":
+        return node(*(map_leaves(t, f, node) for t in term[1:]))
+    return f(term)
+
+
+def _pattern_vars(pat: tuple) -> set[str]:
+    return {x[1:] for x in leaves(("qt", *pat)) if _is_var(x)}
 
 
 def _order_patterns(patterns: list[tuple[str, str, str]],
@@ -77,8 +100,8 @@ def _order_patterns(patterns: list[tuple[str, str, str]],
     only patterns sharing a variable with the bound set are considered
     unless none connects (disconnected groups keep their cross join)."""
     def sel_key(i: int):
-        s, p, o = patterns[i]
-        n_const = sum(0 if _is_var(x) else 1 for x in (s, p, o))
+        p = patterns[i][1]
+        n_const = sum(not _is_var(x) for x in leaves(("qt", *patterns[i])))
         freq = stats.get(p, 0) if (stats and not _is_var(p)) else 0
         return (-n_const, freq, i)
 
@@ -179,34 +202,25 @@ def _encoded_literal_filter(df: DataFrame, lit: tuple, kind: str = "o_kind",
                        == (lit_dt or XSD_STRING)))
 
 
-def _pattern_df(quads: DataFrame, i: int, s: str, p: str, o: str,
-                typed: set[str] | None = None,
-                capture_types: bool = False,
+def _pattern_df(quads: DataFrame, i: int, pat: tuple, capture: set[str],
                 graph_var: str | None = None,
                 emit_term_keys: bool = False) -> tuple:
-    """One pattern → filtered projection. With ``capture_types``, a
-    variable bound in OBJECT position also projects its
-    o_kind/o_datatype/o_lang as hidden ``__typ_<var>__*`` companion
-    columns (recorded in ``typed``). A variable repeated WITHIN the
+    """One pattern → filtered projection. A variable in ``capture``
+    bound in an OBJECT slot (the pattern's, or a quoted triple's at any
+    depth) also projects that slot's kind/datatype/lang as hidden
+    ``__typ_<var>__*`` companion columns, once (``capture`` is
+    consumed). A variable repeated WITHIN the
     pattern (e.g. ("?x", p, "?x")) adds the positional equality filter
     instead of silently overwriting the earlier binding. With
     ``graph_var``, the g column binds that variable in every pattern
     (so multi-pattern matches require co-occurrence in ONE graph)."""
     df = quads
-    cols = {}
-
-    def lit_cols(src: str):
-        """(kind, datatype, lang) column names when ``src`` can hold a
-        LITERAL binding (object positions), else None."""
-        if src == "o_value":
-            return ("o_kind", "o_datatype", "o_lang")
-        if src.startswith("__qt") and src.endswith("_ovalue"):
-            base = src[:-len("ovalue")]
-            return (base + "okind", base + "odt", base + "olang")
-        return None
+    cols: dict[str, str] = {}
+    lits: dict[str, tuple] = {"o_value": ("o_kind", "o_datatype", "o_lang")}
+    type_proj: list = []
 
     def src_tk(src: str):
-        lc = lit_cols(src)
+        lc = lits.get(src)
         if lc is not None:
             return term_key_col(*(F.col(c) for c in lc))
         return _shape_key_col(F.col(src))
@@ -219,7 +233,7 @@ def _pattern_df(quads: DataFrame, i: int, s: str, p: str, o: str,
             # same-pattern repeat across positions equates TERMS, not
             # lexical forms (sweep 37): a literal in object position
             # never equals the IRI/bnode a subject/predicate slot binds
-            a, b = lit_cols(prev), lit_cols(src)
+            a, b = lits.get(prev), lits.get(src)
             if a and b:
                 df = df.where(term_key_col(*(F.col(c) for c in a))
                               == term_key_col(*(F.col(c) for c in b)))
@@ -230,91 +244,42 @@ def _pattern_df(quads: DataFrame, i: int, s: str, p: str, o: str,
         else:
             cols[var] = src
 
-    type_proj = []
-
-    def qt_constrain(term: tuple, source: str, slot: str):
-        # RDF-star quoted pattern over the star.py table spelling in
-        # ``source``: decompose ONCE into temp columns, then constants
-        # filter and ?vars bind like any other position. Inner object
-        # vars capture kind/datatype/lang companions from the
-        # decomposition (they may be literals).
+    def place(term, src: str, slot: str):
+        # constrain column ``src`` by ``term`` (constants filter, ?vars
+        # bind). An RDF-star quoted pattern decomposes the star.py
+        # table spelling in ``src`` into temp columns and places its
+        # components there, recursively (annotations on annotations).
         nonlocal df
-        from .star import quoted_components
-        comps = quoted_components(F.col(source))
-        names = [f"__qt{i}{slot}_{k}"
-                 for k in ("s", "p", "okind", "ovalue", "odt", "olang")]
-        for name, col in zip(names, comps):
-            df = df.withColumn(name, col)
-        qs_c, qp_c, qok_c, qov_c, qod_c, qol_c = names
-        df = df.where(F.col(qs_c).isNotNull())
-        for inner, colname in ((term[1], qs_c), (term[2], qp_c)):
-            if isinstance(inner, tuple) and inner[0] == "qt":
-                # nested quoted pattern (annotation on an annotation):
-                # the decomposition left the inner '<< … >>' spelling in
-                # this column — peel the next level recursively
-                df = df.where(F.col(colname).startswith("<<"))
-                qt_constrain(inner, colname, slot + "n")
-            elif _is_var(inner):
-                bind(inner[1:], colname)
-            else:
-                df = df.where(F.col(colname) == inner)
-        io = term[3]
-        if _is_var(io):
-            var = io[1:]
-            bind(var, qov_c)
-            if capture_types and typed is not None and var not in typed:
-                typed.add(var)
-                type_proj.extend([
-                    F.col(qok_c).alias(f"{TYPED_PREFIX}{var}__kind"),
-                    F.col(qod_c).alias(f"{TYPED_PREFIX}{var}__datatype"),
-                    F.col(qol_c).alias(f"{TYPED_PREFIX}{var}__lang")])
+        lc = lits.get(src)
+        if isinstance(term, tuple) and term[0] == "qt":
+            df = df.where(F.col(lc[0]) == "triple" if lc
+                          else F.col(src).startswith("<<"))
+            names = [f"__qt{i}{slot}_{k}"
+                     for k in ("s", "p", "okind", "ovalue", "odt", "olang")]
+            for name, col in zip(names, quoted_components(F.col(src))):
+                df = df.withColumn(name, col)
+            df = df.where(F.col(names[0]).isNotNull())
+            lits[names[3]] = (names[2], names[4], names[5])
+            place(term[1], names[0], slot + "s")
+            place(term[2], names[1], slot + "p")
+            place(term[3], names[3], slot + "o")
+        elif _is_var(term):
+            var = term[1:]
+            bind(var, src)
+            if lc and var in capture:
+                capture.discard(var)
+                type_proj.extend(
+                    F.col(c).alias(f"{TYPED_PREFIX}{var}__{k}")
+                    for c, k in zip(lc, ("kind", "datatype", "lang")))
+        elif lc and (lit := decode_literal(term)) is not None:
+            df = _encoded_literal_filter(df, lit, lc[0], src, *lc[1:])
         else:
-            lit = decode_literal(io)
-            if lit is not None:
-                df = _encoded_literal_filter(df, lit, qok_c, qov_c, qod_c,
-                                             qol_c)
-            else:
-                df = df.where(F.col(qov_c) == io)
+            df = df.where(F.col(src) == term)
 
     if graph_var is not None:
         bind(graph_var, "g")
-    if isinstance(s, tuple) and s[0] == "qt":
-        df = df.where(F.col("s").startswith("<<"))
-        qt_constrain(s, "s", "s")
-    elif _is_var(s):
-        bind(s[1:], "s")
-    else:
-        df = df.where(F.col("s") == s)
-    if _is_var(p):
-        bind(p[1:], "p")
-    else:
-        df = df.where(F.col("p") == p)
-    if isinstance(o, tuple) and o[0] == "qt":
-        df = df.where(F.col("o_kind") == "triple")
-        qt_constrain(o, "o_value", "o")
-        o = "?__qt_consumed"  # sentinel: fall through neither branch
-        proj = [F.col(src).alias(var) for var, src in cols.items()]
-        tk_proj = [src_tk(src).alias(TK_PREFIX + var)
-                   for var, src in cols.items()] if emit_term_keys \
-            else []
-        if not proj:
-            proj = [F.lit(1).alias(f"_exists_{i}")]
-        return df.select(*proj, *type_proj, *tk_proj), set(cols)
-    if _is_var(o):
-        var = o[1:]
-        bind(var, "o_value")
-        if capture_types and typed is not None and var not in typed:
-            typed.add(var)
-            type_proj = [
-                F.col("o_kind").alias(f"{TYPED_PREFIX}{var}__kind"),
-                F.col("o_datatype").alias(f"{TYPED_PREFIX}{var}__datatype"),
-                F.col("o_lang").alias(f"{TYPED_PREFIX}{var}__lang")]
-    else:
-        lit = decode_literal(o)
-        if lit is not None:
-            df = _encoded_literal_filter(df, lit)
-        else:
-            df = df.where(F.col("o_value") == o)
+    for src, term in zip(("s", "p", "o_value"), pat):
+        place(term, src, src[0])
     proj = [F.col(src).alias(var) for var, src in cols.items()]
     tk_proj = [src_tk(src).alias(TK_PREFIX + var)
                for var, src in cols.items()] if emit_term_keys else []
@@ -400,17 +365,6 @@ def _patch_missing_vars(sql: str, cols: set) -> str:
     return "".join(out)
 
 
-def _first_object_binders(patterns) -> dict[str, int]:
-    """var → ORIGINAL index of the first pattern binding it in object
-    position. Companion typing is captured at exactly that pattern, so
-    the emitted datatype does not depend on the join-order heuristic."""
-    out: dict[str, int] = {}
-    for i, (_, _, o) in enumerate(patterns):
-        if _is_var(o) and o[1:] not in out:
-            out[o[1:]] = i
-    return out
-
-
 def match_bgp(quads: DataFrame, patterns: list[tuple[str, str, str]],
               distinct: bool = True, optimize: bool = True,
               stats: dict[str, int] | None = None,
@@ -439,17 +393,21 @@ def match_bgp(quads: DataFrame, patterns: list[tuple[str, str, str]],
     graph_var = graph[1:] if (graph is not None and _is_var(graph)) else None
     order = _order_patterns(patterns, stats) if optimize \
         else list(range(len(patterns)))
-    typed: set[str] | None = set() if with_types else None
-    first_obj = _first_object_binders(patterns) if with_types else {}
+    # companions are captured at the ORIGINAL-order first pattern with
+    # the var in an object slot, so the emitted datatype does not
+    # depend on the join-order heuristic
+    first_obj: dict[str, int] = {}
+    for i, pat in enumerate(patterns if with_types else []):
+        for x in leaves(("qt", *pat), only="o"):
+            if _is_var(x):
+                first_obj.setdefault(x[1:], i)
     acc = None
     bound: set[str] = set()
     for i in order:
-        s, p, o = patterns[i]
-        capture = with_types and _is_var(o) and first_obj.get(o[1:]) == i
-        df, vars_i = _pattern_df(quads, i, s, p, o, typed,
-                                 capture_types=capture,
-                                 graph_var=graph_var,
-                                 emit_term_keys=keep_term_keys)
+        df, vars_i = _pattern_df(
+            quads, i, patterns[i],
+            {v for v, j in first_obj.items() if j == i},
+            graph_var=graph_var, emit_term_keys=keep_term_keys)
         if acc is None:
             acc, bound = df, vars_i
             continue
@@ -604,63 +562,46 @@ def _qt_template_col(term: tuple, have: set):
     """Template quoted-triple term → a column building its star.py
     table spelling from the current solution row (SPARQL 1.2 annotation
     blocks / quoted templates in CONSTRUCT and Update). Components are
-    vars (spelled by their type companions when captured), constants,
-    or nested quoted terms (recursion)."""
-    comps = []
-    for pos in term[1:]:
-        if isinstance(pos, tuple) and pos[0] == "qt":
-            comps.append(_qt_template_col(pos, have))
-            continue
-        if _is_var(pos):
-            var = pos[1:]
-            v = F.col(var)
-            shape = F.when(v.startswith("_:"), F.lit("bnode")) \
-                .when(v.startswith("<<"), F.lit("triple")) \
-                .otherwise(F.lit("iri"))
-            if f"{TYPED_PREFIX}{var}__kind" in have:
-                kind = F.coalesce(F.col(f"{TYPED_PREFIX}{var}__kind"),
-                                  shape)
-                dt = F.col(f"{TYPED_PREFIX}{var}__datatype")
-                lang = F.col(f"{TYPED_PREFIX}{var}__lang")
+    vars (spelled by their type companions when captured), constants
+    (spelled by ``star.term_to_star``), or nested quoted terms."""
+    def leaf(pos):
+        if not _is_var(pos):
+            enc = decode_literal(pos)
+            if enc is not None:
+                val, elang, edt = enc
+                t = (LIT, val, edt, elang)
+            elif pos.startswith("_:"):
+                t = (BNODE, pos[2:])
             else:
-                kind = shape
-                dt = F.lit(None).cast("string")
-                lang = F.lit(None).cast("string")
-            lit_sp = F.concat(F.lit('"'), _star_escape_col(v), F.lit('"'))
-            lit_sp = F.when(lang.isNotNull(),
-                            F.concat(lit_sp, F.lit("@"), lang)) \
-                .when(dt.isNotNull() & (dt != XSD_STRING),
-                      F.concat(lit_sp, F.lit("^^<"), dt, F.lit(">"))) \
-                .otherwise(lit_sp)
-            comps.append(
-                F.when(kind == "literal", lit_sp)
+                t = (IRI, pos) if IRI_SHAPE.match(pos) \
+                    else (LIT, pos, None, None)
+            return F.lit(term_to_star(t))
+        var = pos[1:]
+        v = F.col(var)
+        shape = F.when(v.startswith("_:"), F.lit("bnode")) \
+            .when(v.startswith("<<"), F.lit("triple")) \
+            .otherwise(F.lit("iri"))
+        if f"{TYPED_PREFIX}{var}__kind" in have:
+            kind = F.coalesce(F.col(f"{TYPED_PREFIX}{var}__kind"), shape)
+            dt = F.col(f"{TYPED_PREFIX}{var}__datatype")
+            lang = F.col(f"{TYPED_PREFIX}{var}__lang")
+        else:
+            kind = shape
+            dt = F.lit(None).cast("string")
+            lang = F.lit(None).cast("string")
+        lit_sp = F.concat(F.lit('"'), _star_escape_col(v), F.lit('"'))
+        lit_sp = F.when(lang.isNotNull(),
+                        F.concat(lit_sp, F.lit("@"), lang)) \
+            .when(dt.isNotNull() & (dt != XSD_STRING),
+                  F.concat(lit_sp, F.lit("^^<"), dt, F.lit(">"))) \
+            .otherwise(lit_sp)
+        return (F.when(kind == "literal", lit_sp)
                 .when(kind == "bnode", v)
                 .when(kind == "triple", v)     # already a spelling
                 .otherwise(F.concat(F.lit("<"), v, F.lit(">"))))
-            continue
-        enc = decode_literal(pos)
-        if enc is not None:
-            val, elang, edt = enc
-            esc = (val.replace("\\", "\\\\").replace('"', '\\"')
-                   .replace("\n", "\\n").replace("\r", "\\r")
-                   .replace("\t", "\\t"))
-            sp = f'"{esc}"'
-            if elang:
-                sp += f"@{elang}"
-            elif edt and edt != XSD_STRING:
-                sp += f"^^<{edt}>"
-            comps.append(F.lit(sp))
-        elif pos.startswith("_:"):
-            comps.append(F.lit(pos))
-        elif IRI_SHAPE.match(pos):
-            comps.append(F.lit(f"<{pos}>"))
-        else:
-            esc = (pos.replace("\\", "\\\\").replace('"', '\\"')
-                   .replace("\n", "\\n").replace("\r", "\\r")
-                   .replace("\t", "\\t"))
-            comps.append(F.lit(f'"{esc}"'))
-    return F.concat(F.lit("<< "), comps[0], F.lit(" "), comps[1],
-                    F.lit(" "), comps[2], F.lit(" >>"))
+
+    return map_leaves(term, leaf, lambda s, p, o: F.concat(
+        F.lit("<< "), s, F.lit(" "), p, F.lit(" "), o, F.lit(" >>")))
 
 
 def instantiate_template(sols: DataFrame,
@@ -704,8 +645,8 @@ def instantiate_template(sols: DataFrame,
 
     out = None
     for s, p, o in template:
-        if any(isinstance(pos, str) and _is_var(pos)
-               and _typed_lit(pos[1:]) is not None for pos in (s, p)) \
+        if any(_is_var(x) and _typed_lit(x[1:]) is not None
+               for x in leaves(("qt", s, p, o), only="sp")) \
                 or (graph is not None and _is_var(graph)
                     and _typed_lit(graph[1:]) is not None):
             continue    # literal subject/predicate/graph — never valid
@@ -789,7 +730,7 @@ def instantiate_template(sols: DataFrame,
         # bnode cannot be a predicate (sweep 39: a literal-bound ?s
         # emitted a literal-subject quad spelled as an IRI)
         for pos, require_iri in ((s, False), (p, True)):
-            if not (isinstance(pos, str) and _is_var(pos)):
+            if not _is_var(pos):
                 continue
             kc = f"{TYPED_PREFIX}{pos[1:]}__kind"
             if kc in have:

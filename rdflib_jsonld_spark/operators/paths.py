@@ -58,6 +58,8 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..jsonld.keys import XSD_STRING
 from ..plans.driver import local_frame
+from .bgp import (IRI_SHAPE, TK_PREFIX, TYPED_PREFIX, _is_var,
+                  decode_literal, term_key_col)
 from .linking import transitive_closure
 from .rounds import frontier_rounds, release
 
@@ -275,7 +277,6 @@ def _const_alts(term: str) -> list[str]:
     ``_:`` bare constant stays bare; a bare NON-IRI-shaped constant
     (kwargs surface's plain-literal convention) seeds both its bare
     and plain-literal spellings."""
-    from .bgp import IRI_SHAPE, decode_literal
     lit = decode_literal(term)
     if lit is not None:
         return [_enc_const(*lit)]
@@ -288,7 +289,6 @@ def _decode_term_out(df: DataFrame, name: str) -> DataFrame:
     """Decode an edge-spelling output column back into the engine's
     solution convention: lexical value + ``__typ_*`` companions +
     ``__tk_`` term key."""
-    from .bgp import TK_PREFIX, TYPED_PREFIX, term_key_col
     c = F.col(name)
     is_lit = c.startswith('"')
     raw = F.regexp_extract(c, r'^"((?:[^"\\]|\\.)*)"', 1)
@@ -459,10 +459,6 @@ def _eval_from(quads: DataFrame, path: tuple, seeds: DataFrame,
         ident = seeds.select("src", F.col("src").alias("dst"))
         return base.union(ident).distinct()
     raise ValueError(f"unknown path node {path!r}")
-
-
-def _is_var(x: str) -> bool:
-    return isinstance(x, str) and x.startswith("?")
 
 
 def match_path(quads: DataFrame, subj: str, path: tuple | str, obj: str,

@@ -4,10 +4,15 @@ frontier loop behind the reachability, BFS and Bellman-Ford callers."""
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+from contextvars import ContextVar
 from itertools import count, islice
 from typing import Callable
 
 from pyspark.sql import DataFrame
+
+#: settled tables returned inside the innermost :func:`released_on_exit`
+_held: ContextVar[list | None] = ContextVar("rounds_held", default=None)
 
 
 def release(df: DataFrame) -> None:
@@ -20,6 +25,22 @@ def release(df: DataFrame) -> None:
     df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
+@contextmanager
+def released_on_exit():
+    """Free, on leaving the block, every settled table that
+    :func:`frontier_rounds` returned inside it. For a caller whose
+    result no longer reads them lazily when the block ends (it was
+    checkpointed), e.g. one SPARQL Update operation."""
+    held: list[DataFrame] = []
+    token = _held.set(held)
+    try:
+        yield
+    finally:
+        _held.reset(token)
+        for df in held:
+            release(df)
+
+
 def frontier_rounds(start: DataFrame, step: Callable,
                     max_rounds: int | None = None,
                     merge: Callable = DataFrame.unionByName) -> DataFrame:
@@ -29,9 +50,10 @@ def frontier_rounds(start: DataFrame, step: Callable,
     which returns only unsettled rows; one ``limit(1).count()`` probe
     stops on an empty ``new``, else ``merge(settled, new)`` is the next
     settled checkpoint and ``new`` the next frontier. Superseded
-    checkpoints are released. ``max_rounds`` is only for a cap that is
-    part of the answer (a depth bound): reachability ends without one,
-    since ``settled`` grows over a finite node set.
+    checkpoints are released; inside :func:`released_on_exit` the
+    returned one is freed when that block ends. ``max_rounds`` is only
+    for a cap that is part of the answer (a depth bound): reachability
+    ends without one, since ``settled`` grows over a finite node set.
 
     Constraint propagation is off meanwhile: Spark 4.1's ``LogicalRDD``
     constraint rewrite fails on unions of checkpoints derived from
@@ -57,4 +79,6 @@ def frontier_rounds(start: DataFrame, step: Callable,
             release(frontier)
     finally:
         spark.conf.set(key, prev)
+    if (held := _held.get()) is not None:
+        held.append(settled)
     return settled

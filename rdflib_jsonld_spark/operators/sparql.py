@@ -93,8 +93,9 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, functions as F
 
 from .bgp import (TK_PREFIX, TYPED_PREFIX, _companion_cols, _is_var,
-                  decode_literal, encode_literal, instantiate_template,
-                  match_bgp, patch_companion_refs, term_key_of)
+                  _pattern_vars, decode_literal, encode_literal,
+                  instantiate_template, leaves, map_leaves, match_bgp,
+                  patch_companion_refs, term_key_of)
 from ..plans.driver import local_frame
 from .paths import match_path
 from .rounds import frontier_rounds
@@ -2464,21 +2465,13 @@ class _Parser:
             if len(where.elements) != 1 or where.elements[0][0] != "bgp":
                 raise SparqlError("CONSTRUCT WHERE takes a plain "
                                   "triple-pattern block")
-            template = []
-            for s, p, o in where.elements[0][1]:
-                if not isinstance(p, str):
-                    raise SparqlError("property paths not allowed in "
-                                      "CONSTRUCT WHERE")
-                if isinstance(o, tuple):
-                    raise SparqlError("tagged literals not supported in "
-                                      "CONSTRUCT WHERE (v1)")
-                # per the §16.2.2 expansion CONSTRUCT {P} WHERE {P},
-                # the template copy's bnodes are template-scoped → mint
-                s, o = (f"?__tbn_{pos[6:]}"
-                        if isinstance(pos, str)
-                        and pos.startswith("?__bn_") else pos
-                        for pos in (s, o))
-                template.append((s, p, o))
+            if any(not isinstance(t[1], str)
+                   for t in where.elements[0][1]):
+                raise SparqlError("property paths not allowed in "
+                                  "CONSTRUCT WHERE")
+            # per the §16.2.2 expansion CONSTRUCT {P} WHERE {P}, the
+            # template copy's bnodes are template-scoped
+            template = [_template_scoped(t) for t in where.elements[0][1]]
             q = Query(form="construct", where=where, template=template,
                       needs_types=True)
             self._parse_modifiers(q)
@@ -2486,20 +2479,11 @@ class _Parser:
                 raise SparqlError("CONSTRUCT supports LIMIT/OFFSET only")
             return q
         self.expect_op("{")
-        template = []
-        for s, p, o in self.parse_triples():
-            if not isinstance(p, str):
-                raise SparqlError("property paths not allowed in "
-                                  "CONSTRUCT template")
-            # Template blank nodes ([spec] §16.2.1): scoped to the
-            # TEMPLATE (even when a WHERE pattern reuses the label), a
-            # fresh bnode per solution — rename to ?__tbn_* so the
-            # evaluator mints per-row ids instead of reading a WHERE
-            # binding of the same label.
-            s, o = (f"?__tbn_{pos[6:]}"
-                    if isinstance(pos, str) and pos.startswith("?__bn_")
-                    else pos for pos in (s, o))
-            template.append((s, p, o))
+        template = self.parse_triples()
+        if any(not isinstance(t[1], str) for t in template):
+            raise SparqlError("property paths not allowed in "
+                              "CONSTRUCT template")
+        template = [_template_scoped(t) for t in template]
         self.expect_op("}")
         if self.at_kw("WHERE"):
             self.take()
@@ -3133,6 +3117,33 @@ def _merge_values(acc: DataFrame | None, names: list[str],
     return out
 
 
+def _template_scoped(triple: tuple) -> tuple:
+    """Template blank nodes ([spec] §16.2.1, Update §3.1.3) are scoped
+    to the TEMPLATE (even when a WHERE pattern reuses the label), a
+    fresh bnode per solution: ``?__bn_x`` → ``?__tbn_x`` at any quoted
+    depth, so instantiation mints per-row ids instead of reading a
+    WHERE binding of the same label."""
+    return map_leaves(("qt", *triple), lambda x: "?__tbn_" + x[6:]
+                      if _is_var(x) and x.startswith("?__bn_") else x)[1:]
+
+
+def _mint_template_bnodes(sols: DataFrame, template: list[tuple],
+                          prefix: str) -> DataFrame:
+    """One fresh bnode column per ``?__tbn_*`` template label and
+    solution row: ``<prefix><label index>_`` + a 64-bit hash of the
+    full row, deterministic and partitioning-independent (identical
+    solutions share one minted bnode, keeping updates replayable)."""
+    labels = sorted({x[1:] for t in template for x in leaves(("qt", *t))
+                     if _is_var(x) and x.startswith("?__tbn_")})
+    if labels:
+        cols = [F.col(c) for c in sols.columns]
+        row_id = F.lower(F.hex(F.xxhash64(*cols))) if cols else F.lit("0")
+        for i, lab in enumerate(labels):
+            sols = sols.withColumn(lab, F.concat(F.lit(f"{prefix}{i}_"),
+                                                 row_id))
+    return sols
+
+
 def _eval_bgp(quads: DataFrame, triples: list[tuple], graph: str | None,
               with_types: bool, stats) -> DataFrame:
     plain = [(s, p, o) for s, p, o in triples if isinstance(p, str)]
@@ -3227,23 +3238,6 @@ def _exists_flag(acc: DataFrame, sub: DataFrame, marker: str,
             .unionByName(no.withColumn(marker, F.lit(False))))
 
 
-def _bgp_pattern_vars(triples: list[tuple]) -> set[str]:
-    """Variables a BGP binds — every row binds every pattern var.
-    Quoted-triple spellings are scanned textually (vars inside
-    ``<<...>>`` bind like any other position); a ``?name`` inside a
-    constant literal can only over-report, which is harmless (callers
-    intersect with actual solution columns)."""
-    out: set[str] = set()
-    for t in triples:
-        for pos in t:
-            if isinstance(pos, str):
-                if pos.startswith("?"):
-                    out.add(pos[1:])
-                elif pos.startswith("<<"):
-                    out |= set(re.findall(r"\?(\w+)", pos))
-    return out
-
-
 def _group_var_sets(group: Group) -> tuple[set[str], set[str]]:
     """Static binding analysis of a group pattern: ``(certain,
     maybe)`` — vars bound in EVERY solution vs vars that may be
@@ -3258,7 +3252,7 @@ def _group_var_sets(group: Group) -> tuple[set[str], set[str]]:
     for el in group.elements:
         k = el[0]
         if k == "bgp":
-            certain |= _bgp_pattern_vars(el[1])
+            certain |= set().union(*map(_pattern_vars, el[1]))
         elif k == "optional":
             c2, m2 = _group_var_sets(el[1])
             maybe |= (c2 | m2) - certain
@@ -3355,7 +3349,7 @@ def _eval_group(quads: DataFrame, group: Group, *, graph: str | None = None,
         kind = el[0]
         if kind == "bgp":
             acc = merge(_eval_bgp(quads, el[1], graph, with_types, stats),
-                        el_c=_bgp_pattern_vars(el[1]))
+                        el_c=set().union(*map(_pattern_vars, el[1])))
         elif kind == "optional":
             oc, om = _group_var_sets(el[1])
             acc = merge(ev(el[1]), how="left", el_c=oc, el_m=om)
@@ -3506,15 +3500,6 @@ def sparql(quads: DataFrame, query: str, *, stats: dict | None = None,
         # companion captured so select_solutions can sort term-aware
         # (sweep 20); expression keys compile their own guards.
         q.needs_types = True
-    if q.form == "construct" and any(
-            isinstance(pos, str) and pos.startswith("?")
-            for t in (q.template or []) for pos in t):
-        # CONSTRUCT templates skip instantiations that are not valid
-        # RDF and type their objects exactly ([spec] §16.2) — both
-        # need the vars' kind companions (sweep 39: a COUNT-valued
-        # subquery alias in subject position emitted an 'iri'-spelled
-        # literal subject)
-        q.needs_types = True
     sols = _eval_group(quads, q.where, with_types=q.needs_types,
                        stats=stats)
     if q.post_values is not None:
@@ -3528,22 +3513,8 @@ def sparql(quads: DataFrame, query: str, *, stats: dict | None = None,
             (F.count(F.lit(1)) > F.lit(0)).alias("ask"))
 
     if q.form == "construct":
-        sols = sols.distinct()
-        labels = sorted({pos[1:] for s, _, o in q.template
-                         for pos in (s, o)
-                         if isinstance(pos, str)
-                         and pos.startswith("?__tbn_")})
-        if labels:
-            # one fresh bnode per (template label, solution): label
-            # index + a 64-bit hash of the full solution row is
-            # deterministic and partitioning-independent; solutions are
-            # distinct above, so rows never share an id
-            cols = [F.col(c) for c in sols.columns]
-            row_id = F.lower(F.hex(F.xxhash64(*cols))) if cols \
-                else F.lit("0")
-            for i, lab in enumerate(labels):
-                sols = sols.withColumn(
-                    lab, F.concat(F.lit(f"_:tb{i}_"), row_id))
+        # solutions are distinct, so rows never share a minted bnode
+        sols = _mint_template_bnodes(sols.distinct(), q.template, "_:tb")
         out = instantiate_template(sols, q.template)
         if q.offset:
             out = out.offset(q.offset)

@@ -25,24 +25,23 @@ directly. The quad-table term codec (operators/expand.py
 of cell spellings on the Python side: every reader and term-tuple
 writer goes through it, and it spells quoted terms with
 :func:`term_to_star` and reads them back with the N-Quads term parser.
-On the JVM side :func:`with_quoted_components` decomposes the spelling
-— one ``regexp_extract`` projection, no Python in the row path. One
-level of nesting is decomposable per call (apply again to go deeper);
+On the JVM side :func:`quoted_components` decomposes the spelling —
+one ``regexp_extract`` projection, no Python in the row path. One level
+of nesting is decomposable per call (apply again to go deeper);
 arbitrarily nested spellings still round-trip as opaque strings.
 
-``match_quoted(quads, inner, pred, annot_var)`` is the SPARQL-star BGP
-primitive: rows whose SUBJECT is a quoted triple matching the
-``(s, p, o)`` inner pattern (constants filter, ``?vars`` bind) with the
-outer predicate/object following the plain pattern convention.
+Quoted triple PATTERNS (``("qt", s, p, o)`` terms, SPARQL-star
+``<< s p o >>``) are matched by the one BGP compiler, ``bgp.match_bgp``,
+which places their components on these decomposed columns.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
 from ..jsonld import keys
 from ..jsonld.nquads import QT
-from ..jsonld.tordf import BNODE, IRI, LIT
+from ..jsonld.tordf import BNODE, IRI
 
 XSD_STRING = keys.XSD_STRING
 
@@ -119,49 +118,3 @@ def quoted_components(col: Column) -> list[Column]:
         .when(has_lit, F.lit(XSD_STRING))
     qo_lang = F.when(has_lit & (g[8] != ""), F.lower(g[8]))
     return [qs, qp, qo_kind, qo_value, qo_dt, qo_lang]
-
-
-def with_quoted_components(quads: DataFrame, source: str = "s",
-                           prefix: str = "q") -> DataFrame:
-    """Add ``{prefix}s/{prefix}p/{prefix}o_kind/{prefix}o_value/
-    {prefix}o_datatype/{prefix}o_lang`` columns decomposing the quoted
-    spelling in ``source`` ('s' or 'o_value'); NULL for plain rows."""
-    comps = quoted_components(F.col(source))
-    names = ["s", "p", "o_kind", "o_value", "o_datatype", "o_lang"]
-    out = quads
-    for name, c in zip(names, comps):
-        out = out.withColumn(f"{prefix}{name}", c)
-    return out
-
-
-def _is_var(x: str) -> bool:
-    return isinstance(x, str) and x.startswith("?")
-
-
-def match_quoted(quads: DataFrame, inner: tuple[str, str, str],
-                 pred: str, obj: str) -> DataFrame:
-    """SPARQL-star BGP primitive: ``<< inner >> pred obj`` over rows
-    whose subject is a quoted triple. ``inner`` is an (s, p, o) pattern
-    (constants in table spelling, ``?vars`` bind); ``pred``/``obj``
-    follow the plain pattern convention. Returns one column per bound
-    variable, set semantics."""
-    rows = quads.where(F.col("s").startswith("<<"))
-    rows = with_quoted_components(rows, "s", "__q_")
-    proj: list = []
-    conds: list = []
-    for pat, col in ((inner[0], "__q_s"), (inner[1], "__q_p"),
-                     (inner[2], "__q_o_value")):
-        if _is_var(pat):
-            proj.append(F.col(col).alias(pat[1:]))
-        else:
-            conds.append(F.col(col) == pat)
-    for pat, col in ((pred, "p"), (obj, "o_value")):
-        if _is_var(pat):
-            proj.append(F.col(col).alias(pat[1:]))
-        else:
-            conds.append(F.col(col) == pat)
-    for c in conds:
-        rows = rows.where(c)
-    if not proj:
-        return rows.select(F.lit(1).alias("_exists")).limit(1)
-    return rows.select(*proj).distinct()

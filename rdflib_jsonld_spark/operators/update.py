@@ -57,12 +57,13 @@ from functools import reduce
 from pyspark.sql import DataFrame, functions as F
 
 from ..jsonld.keys import RDF_LANGSTRING, XSD_STRING
+from ..jsonld.tordf import IRI, LIT, QT
 from ..plans.driver import local_frame
-from .bgp import instantiate_template
-from .expand import CORE_SCHEMA, QUAD_KEY_COLS
-from .rounds import release
+from .bgp import _is_var, instantiate_template, leaves, map_leaves
+from .expand import CORE_SCHEMA, QUAD_KEY_COLS, quad_to_cells
+from .rounds import release, released_on_exit
 from .sparql import (Group, SparqlError, XSD, _canon_number, _eval_group,
-                     _Parser)
+                     _mint_template_bnodes, _Parser, _template_scoped)
 
 
 # ---------------------------------------------------------------------------
@@ -265,38 +266,33 @@ class _UpdateParser(_Parser):
         return groups
 
     def _template_triples(self, op: str) -> list[tuple]:
-        trips = self.parse_triples()
         out: list[tuple] = []
-        for s, p, o in trips:
+        for s, p, o in self.parse_triples():
             if not isinstance(p, str):
                 raise SparqlError(f"property paths not allowed in {op} "
                                   f"template")
-            if isinstance(p, str) and p.startswith("?__bn_"):
+            if p.startswith("?__bn_"):
                 raise SparqlError(f"blank node cannot be a predicate "
                                   f"in {op} template")
             if op == "INSERT":
                 # [spec] SPARQL 1.1 Update §3.1.3: INSERT-template
-                # bnodes are instantiated per solution — renamed to
-                # ?__tbn_* so instantiation mints deterministic
-                # per-row ids (engine convention: identical solutions
-                # share one minted bnode, keeping updates replayable)
-                s, o = (f"?__tbn_{pos[6:]}"
-                        if isinstance(pos, str)
-                        and pos.startswith("?__bn_") else pos
-                        for pos in (s, o))
-            else:
-                for pos in (s, o):
-                    if isinstance(pos, str) and pos.startswith("?__bn_"):
-                        # [spec] Update §3.1.3.2: bnodes are DISALLOWED
-                        # in DELETE templates and DATA blocks
-                        raise SparqlError(
-                            f"blank nodes are not allowed in {op} "
-                            f"templates")
+                # bnodes are instantiated per solution
+                out.append(_template_scoped((s, p, o)))
+                continue
+            if any(_is_var(x) and x.startswith("?__bn_")
+                   for x in leaves(("qt", s, p, o))):
+                # [spec] Update §3.1.3.2: bnodes are DISALLOWED in
+                # DELETE templates and DATA blocks
+                raise SparqlError(f"blank nodes are not allowed in {op} "
+                                  f"templates")
             out.append((s, p, o))
         return out
 
     # --- ground quad data ---------------------------------------------------
     def _parse_ground_quads(self) -> list[tuple]:
+        """DATA-block triples → rows ``(g, s, p, o_kind, o_value,
+        o_datatype, o_lang)``, spelled by the quad-table term codec
+        (quoted triples included)."""
         self._data_mode = True
         try:
             groups = self._parse_quad_templates("DATA")
@@ -304,23 +300,13 @@ class _UpdateParser(_Parser):
             self._data_mode = False
         rows: list[tuple] = []
         for term, trips in groups:
-            if term is not None and term.startswith("?"):
+            if _is_var(term):
                 raise SparqlError("variables not allowed in DATA blocks")
+            g = None if term is None else (IRI, term)
             for s, p, o in trips:
-                for pos, what in ((s, "subject"), (p, "predicate")):
-                    if isinstance(pos, str) and pos.startswith("?"):
-                        raise SparqlError(
-                            f"variable {what} not allowed in DATA blocks")
-                    if not isinstance(pos, str):
-                        raise SparqlError(f"literal {what} is not valid RDF")
-                if isinstance(o, tuple):        # literal with metadata
-                    _, val, dt, lang = o
-                    rows.append((term, s, p, "literal", val, dt, lang))
-                elif o.startswith("?"):
-                    raise SparqlError(
-                        "variable object not allowed in DATA blocks")
-                else:
-                    rows.append((term, s, p, "iri", o, None, None))
+                quoted = map_leaves(("qt", s, p, o), _data_term, _data_triple)
+                g_c, s_c, _, *rest = quad_to_cells((g, *quoted[1]))
+                rows.append((g_c, s_c, *rest))
         return rows
 
     def term(self, t):
@@ -351,6 +337,24 @@ class _UpdateParser(_Parser):
                                   "unsupported (v1: deterministic output)")
         return super().term(t)
 
+
+
+def _data_term(x) -> tuple:
+    """A DATA-block leaf → its pure-core term (literals already are
+    one: ``("lit", value, datatype, lang)``)."""
+    if isinstance(x, tuple):
+        return x
+    if _is_var(x):
+        raise SparqlError("variables not allowed in DATA blocks")
+    return (IRI, x)
+
+
+def _data_triple(s: tuple, p: tuple, o: tuple) -> tuple:
+    """A ground DATA triple (quoted or asserted) → a pure-core quoted
+    triple term; only IRIs and quoted triples may be subjects."""
+    if s[0] == LIT or p[0] == LIT:
+        raise SparqlError("literal subject or predicate is not valid RDF")
+    return (QT, (s, p, o))
 
 
 def _template_as_group(tmpl: list[tuple]) -> Group:
@@ -436,19 +440,8 @@ def _distinct_on_key(df: DataFrame) -> DataFrame:
 
 def _instantiate_quads(sols: DataFrame, tmpl: list[tuple],
                        with_g: str | None) -> DataFrame:
-    labels = sorted({pos[1:] for _, trips in tmpl
-                     for s, _, o in trips for pos in (s, o)
-                     if isinstance(pos, str)
-                     and pos.startswith("?__tbn_")})
-    if labels:
-        # INSERT-template bnodes: one per (label, solution row) —
-        # xxhash64 of the full row is deterministic and partitioning-
-        # independent (same convention as CONSTRUCT, sparql.py)
-        cols = [F.col(c) for c in sols.columns]
-        row_id = F.lower(F.hex(F.xxhash64(*cols))) if cols else F.lit("0")
-        for i, lab in enumerate(labels):
-            sols = sols.withColumn(
-                lab, F.concat(F.lit(f"_:ub{i}_"), row_id))
+    sols = _mint_template_bnodes(
+        sols, [t for _, trips in tmpl for t in trips], "_:ub")
     out = None
     for term, trips in tmpl:
         part = instantiate_template(sols, trips,
@@ -583,24 +576,26 @@ def update(quads: DataFrame, text: str, *,
                 for p in parts[1:]:
                     view = view.unionByName(p)
                 scope = None
-            sols = _eval_group(view, where, graph=scope, with_types=True,
-                               stats=stats)
-            n_branches = sum(len(t[1]) for t in (dels or [])) \
-                + sum(len(t[1]) for t in (ins or []))
-            if n_branches > 1:
-                # each template triple scans the solution set once —
-                # don't re-run the WHERE joins per branch (r02 lesson)
-                sols = sols.persist()
-            base = cur
-            if dels is not None:
-                cur = _anti_on_key(cur, _instantiate_quads(sols, dels,
-                                                           with_g))
-            if ins is not None:
-                fresh = _anti_on_key(
-                    _conform(_instantiate_quads(sols, ins, with_g), base),
-                    cur)
-                cur = cur.unionByName(fresh)
-            cur = _materialize(cur)
-            if n_branches > 1:
-                sols.unpersist()
+            # path closures the WHERE checkpointed are freed once this
+            # op's result is materialized (nothing lazy reads them then)
+            with released_on_exit():
+                sols = _eval_group(view, where, graph=scope,
+                                   with_types=True, stats=stats)
+                n_branches = sum(len(t[1]) for t in (dels or [])) \
+                    + sum(len(t[1]) for t in (ins or []))
+                if n_branches > 1:
+                    # each template triple scans the solution set once
+                    # — don't re-run the WHERE joins per branch (r02)
+                    sols = sols.persist()
+                base = cur
+                if dels is not None:
+                    cur = _anti_on_key(
+                        cur, _instantiate_quads(sols, dels, with_g))
+                if ins is not None:
+                    fresh = _anti_on_key(_conform(
+                        _instantiate_quads(sols, ins, with_g), base), cur)
+                    cur = cur.unionByName(fresh)
+                cur = _materialize(cur)
+                if n_branches > 1:
+                    sols.unpersist()
     return cur

@@ -623,3 +623,25 @@ def test_group_algebra_lives_only_in_the_sparql_evaluator():
         hits = [ln for ln in (ops / name).read_text().splitlines()
                 if join_kind.search(ln)]
         assert not hits, (name, hits)
+
+
+def test_pattern_terms_are_walked_only_by_the_walker():
+    """Pattern, template and DATA terms are traversed by bgp.leaves /
+    bgp.map_leaves, which descend into quoted triples ("qt", s, p, o);
+    no module loops over a triple's positions by hand (such loops
+    skipped or misread quoted-triple terms)."""
+    import pathlib
+    import re
+    ops = (pathlib.Path(__file__).resolve().parents[1]
+           / "rdflib_jsonld_spark" / "operators")
+    per_site = re.compile(
+        r"for \w+ in \(\s*[spo]\s*(,\s*[spo]\s*)+\)"   # for pos in (s, o)
+        r"|for \w+ in (t|pat|term|triple)(\[1:\])?\s*:"   # for pos in t:
+        r"|isinstance\((pos|inner), str\)")
+    for name in ("sparql.py", "update.py", "bgp.py", "star.py", "paths.py"):
+        text = (ops / name).read_text()
+        hits = [ln for ln in text.splitlines() if per_site.search(ln)]
+        assert not hits, (name, hits)
+        # one variable test, bgp._is_var
+        assert ("def _is_var(" in text) == (name == "bgp.py"), name
+

@@ -42,6 +42,11 @@ UPDATE_3OP = (
     f"INSERT {{ ?s v:linked true }} WHERE {{ ?s <{SAME_AS}> ?o }} ; "
     "DELETE WHERE { ?s v:label ?l }")
 
+UPDATE_PATHS_2OP = (
+    f"PREFIX v: <{V}> "
+    f"INSERT {{ ?x v:reached true }} WHERE {{ <{E}n0> <{SAME_AS}>+ ?x }} ; "
+    f"INSERT {{ ?x v:reaches true }} WHERE {{ ?x <{SAME_AS}>+ <{E}n8> }}")
+
 CALLS = {
     "bfs_distances": lambda s: bfs_distances(chain_edges(s), ["n0"]),
     "transitive_closure": lambda s: transitive_closure(chain_edges(s)),
@@ -50,6 +55,9 @@ CALLS = {
     "seeded_sameAs_plus": lambda s: match_path(
         chain_quads(s), E + "n0", f"<{SAME_AS}>+", "?x"),
     "update_3op": lambda s: update(chain_quads(s), UPDATE_3OP),
+    # the closures each op's WHERE checkpointed are freed with the op
+    "update_paths_2op": lambda s: update(chain_quads(s, hops=8),
+                                         UPDATE_PATHS_2OP),
 }
 
 

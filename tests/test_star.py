@@ -3,10 +3,10 @@ RDF 1.2 + SPARQL 1.2 WDs; no reference counterpart — predates RDF-star).
 
 Pure core: N-Quads-star and Turtle-star parse/serialize (incl. the
 {| ... |} annotation sugar and nesting). Spark: the star.py table
-spelling through the N-Quads source/sink, JVM decomposition, the
-match_quoted kwargs primitive, and '<< s p o >>' patterns in the SPARQL
-text front-end (subject and object position, inner constants incl.
-tagged literals, inner variables joining plain patterns).
+spelling through the N-Quads source/sink, JVM decomposition, quoted
+patterns on the match_bgp kwargs surface, and '<< s p o >>' patterns in
+the SPARQL text front-end (subject and object position, inner constants
+incl. tagged literals, inner variables joining plain patterns).
 """
 
 import pytest
@@ -92,10 +92,10 @@ def test_spark_star_io_roundtrip(star_quads, spark, tmp_path):
 
 
 def test_match_quoted_kwargs(star_quads):
-    from rdflib_jsonld_spark.operators.star import match_quoted
-    rows = match_quoted(star_quads, ("?s", E + "p", "?v"),
-                        E + "certainty", "?c")
-    got = {tuple(r) for r in rows.collect()}
+    from rdflib_jsonld_spark.operators.bgp import match_bgp
+    rows = match_bgp(star_quads, [
+        (("qt", "?s", E + "p", "?v"), E + "certainty", "?c")])
+    got = {tuple(r) for r in rows.select("s", "v", "c").collect()}
     assert got == {(E + "a", "v", "0.9"), (E + "b", "w", "0.4")}
 
 
