@@ -546,7 +546,8 @@ def construct(quads: DataFrame,
     sols = match_bgp_extended(quads, where, optional=optional,
                               filters=filters, distinct=True,
                               with_types=True)
-    return instantiate_template(sols, template)
+    return instantiate_template(sols, template) \
+        .dropDuplicates(QUAD_KEY_COLS)
 
 
 def _star_escape_col(c):
@@ -558,12 +559,31 @@ def _star_escape_col(c):
     return c
 
 
-def _qt_template_col(term: tuple, have: set):
+_XSD = "http://www.w3.org/2001/XMLSchema#"
+_NUM_DTS = {"bigint": _XSD + "integer", "int": _XSD + "integer",
+            "double": _XSD + "double", "float": _XSD + "double",
+            "boolean": _XSD + "boolean"}
+
+
+def _typed_lit(dtypes: dict, var: str) -> str | None:
+    """The datatype of a TYPED solution column (numeric aggregate
+    alias, boolean BIND), which is statically a literal; None for a
+    string column (a term spelled by its value and companions)."""
+    t = dtypes.get(var)
+    if t is None or t == "string":
+        return None
+    if t.startswith("decimal"):
+        return _XSD + "decimal"
+    return _NUM_DTS.get(t, XSD_STRING)
+
+
+def _qt_template_col(term: tuple, dtypes: dict):
     """Template quoted-triple term → a column building its star.py
     table spelling from the current solution row (SPARQL 1.2 annotation
     blocks / quoted templates in CONSTRUCT and Update). Components are
-    vars (spelled by their type companions when captured), constants
-    (spelled by ``star.term_to_star``), or nested quoted terms."""
+    vars (a typed column as a literal of its datatype, else spelled by
+    their type companions when captured), constants (spelled by
+    ``star.term_to_star``), or nested quoted terms."""
     def leaf(pos):
         if not _is_var(pos):
             enc = decode_literal(pos)
@@ -578,10 +598,13 @@ def _qt_template_col(term: tuple, have: set):
             return F.lit(term_to_star(t))
         var = pos[1:]
         v = F.col(var)
+        if (typed := _typed_lit(dtypes, var)) is not None:
+            return F.concat(F.lit('"'), v.cast("string"),
+                            F.lit(f'"^^<{typed}>'))
         shape = F.when(v.startswith("_:"), F.lit("bnode")) \
             .when(v.startswith("<<"), F.lit("triple")) \
             .otherwise(F.lit("iri"))
-        if f"{TYPED_PREFIX}{var}__kind" in have:
+        if f"{TYPED_PREFIX}{var}__kind" in dtypes:
             kind = F.coalesce(F.col(f"{TYPED_PREFIX}{var}__kind"), shape)
             dt = F.col(f"{TYPED_PREFIX}{var}__datatype")
             lang = F.col(f"{TYPED_PREFIX}{var}__lang")
@@ -616,26 +639,14 @@ def instantiate_template(sols: DataFrame,
     ``graph`` names the target graph for every produced quad: ``None``
     (default graph), a constant IRI, or a ``?var`` bound in ``sols``
     (rows where it is unbound are skipped, mirroring s/p/o) — used by
-    SPARQL Update's ``GRAPH {}`` template blocks."""
-    have = set(sols.columns)
+    SPARQL Update's ``GRAPH {}`` template blocks. The quads are not
+    deduplicated: a caller that needs a set drops duplicates once, on
+    ``QUAD_KEY_COLS``."""
     dtypes = dict(sols.dtypes)
     # a TYPED solution column (numeric aggregate alias, boolean BIND)
     # is statically a literal — valid in object position only
     # (sweep 39: a COUNT-valued subquery alias in subject position
     # emitted an 'iri'-spelled literal subject)
-    xsd = "http://www.w3.org/2001/XMLSchema#"
-    _NUM_DTS = {"bigint": xsd + "integer", "int": xsd + "integer",
-                "double": xsd + "double", "float": xsd + "double",
-                "boolean": xsd + "boolean"}
-
-    def _typed_lit(var: str) -> str | None:
-        t = dtypes.get(var)
-        if t is None or t == "string":
-            return None
-        if t.startswith("decimal"):
-            return xsd + "decimal"
-        return _NUM_DTS.get(t, XSD_STRING)
-
     if graph is None:
         g_col = F.lit(None).cast("string")
     elif _is_var(graph):
@@ -645,39 +656,39 @@ def instantiate_template(sols: DataFrame,
 
     out = None
     for s, p, o in template:
-        if any(_is_var(x) and _typed_lit(x[1:]) is not None
+        if any(_is_var(x) and _typed_lit(dtypes, x[1:]) is not None
                for x in leaves(("qt", s, p, o), only="sp")) \
                 or (graph is not None and _is_var(graph)
-                    and _typed_lit(graph[1:]) is not None):
+                    and _typed_lit(dtypes, graph[1:]) is not None):
             continue    # literal subject/predicate/graph — never valid
         def _subj(pos):
             if isinstance(pos, tuple) and pos[0] == "qt":
                 # quoted-triple template term (annotation blocks /
                 # '<< … >>' in CONSTRUCT/Update templates): build the
                 # star.py table spelling from the solution row
-                return _qt_template_col(pos, have)
+                return _qt_template_col(pos, dtypes)
             return F.col(pos[1:]) if _is_var(pos) else F.lit(pos)
 
         s_col, p_col = _subj(s), _subj(p)
         if isinstance(o, tuple) and o[0] == "qt":
-            o_col = _qt_template_col(o, have)
+            o_col = _qt_template_col(o, dtypes)
             kind = F.lit("triple")
             dt = F.lit(None).cast("string")
             lang = F.lit(None).cast("string")
-        elif _is_var(o) and _typed_lit(o[1:]) is not None:
+        elif _is_var(o) and _typed_lit(dtypes, o[1:]) is not None:
             # typed computed column in object position: a literal of
             # the column's promoted datatype, value as its lexical form
             var = o[1:]
             o_col = F.col(var).cast("string")
             kind = F.when(o_col.isNotNull(), F.lit("literal"))
-            dt = F.when(o_col.isNotNull(), F.lit(_typed_lit(var)))
+            dt = F.when(o_col.isNotNull(), F.lit(_typed_lit(dtypes, var)))
             lang = F.lit(None).cast("string")
         elif _is_var(o):
             var = o[1:]
             o_col = F.col(var)
             shape_kind = F.when(o_col.startswith("_:"), F.lit("bnode")) \
                 .otherwise(F.lit("iri"))
-            if f"{TYPED_PREFIX}{var}__kind" in have:
+            if f"{TYPED_PREFIX}{var}__kind" in dtypes:
                 # companions can be NULL when the var's object binding
                 # came from an unmatched OPTIONAL but the value itself is
                 # bound via a required s/p position → fall back to shape
@@ -714,7 +725,30 @@ def instantiate_template(sols: DataFrame,
         # unionByName insert a crashing ANSI string cast (sweep 39)
         g_col, s_col, p_col, o_col = (c.cast("string") for c in
                                       (g_col, s_col, p_col, o_col))
-        row = sols.select(
+        # [spec] CONSTRUCT §16.2 / Update §3.1.3: instantiations that
+        # would not be valid RDF are SKIPPED — a template var bound to
+        # a literal cannot take a subject, predicate or graph slot, and
+        # a bnode cannot be a predicate, in a quoted triple too (sweep
+        # 39: a literal-bound ?s emitted a literal-subject quad spelled
+        # as an IRI)
+        ok = s_col.isNotNull() & p_col.isNotNull() & o_col.isNotNull()
+        for slot, kinds in (("s", ("iri", "bnode", "triple")),
+                            ("p", ("iri",))):
+            for x in leaves(("qt", s, p, o), only=slot):
+                if not _is_var(x):
+                    continue
+                kc = f"{TYPED_PREFIX}{x[1:]}__kind"
+                if kc in dtypes:
+                    ok &= F.coalesce(F.col(kc), F.lit("iri")).isin(*kinds)
+                if slot == "p":
+                    ok &= ~F.col(x[1:]).startswith("_:")
+        if graph is not None and _is_var(graph):
+            ok &= g_col.isNotNull()
+            gkc = f"{TYPED_PREFIX}{graph[1:]}__kind"
+            if gkc in dtypes:
+                ok &= F.coalesce(F.col(gkc), F.lit("iri")) \
+                    .isin("iri", "bnode")
+        row = sols.where(ok).select(
             g_col.alias("g"),
             s_col.alias("s"),
             s_col.startswith("_:").alias("s_is_bnode"),
@@ -723,32 +757,10 @@ def instantiate_template(sols: DataFrame,
             o_col.alias("o_value"),
             dt.alias("o_datatype"),
             lang.alias("o_lang"),
-        ).where(s_col.isNotNull() & p_col.isNotNull() & o_col.isNotNull())
-        # [spec] CONSTRUCT §16.2 / Update §3.1.3: instantiations that
-        # would not be valid RDF are SKIPPED — a template var bound to
-        # a literal cannot take subject/predicate/graph position, and a
-        # bnode cannot be a predicate (sweep 39: a literal-bound ?s
-        # emitted a literal-subject quad spelled as an IRI)
-        for pos, require_iri in ((s, False), (p, True)):
-            if not _is_var(pos):
-                continue
-            kc = f"{TYPED_PREFIX}{pos[1:]}__kind"
-            if kc in have:
-                k_ok = F.coalesce(F.col(kc), F.lit("iri")) \
-                    .isin(*(["iri"] if require_iri
-                            else ["iri", "bnode", "triple"]))
-                row = row.where(k_ok)
-            if require_iri:
-                row = row.where(~F.col("p").startswith("_:"))
-        if graph is not None and _is_var(graph):
-            row = row.where(F.col("g").isNotNull())
-            gkc = f"{TYPED_PREFIX}{graph[1:]}__kind"
-            if gkc in have:
-                row = row.where(F.coalesce(F.col(gkc), F.lit("iri"))
-                                .isin("iri", "bnode"))
+        )
         out = row if out is None else out.unionByName(row)
     if out is None:
         # every template triple was statically invalid (typed-literal
         # subject/predicate) — an empty quad table
         return local_frame(sols.sparkSession, [], CORE_SCHEMA)
-    return out.dropDuplicates(QUAD_KEY_COLS)
+    return out

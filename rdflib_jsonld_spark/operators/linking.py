@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from rdflib_jsonld_spark.plans.driver import local_frame
+from rdflib_jsonld_spark.plans.driver import collect_bounded, local_frame
 from rdflib_jsonld_spark.sources.registry import OWL_SAMEAS, VOCAB
 from .rounds import release
 
@@ -155,13 +155,13 @@ def connected_components(edges: DataFrame,
     lineage so plans stay O(1) deep (SURVEY.md §2.F2).
     """
     e = edges.select("src", "dst").where(F.col("src") != F.col("dst"))
-    # one-action probe: limit(T+1) returns the FULL edge set iff it fits
-    # under the threshold — avoids a separate count() pass over the
-    # (potentially expensive, e.g. freshly-expanded) edge plan.
-    probe = e.limit(driver_threshold + 1).collect()
-    if not probe:
+    # one bounded collect returns the FULL edge set iff it fits under
+    # the threshold — no separate count() pass over the (potentially
+    # expensive, e.g. freshly-expanded) edge plan
+    probe = collect_bounded(e, driver_threshold)
+    if probe == []:
         return e.select(F.col("src").alias("node"), F.col("dst").alias("root"))
-    if len(probe) <= driver_threshold:
+    if probe is not None:
         pairs = _driver_union_find([(r.src, r.dst) for r in probe])
         return local_frame(edges.sparkSession, pairs, ["node", "root"])
     cur, prev_sig = e, None

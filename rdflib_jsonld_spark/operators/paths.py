@@ -44,12 +44,14 @@ Scale: every combinator is JVM-side column algebra; the only iterative
 piece is the closure, which always runs to its fixpoint (no round cap):
 path doubling (O(log diameter) shuffle rounds,
 ``linking.transitive_closure``) or, when ``match_path`` has a constant
-endpoint, SEEDED frontier expansion from the constant
-(``rounds.frontier_rounds``, one small round per hop), so a query like
+endpoint, SEEDED expansion from the constant, so a query like
 ``<e> sameAs* ?x`` never materializes the full closure — the ALP shape
-of [spec] §18.4. An unseeded ``star``/``opt`` materializes the node
-universe (≤ 2× quad count rows) — intended for alias-graph-sized
-relations, same posture as transitive_closure.
+of [spec] §18.4. A seeded closure whose step relation and seeds fit
+``plans.driver.collect_bounded`` runs as a BFS on the driver; a larger
+one runs ``rounds.frontier_rounds``, one small round per hop. An
+unseeded ``star``/``opt`` materializes the node universe (≤ 2× quad
+count rows) — intended for alias-graph-sized relations, same posture
+as transitive_closure.
 """
 
 from __future__ import annotations
@@ -57,7 +59,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..jsonld.keys import XSD_STRING
-from ..plans.driver import local_frame
+from ..plans.driver import collect_bounded, local_frame
 from .bgp import (IRI_SHAPE, TK_PREFIX, TYPED_PREFIX, _is_var,
                   decode_literal, term_key_col)
 from .linking import transitive_closure
@@ -416,8 +418,10 @@ def eval_path_from(quads: DataFrame, path: tuple, seeds: DataFrame,
 
 def _eval_from(quads: DataFrame, path: tuple, seeds: DataFrame,
                graph: str | None) -> DataFrame:
-    seeds = seeds.select("src").distinct()
     kind = path[0]
+    if kind in ("plus", "star"):
+        return _closure_from(quads, path, seeds.select("src"), graph)
+    seeds = seeds.select("src").distinct()
     if kind in ("link", "nps"):
         return eval_path(quads, path, graph).join(seeds, on="src")
     if kind == "inv":
@@ -429,36 +433,69 @@ def _eval_from(quads: DataFrame, path: tuple, seeds: DataFrame,
     if kind in ("seq", "alt"):
         return _seq_alt(kind, path[1:], lambda part, mid: _eval_from(
             quads, part, seeds if mid is None else mid, graph))
-    if kind in ("plus", "star"):
-        # materialize the step relation once — the BFS loop scans it
-        # every round (and it may carry a Python expansion upstream)
-        edges = eval_path(quads, path[1], graph).localCheckpoint(eager=True)
-        # [spec] §18.4 ZeroLengthPath(term X, var Y) binds Y to X
-        # UNCONDITIONALLY — a seeded (constant-endpoint) star includes
-        # the seed itself even when it never occurs in the graph
-        # (sweep 21; only the VAR-VAR zero-length path is restricted to
-        # graph terms). Mid-sequence seeds always occur in the graph,
-        # so this changes nothing for threaded sequences.
-        def hop(frontier):   # (origin, node) → (origin, next node)
-            return (frontier.alias("f")
-                    .join(edges.alias("e"), F.col("f.node") == F.col("e.src"))
-                    .select(F.col("f.origin").alias("origin"),
-                            F.col("e.dst").alias("node"))
-                    .distinct())
-
-        zero = seeds.select(F.col("src").alias("origin"),
-                            F.col("src").alias("node"))
-        visited = frontier_rounds(
-            zero if kind == "star" else hop(zero),
-            lambda f, v, _: hop(f).join(v, ["origin", "node"], "left_anti"))
-        release(edges)   # the loop's checkpoints no longer read it
-        return visited.select(F.col("origin").alias("src"),
-                              F.col("node").alias("dst"))
     if kind == "opt":
         base = _eval_from(quads, path[1], seeds, graph)
         ident = seeds.select("src", F.col("src").alias("dst"))
         return base.union(ident).distinct()
     raise ValueError(f"unknown path node {path!r}")
+
+
+def _closure_from(quads: DataFrame, path: tuple, seeds: DataFrame,
+                  graph: str | None) -> DataFrame:
+    """Seeded ``plus`` / ``star``: (src, dst) pairs, src ∈ ``seeds``."""
+    kind = path[0]
+    step = eval_path(quads, path[1], graph)
+    edge_rows = collect_bounded(step)
+    seed_rows = collect_bounded(seeds) if edge_rows is not None else None
+    if seed_rows is not None:
+        return local_frame(quads.sparkSession, _driver_closure(
+            edge_rows, {r.src for r in seed_rows}, kind == "star"),
+            "src string, dst string")
+    # materialize the step relation once — the BFS loop scans it every
+    # round (and it may carry a Python expansion upstream)
+    edges = step.localCheckpoint(eager=True)
+
+    def hop(frontier):   # (origin, node) → (origin, next node)
+        return (frontier.alias("f")
+                .join(edges.alias("e"), F.col("f.node") == F.col("e.src"))
+                .select(F.col("f.origin").alias("origin"),
+                        F.col("e.dst").alias("node"))
+                .distinct())
+
+    # [spec] §18.4 ZeroLengthPath(term X, var Y) binds Y to X
+    # UNCONDITIONALLY — a seeded (constant-endpoint) star includes the
+    # seed itself even when it never occurs in the graph (sweep 21; only
+    # the VAR-VAR zero-length path is restricted to graph terms).
+    # Mid-sequence seeds always occur in the graph, so this changes
+    # nothing for threaded sequences.
+    zero = seeds.distinct().select(F.col("src").alias("origin"),
+                                   F.col("src").alias("node"))
+    visited = frontier_rounds(
+        zero if kind == "star" else hop(zero),
+        lambda f, v, _: hop(f).join(v, ["origin", "node"], "left_anti"))
+    release(edges)   # the loop's checkpoints no longer read it
+    return visited.select(F.col("origin").alias("src"),
+                          F.col("node").alias("dst"))
+
+
+def _driver_closure(edges: list, seeds: set, reflexive: bool) -> list:
+    """(seed, node) for every node reachable from a seed in one or more
+    steps of ``edges`` (``(src, dst)`` rows), plus (seed, seed) when
+    ``reflexive`` — the driver twin of the frontier loop."""
+    succ: dict = {}
+    for e in edges:
+        succ.setdefault(e.src, []).append(e.dst)
+    out = []
+    for seed in seeds:
+        seen = {seed} if reflexive else set()
+        todo = list(succ.get(seed, ()))
+        while todo:
+            node = todo.pop()
+            if node not in seen:
+                seen.add(node)
+                todo.extend(succ.get(node, ()))
+        out.extend((seed, node) for node in seen)
+    return sorted(out, key=str)
 
 
 def match_path(quads: DataFrame, subj: str, path: tuple | str, obj: str,

@@ -96,6 +96,7 @@ from .bgp import (TK_PREFIX, TYPED_PREFIX, _companion_cols, _is_var,
                   _pattern_vars, decode_literal, encode_literal,
                   instantiate_template, leaves, map_leaves, match_bgp,
                   patch_companion_refs, term_key_of)
+from .expand import QUAD_KEY_COLS
 from ..plans.driver import local_frame
 from .paths import match_path
 from .rounds import frontier_rounds
@@ -3515,7 +3516,8 @@ def sparql(quads: DataFrame, query: str, *, stats: dict | None = None,
     if q.form == "construct":
         # solutions are distinct, so rows never share a minted bnode
         sols = _mint_template_bnodes(sols.distinct(), q.template, "_:tb")
-        out = instantiate_template(sols, q.template)
+        out = instantiate_template(sols, q.template) \
+            .dropDuplicates(QUAD_KEY_COLS)
         if q.offset:
             out = out.offset(q.offset)
         if q.limit is not None:

@@ -2,13 +2,19 @@
 
 ``update(quads, text)`` parses a ``;``-separated sequence of update
 operations and returns a NEW quad DataFrame (the next snapshot of the
-store). Nothing mutates: each operation is pure set algebra over the
-input — a deletion is a null-safe anti-join on the quad identity key,
-an insertion is an anti-joined union (INSERT DATA and LOAD rows made
-distinct on that key first) — each op a Catalyst plan that
-AQE sizes at runtime, its result checkpointed before the next op reads
-it (see :func:`update`), and at warehouse scale the result is simply
-what gets written back as the next table version.
+store). Nothing mutates the input: during a request the store is
+``base ⊖ D ⊕ I`` — the input frame, read lazily, minus the deleted
+quad identities D plus the inserted rows I, both held on the driver.
+A DATA operation edits D and I and starts no Spark job; a WHERE runs
+once over the current view and its solutions come to the driver
+through one bounded collect (``plans.driver.collect_bounded``). The
+returned frame is the input filtered by D plus I as a
+``LocalRelation``, so at warehouse scale it is simply what gets
+written back as the next table version. A delta over
+``plans.driver.DRIVER_ROWS`` rows is folded into the store with one
+checkpoint of set algebra instead: a deletion is a null-safe anti-join
+on the quad identity key, an insertion a union with the rows the store
+lacks (see :func:`update`).
 
 Supported operations (SPARQL 1.1 Update §3.1, ``[spec]``
 https://www.w3.org/TR/sparql11-update/):
@@ -54,13 +60,14 @@ from __future__ import annotations
 import re
 from functools import reduce
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..jsonld.keys import RDF_LANGSTRING, XSD_STRING
 from ..jsonld.tordf import IRI, LIT, QT
-from ..plans.driver import local_frame
+from ..plans import driver
+from ..plans.driver import collect_bounded, local_frame
 from .bgp import _is_var, instantiate_template, leaves, map_leaves
-from .expand import CORE_SCHEMA, QUAD_KEY_COLS, quad_to_cells
+from .expand import QUAD_KEY_COLS, quad_to_cells
 from .rounds import release, released_on_exit
 from .sparql import (Group, SparqlError, XSD, _canon_number, _eval_group,
                      _mint_template_bnodes, _Parser, _template_scoped)
@@ -271,7 +278,8 @@ class _UpdateParser(_Parser):
             if not isinstance(p, str):
                 raise SparqlError(f"property paths not allowed in {op} "
                                   f"template")
-            if p.startswith("?__bn_"):
+            if any(_is_var(x) and x.startswith("?__bn_")
+                   for x in leaves(("qt", s, p, o), only="p")):
                 raise SparqlError(f"blank node cannot be a predicate "
                                   f"in {op} template")
             if op == "INSERT":
@@ -388,33 +396,77 @@ def _conform(df: DataFrame, like: DataFrame) -> DataFrame:
     return df.select(*[f.name for f in like.schema.fields])
 
 
-def _key_col(df: DataFrame, c: str):
-    """Quad-identity expression for one key column — RDF 1.1 TERM
-    identity, not storage spelling (sweep 39): a plain literal ≡
-    explicit ``xsd:string``, a language tag normalizes case and
-    implies ``rdf:langString``. The text front-end's DATA parser
-    spells plain literals with explicit xsd:string while the store
-    convention is NULL — the raw key silently missed those deletes."""
-    col = df[c]
+def _key_sql(c: str) -> str:
+    """SQL of the quad-identity expression for key column ``c`` (or a
+    renamed ``__u_<c>``) — RDF 1.1 TERM identity, not storage spelling
+    (sweep 39): a plain literal ≡ explicit ``xsd:string``, a language
+    tag normalizes case and implies ``rdf:langString``. The text
+    front-end's DATA parser spells plain literals with explicit
+    xsd:string while the store convention is NULL — the raw key
+    silently missed those deletes. SQL text, because each Column built
+    through the Py4J gateway is a round trip."""
     if c.endswith("o_datatype"):
-        return F.nullif(F.nullif(col, F.lit(XSD_STRING)),
-                        F.lit(RDF_LANGSTRING))
+        return f"nullif(nullif(`{c}`, '{XSD_STRING}'), '{RDF_LANGSTRING}')"
     if c.endswith("o_lang"):
-        return F.lower(col)
-    return col
+        return f"lower(`{c}`)"
+    return f"`{c}`"
+
+
+def _key_col(c: str):
+    """:func:`_key_sql` as a Column."""
+    return F.expr(_key_sql(c))
+
+
+def _key_join(base: DataFrame, other: DataFrame, how: str) -> DataFrame:
+    """``base`` joined to ``other`` on the quad identity key — a
+    null-safe equi-join (still a hash join), right side renamed so the
+    join never self-references."""
+    d = other.select(*[F.col(c).alias(f"__u_{c}") for c in QUAD_KEY_COLS])
+    cond = reduce(lambda a, b: a & b,
+                  [_key_col(c).eqNullSafe(_key_col(f"__u_{c}"))
+                   for c in QUAD_KEY_COLS])
+    return base.join(d, cond, how)
 
 
 def _anti_on_key(base: DataFrame, other: DataFrame) -> DataFrame:
-    """base ∖ other on the quad identity key — null-safe equi-join
-    (still a hash join), right side renamed so the anti never
-    self-references. The right side is not deduplicated: an anti-join
-    does not depend on its multiplicity, and for an insertion it is
-    the whole store."""
-    d = other.select(*[F.col(c).alias(f"__u_{c}") for c in QUAD_KEY_COLS])
-    cond = reduce(lambda a, b: a & b,
-                  [_key_col(base, c).eqNullSafe(
-                      _key_col(d, f"__u_{c}")) for c in QUAD_KEY_COLS])
-    return base.join(d, cond, "left_anti")
+    """base ∖ other on the quad identity key. ``other`` is the join's
+    build side and is not deduplicated: an anti-join does not depend
+    on its multiplicity. Keep it small: an insertion anti-joins its
+    rows against the few store rows that share their key
+    (:func:`_add_fresh`), never against the whole store."""
+    return _key_join(base, other, "left_anti")
+
+
+def _add_fresh(store: DataFrame, rows: DataFrame) -> DataFrame:
+    """store ∪ the ``rows`` whose quad identity the store lacks. A
+    left-semi join of the store against ``rows`` (the small build side)
+    finds the store rows that share a key; only those meet the
+    anti-join, so the store is never hashed."""
+    rows = _conform(rows, store)
+    return store.unionByName(
+        _anti_on_key(rows, _key_join(store, rows, "left_semi")))
+
+
+def _key_text(key: tuple) -> str:
+    """A :func:`_data_key` tuple as one string: each cell
+    length-prefixed (``len:value``, ``-`` for NULL), so distinct keys
+    never collide. :func:`_with_keys` spells a row's key the same way."""
+    return "|".join("-" if v is None else f"{len(v)}:{v}" for v in key)
+
+
+def _with_keys(df: DataFrame, keys, keep: bool = True) -> DataFrame:
+    """The rows of ``df`` whose quad identity is one of the driver-held
+    ``keys`` (:func:`_data_key` tuples), or with ``keep=False`` is not.
+    The keys are string literals of one ``IN`` filter — a hash-set
+    probe per row, no join and no build side — in one SQL text: a
+    literal Column built through the Py4J gateway costs a round trip,
+    milliseconds for each of thousands of keys."""
+    spelled = ", ".join(f"coalesce(concat(length({e}), ':', {e}), '-')"
+                        for e in map(_key_sql, QUAD_KEY_COLS))
+    texts = ", ".join("'" + _key_text(k).replace("\\", "\\\\")
+                      .replace("'", "\\'") + "'" for k in keys)
+    return df.where(F.expr(f"concat_ws('|', {spelled}) "
+                           f"{'' if keep else 'NOT '}IN ({texts})"))
 
 
 def _data_key(row: tuple) -> tuple:
@@ -432,7 +484,7 @@ def _distinct_on_key(df: DataFrame) -> DataFrame:
     spelled twice (``"v"@EN`` / ``"v"@en``, plain / ``xsd:string``).
     The kept row is the least of its group, which makes the stored
     spelling deterministic."""
-    keys = [_key_col(df, c).alias(f"__k_{c}") for c in QUAD_KEY_COLS]
+    keys = [_key_col(c).alias(f"__k_{c}") for c in QUAD_KEY_COLS]
     return (df.groupBy(*keys)
             .agg(F.min(F.struct(*df.columns)).alias("__row"))
             .select("__row.*"))
@@ -440,6 +492,7 @@ def _distinct_on_key(df: DataFrame) -> DataFrame:
 
 def _instantiate_quads(sols: DataFrame, tmpl: list[tuple],
                        with_g: str | None) -> DataFrame:
+    """Template quads per solution row (not deduplicated)."""
     sols = _mint_template_bnodes(
         sols, [t for _, trips in tmpl for t in trips], "_:ub")
     out = None
@@ -448,7 +501,101 @@ def _instantiate_quads(sols: DataFrame, tmpl: list[tuple],
                                     graph=term if term is not None
                                     else with_g)
         out = part if out is None else out.unionByName(part)
-    return out.dropDuplicates(QUAD_KEY_COLS)
+    return out
+
+
+_KEY_SCHEMA = ", ".join(f"{c} string" for c in QUAD_KEY_COLS)
+
+
+class _Store:
+    """The store during one request, ``base ⊖ D ⊕ I``. ``base`` is a
+    lazy frame: the input, filtered by CLEAR / COPY / MOVE, or the last
+    fold. ``dels`` (D) are identity keys (:func:`_data_key`) removed
+    from it, ``ins`` (I) the inserted rows by key, both on the driver;
+    ``unsure`` are the keys of ``ins`` that ``base`` may already hold.
+    A delta larger than ``driver.DRIVER_ROWS`` is folded into ``base``
+    with one checkpoint."""
+
+    def __init__(self, quads: DataFrame):
+        self.spark = quads.sparkSession
+        self.base = quads
+        self.fields = quads.columns
+        # inserted rows carry NULL lineage, whatever the input's
+        # nullability
+        self.schema = T.StructType([T.StructField(f.name, f.dataType)
+                                    for f in quads.schema.fields])
+        self.dels: set[tuple] = set()
+        self.ins: dict[tuple, tuple] = {}
+        self.unsure: set[tuple] = set()
+        self.ckpt: DataFrame | None = None
+
+    def delete(self, keys) -> None:
+        for k in keys:
+            self.dels.add(k)
+            self.ins.pop(k, None)
+            self.unsure.discard(k)
+        self._fit()
+
+    def insert(self, rows) -> None:
+        """Insert row dicts; a quad the store holds keeps its row."""
+        for r in rows:
+            k = _data_key(tuple(r[c] for c in QUAD_KEY_COLS))
+            if k not in self.ins:
+                self.ins[k] = tuple(r.get(f) for f in self.fields)
+                if k not in self.dels:
+                    self.unsure.add(k)
+        self._fit()
+
+    def keep(self, cond, keep_g) -> None:
+        """Keep the quads whose graph passes: ``cond`` on ``base``,
+        ``keep_g(g)`` on the inserted rows."""
+        self.base = self.base.where(cond)
+        self.ins = {k: r for k, r in self.ins.items() if keep_g(k[0])}
+        self.unsure &= self.ins.keys()
+
+    def view(self) -> DataFrame:
+        """The store as a frame, lazy over ``base``. Settles ``unsure``
+        first with one Spark job: the ``base`` rows whose key is an
+        unsure insert come back, and those inserts are dropped."""
+        if self.unsure:
+            held = _with_keys(self.base, self.unsure).select(
+                *map(_key_col, QUAD_KEY_COLS)).collect()
+            for k in held:
+                self.ins.pop(tuple(k), None)
+            self.unsure = set()
+        out = self.base
+        if self.dels:
+            out = _with_keys(out, self.dels, keep=False)
+        if self.ins:
+            out = out.unionByName(
+                local_frame(self.spark, self.ins.values(), self.schema))
+        return out
+
+    def fold(self, dels: DataFrame | None = None,
+             ins: DataFrame | None = None) -> None:
+        """Checkpoint ``base ⊖ D ⊕ I``, then ``dels`` removed and the
+        fresh ``ins`` added, as the new ``base``; the previous fold's
+        checkpoint is released."""
+        cur = self.base
+        if self.dels:
+            cur = _anti_on_key(cur, local_frame(self.spark, self.dels,
+                                                _KEY_SCHEMA))
+        if self.ins:
+            cur = _add_fresh(cur, local_frame(self.spark, self.ins.values(),
+                                              self.schema))
+        if dels is not None:
+            cur = _anti_on_key(cur, dels)
+        if ins is not None:
+            cur = _add_fresh(cur, ins)
+        out = cur.localCheckpoint(eager=True)
+        if self.ckpt is not None:
+            release(self.ckpt)
+        self.base = self.ckpt = out
+        self.dels, self.ins, self.unsure = set(), {}, set()
+
+    def _fit(self) -> None:
+        if max(len(self.dels), len(self.ins)) > driver.DRIVER_ROWS:
+            self.fold()
 
 
 def update(quads: DataFrame, text: str, *,
@@ -461,29 +608,23 @@ def update(quads: DataFrame, text: str, *,
     repeated in its block (``"v"@EN`` and ``"v"@en`` are one term),
     LOAD the least, and neither stores a quad the store already has.
 
-    Each mutating op's result store is eagerly ``localCheckpoint``-ed
-    before the next op reads it, and ``rounds.release`` frees the
-    previous op's checkpoint once its successor exists (``unpersist()``
-    would not). Each mutating op references
-    its input store 2-5 times (WHERE eval + delete anti-join + insert
-    anti-join + union), so a lazy ;-sequence duplicates each op's
-    subtree multiplicatively — measured 7.4s lazy vs 4.0s checkpointed
-    for the 3-op bench rewrite at sf0.1 warm (r04 A/B, 3 reps), and the
-    lazy plans exceeded Janino codegen limits in the update fuzzer. At
-    cluster scale this trades one full-store materialization per op
-    (spillable, executor-local) against O(ops²) redundant anti-join
-    subtree evals; CLEAR and empty sequences stay lazy filters."""
+    The request keeps the store as ``base ⊖ D ⊕ I`` (:class:`_Store`):
+    DATA operations only edit the driver-held D and I and start no
+    Spark job; a WHERE is evaluated once over the view and its
+    solutions come back through one ``driver.collect_bounded``, so both
+    templates are instantiated over those rows as a ``LocalRelation``.
+    Set semantics cost one probe of the store (an ``IN`` filter over
+    the inserted keys it may already hold) before a WHERE or the
+    result reads newly inserted rows. The result is ``base`` minus D
+    (an ``IN`` filter) plus I (a ``LocalRelation``): lazy over the
+    input and holding no cached blocks, so persist an expensive input
+    before calling.
+    A delta over ``driver.DRIVER_ROWS`` rows (solutions, loaded or
+    moved quads, or D / I themselves) folds the store into one
+    ``localCheckpoint``, which the returned frame then reads; a later
+    fold releases the earlier one."""
     spark = quads.sparkSession
-    cur = quads
-    ckpts: list[DataFrame] = []
-
-    def _materialize(df: DataFrame) -> DataFrame:
-        out = df.localCheckpoint(eager=True)
-        while ckpts:
-            release(ckpts.pop())
-        ckpts.append(out)
-        return out
-
+    store = _Store(quads)
     for op in _UpdateParser(text).parse_update():
         kind = op[0]
         if kind == "create":
@@ -491,29 +632,34 @@ def update(quads: DataFrame, text: str, *,
         if kind == "clear":
             sel = op[1]
             if sel[0] == "default":
-                cur = cur.where(F.col("g").isNotNull())
+                store.keep(F.col("g").isNotNull(), lambda g: g is not None)
             elif sel[0] == "named":
-                cur = cur.where(F.col("g").isNull())
+                store.keep(F.col("g").isNull(), lambda g: g is None)
             elif sel[0] == "all":
-                cur = cur.where(F.lit(False))
+                store.keep(F.lit(False), lambda g: False)
             else:
-                cur = cur.where(
-                    ~F.col("g").eqNullSafe(F.lit(sel[1]).cast("string")))
+                store.keep(~F.col("g").eqNullSafe(
+                    F.lit(sel[1]).cast("string")),
+                    lambda g, name=sel[1]: g != name)
         elif kind in ("add", "copy", "move"):
             _, src, dst = op
             if src == dst:
                 continue                  # spec: same graph is a no-op
             src_lit = F.lit(src).cast("string")
             dst_lit = F.lit(dst).cast("string")
-            moved = cur.where(F.col("g").eqNullSafe(src_lit)) \
+            moved = store.view().where(F.col("g").eqNullSafe(src_lit)) \
                 .withColumn("g", dst_lit)
-            base = cur
+            rows = collect_bounded(moved)
             if kind in ("copy", "move"):  # COPY/MOVE overwrite the target
-                base = base.where(~F.col("g").eqNullSafe(dst_lit))
+                store.keep(~F.col("g").eqNullSafe(dst_lit),
+                           lambda g: g != dst)
             if kind == "move":
-                base = base.where(~F.col("g").eqNullSafe(src_lit))
-            cur = _materialize(base.unionByName(
-                moved if kind != "add" else _anti_on_key(moved, base)))
+                store.keep(~F.col("g").eqNullSafe(src_lit),
+                           lambda g: g != src)
+            if rows is None:
+                store.fold(ins=moved)
+            else:
+                store.insert(r.asDict() for r in rows)
         elif kind == "load":
             path = op[1]
             for prefix in ("file://", "file:"):
@@ -537,27 +683,27 @@ def update(quads: DataFrame, text: str, *,
                 loaded = read_nquads(spark, path)
             if op[2] is not None:
                 loaded = loaded.withColumn("g", F.lit(op[2]))
-            fresh = _anti_on_key(_distinct_on_key(_conform(loaded, cur)),
-                                 cur)
-            cur = _materialize(cur.unionByName(fresh))
+            loaded = _distinct_on_key(_conform(loaded, quads))
+            rows = collect_bounded(loaded)
+            if rows is None:
+                store.fold(ins=loaded)
+            else:
+                store.insert(r.asDict() for r in rows)
         elif kind in ("insert_data", "delete_data"):
             # one row per quad identity, first spelling kept: a quad
             # repeated in the block is inserted once
             uniq: dict[tuple, tuple] = {}
             for q in op[1]:
                 uniq.setdefault(_data_key(q), q)
-            rows = local_frame(
-                spark, [(g, s, s.startswith("_:"), p, k, v, dt, lang)
-                        for g, s, p, k, v, dt, lang in uniq.values()],
-                CORE_SCHEMA)
             if kind == "insert_data":
-                fresh = _anti_on_key(_conform(rows, cur), cur)
-                cur = _materialize(cur.unionByName(fresh))
+                store.insert({**dict(zip(QUAD_KEY_COLS, q)),
+                              "s_is_bnode": q[1].startswith("_:")}
+                             for q in uniq.values())
             else:
-                cur = _materialize(_anti_on_key(cur, rows))
+                store.delete(uniq)
         else:
             _, dels, ins, where, with_g, using = op
-            view, scope = cur, with_g
+            view, scope = store.view(), with_g
             if using is not None:
                 # [spec] Update §3.1.3: USING/USING NAMED specify the
                 # WHERE dataset (default := union of USING graphs moved
@@ -567,35 +713,47 @@ def update(quads: DataFrame, text: str, *,
                 defaults, named = using
                 parts = []
                 if defaults:
-                    parts.append(cur.where(
+                    parts.append(view.where(
                         F.col("g").isin(list(defaults)))
                         .withColumn("g", F.lit(None).cast("string")))
                 if named:
-                    parts.append(cur.where(F.col("g").isin(list(named))))
+                    parts.append(view.where(F.col("g").isin(list(named))))
                 view = parts[0]
                 for p in parts[1:]:
                     view = view.unionByName(p)
                 scope = None
-            # path closures the WHERE checkpointed are freed once this
-            # op's result is materialized (nothing lazy reads them then)
+            # path closures the WHERE checkpointed are freed once its
+            # solutions are on the driver or folded into the store
             with released_on_exit():
                 sols = _eval_group(view, where, graph=scope,
                                    with_types=True, stats=stats)
+                rows = collect_bounded(sols)
+                if rows is not None:
+                    sols = local_frame(spark, rows, sols.schema)
+                    if dels is not None:
+                        store.delete(_data_key(tuple(r)) for r in
+                                     _instantiate_quads(sols, dels, with_g)
+                                     .select(*QUAD_KEY_COLS).collect())
+                    if ins is not None:
+                        # sorted: the kept spelling of a repeated key
+                        # does not depend on row order
+                        store.insert(r.asDict() for r in sorted(
+                            _instantiate_quads(sols, ins, with_g)
+                            .collect(), key=repr))
+                    continue
+                # over the bound: fold this op's delta into the store
                 n_branches = sum(len(t[1]) for t in (dels or [])) \
                     + sum(len(t[1]) for t in (ins or []))
                 if n_branches > 1:
                     # each template triple scans the solution set once
                     # — don't re-run the WHERE joins per branch (r02)
                     sols = sols.persist()
-                base = cur
-                if dels is not None:
-                    cur = _anti_on_key(
-                        cur, _instantiate_quads(sols, dels, with_g))
-                if ins is not None:
-                    fresh = _anti_on_key(_conform(
-                        _instantiate_quads(sols, ins, with_g), base), cur)
-                    cur = cur.unionByName(fresh)
-                cur = _materialize(cur)
+                store.fold(
+                    dels=None if dels is None
+                    else _instantiate_quads(sols, dels, with_g),
+                    ins=None if ins is None
+                    else _instantiate_quads(sols, ins, with_g)
+                    .dropDuplicates(QUAD_KEY_COLS))
                 if n_branches > 1:
                     sols.unpersist()
-    return cur
+    return store.view()

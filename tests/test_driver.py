@@ -7,10 +7,11 @@ import pathlib
 import re
 
 import pytest
-from pyspark.sql import Row, types as T
+from pyspark.sql import Row, functions as F, types as T
 
 from rdflib_jsonld_spark.operators.expand import CORE_SCHEMA
-from rdflib_jsonld_spark.plans.driver import local_frame
+from rdflib_jsonld_spark.plans import driver
+from rdflib_jsonld_spark.plans.driver import collect_bounded, local_frame
 
 PACKAGE = pathlib.Path(__file__).resolve().parent.parent / "rdflib_jsonld_spark"
 
@@ -78,3 +79,46 @@ def test_create_dataframe_only_in_driver_module():
         str(p.relative_to(PACKAGE)) for p in PACKAGE.rglob("*.py")
         if re.search(r"createDataFrame\(", p.read_text()))
     assert hits == ["plans/driver.py"]
+
+
+def _jobs(spark, fn, group="collect-bounded"):
+    """(result, number of Spark jobs ``fn`` started)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture()
+def four_files(spark, tmp_path):
+    path = str(tmp_path / "t")
+    spark.range(0, 400, 1, 4).withColumn("k", (F.col("id") % 7)) \
+        .write.parquet(path)
+    return spark.read.schema("id long, k long").parquet(path)
+
+
+def test_collect_bounded_fits_in_one_job(spark, four_files):
+    """The rows of a four-task scan come back in one job. A plain
+    ``limit(n).collect()`` scans one partition first and then the rest,
+    two jobs for the same rows."""
+    df = four_files.where(F.col("k") == 3)
+    rows, jobs = _jobs(spark, lambda: collect_bounded(df, 100))
+    assert jobs == 1
+    assert sorted(r.id for r in rows) == list(range(3, 400, 7))
+    _, plain = _jobs(spark, lambda: df.limit(101).collect(), "plain-limit")
+    assert plain >= 2
+    key = "spark.sql.limit.initialNumPartitions"
+    assert spark.conf.get(key) == "1"        # the setting is restored
+
+
+def test_collect_bounded_over_the_bound(spark, four_files, monkeypatch):
+    df = four_files.where(F.col("k") == 3)   # 57 rows
+    assert collect_bounded(df, 56) is None
+    assert len(collect_bounded(df, 57)) == 57
+    assert collect_bounded(df.where(F.lit(False)), 0) == []
+    monkeypatch.setattr(driver, "DRIVER_ROWS", 10)
+    assert collect_bounded(df) is None
+    assert len(collect_bounded(df.limit(10))) == 10

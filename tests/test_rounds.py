@@ -14,6 +14,7 @@ from rdflib_jsonld_spark.operators.linking import (connected_components,
 from rdflib_jsonld_spark.operators.paths import match_path
 from rdflib_jsonld_spark.operators.rounds import frontier_rounds, release
 from rdflib_jsonld_spark.operators.update import update
+from rdflib_jsonld_spark.sources.quads_io import read_graph, write_quads
 
 V = "http://ex.org/v#"
 E = "http://ex.org/e/"
@@ -95,3 +96,33 @@ def test_frontier_rounds_cap_and_conf_restore(spark):
     release(full)
     release(capped)
     assert _cached_rdds(spark) <= before - 2
+
+
+def _request(i):
+    """A serve-shaped request on chain node ``i``: INSERT DATA, DELETE
+    DATA, DELETE WHERE and a DELETE/INSERT WHERE relink."""
+    n = f"<{E}n{i}>"
+    return (f'INSERT DATA {{ <{E}new{i}> <{V}flag> "x" }} ; '
+            f'DELETE DATA {{ {n} <{V}name> "N{i}" }} ; '
+            f"DELETE WHERE {{ <{E}n{i + 3}> <{V}name> ?c }} ; "
+            f"DELETE {{ {n} <{SAME_AS}> ?y }} INSERT {{ {n} <{V}linked> ?y }} "
+            f"WHERE {{ {n} <{SAME_AS}> ?y }}")
+
+
+@pytest.mark.parametrize("n_requests", [1, 2, 3])
+def test_update_commit_leaves_no_persistent_rdd(spark, tmp_path, n_requests):
+    """update → write_quads → unpersist() frees everything the request
+    made: the result is lazy over the stored table, not a checkpoint
+    that ``unpersist()`` cannot free (one was left per request)."""
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    path = str(tmp_path / "v0")
+    write_quads(chain_quads(spark).withColumn("conv_id", F.lit("c0"))
+                .withColumn("turn_idx", F.lit(0)), path, n_buckets=4)
+    before = persistent().size()
+    for i in range(n_requests):
+        out = update(read_graph(spark, path), _request(i))
+        path = str(tmp_path / f"v{i + 1}")
+        write_quads(out, path, n_buckets=4)
+        out.unpersist()
+    assert persistent().size() <= before
+    assert read_graph(spark, path).count() == 24 - n_requests

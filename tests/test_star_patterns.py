@@ -134,3 +134,26 @@ def test_quoted_object_variable_keeps_its_literal_type(store):
                                     f"WHERE {{ {pat} }}"))
     assert out == [(None, E + "x1", E + "copy", "literal", "Mo",
                     LANGSTRING, "en")]
+
+
+def test_typed_column_inside_quoted_template(store):
+    """A computed (COUNT) column in a quoted template slot is a literal
+    of its datatype, as in the top-level object slot; it used to be
+    spelled as a term by its value and fail the string-to-BIGINT cast."""
+    out = cells(sparql(store, PFX + "CONSTRUCT { ?x e:t << ?x e:n ?c >> } "
+                       "WHERE { SELECT ?x (COUNT(*) AS ?c) "
+                       "{ ?x e:p ?y } GROUP BY ?x }"))
+    assert out == [(None, E + x, E + "t", "triple",
+                    f'<< <{E}{x}> <{E}n> "1"^^<{XSD}integer> >>', None, None)
+                   for x in ("x1", "x2")]
+
+
+def test_bnode_predicate_inside_quoted_template(store):
+    """A template bnode in a quoted predicate slot is not valid RDF:
+    CONSTRUCT skips the triple, as it skips a top-level one, and an
+    INSERT template is rejected."""
+    tmpl = f"{{ <{E}s> <{E}t> << ?x _:b ?y >> }}"
+    where = f"WHERE {{ ?x <{E}p> ?y }}"
+    assert cells(sparql(store, f"CONSTRUCT {tmpl} {where}")) == []
+    with pytest.raises(SparqlError, match="cannot be a predicate"):
+        update(store, f"INSERT {tmpl} {where}")

@@ -241,6 +241,50 @@ def test_sequence_applies_in_order(quads):
     assert out.where(F.col("s") == E + "t").count() == 1
 
 
+def test_data_operations_stay_on_the_driver(quads):
+    """DATA operations only edit the request's driver-held delta; the
+    one Spark job of this request is the probe that finds the insert
+    the store already holds, which keeps its row and lineage."""
+    sc = quads.sparkSession.sparkContext
+    sc.setJobGroup("data-ops", "data-ops")
+    try:
+        out = update(quads, PFX + """
+            INSERT DATA { e:t v:flag "x" } ;
+            DELETE DATA { e:b v:name "Bob" } ;
+            INSERT DATA { e:a v:name "Alice" . e:b v:knows e:c }""")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("data-ops")) <= 1
+    rows = {(r.s, r.p): r.conv_id for r in out.collect()}
+    assert len(rows) == quads.count()
+    assert (E + "b", V + "name") not in rows
+    assert rows[(E + "t", V + "flag")] is None
+    assert rows[(E + "a", V + "name")] == "c0"
+    assert rows[(E + "b", V + "knows")] == "c1"
+
+
+def test_delta_keys_spell_any_term(spark):
+    """The driver-held delta matches store rows by their identity key
+    whatever the cells hold: quotes, backslashes, separators, newlines,
+    empty strings, NULL graph and datatype, and more than ten keys."""
+    vals = ["it's", "back\\slash", 'quo"te', "ünï", "tab\tnl\n", "",
+            "a|1:b", "-", "2:ab", "x'y\\'z", "plain", "last"]
+    rows = [(None, f"{E}s{i}", False, V + "v",
+             "literal", v, None if i % 3 else XSD + "string",
+             "EN" if i == 4 else None, f"c{i}", i)
+            for i, v in enumerate(vals)]
+    store = spark.createDataFrame(rows, SCHEMA)
+    n = len(rows)
+    assert update(store, PFX + "DELETE WHERE { ?s v:v ?o }").count() == 0
+    again = update(store, PFX + "INSERT { ?s v:v ?o } WHERE { ?s v:v ?o }")
+    assert sorted(r.conv_id for r in again.collect()) == \
+        sorted(r[8] for r in rows)      # every row kept, lineage too
+    copied = update(store, PFX + "INSERT { ?s v:w ?o } WHERE { ?s v:v ?o }")
+    assert copied.count() == 2 * n
+    assert update(copied, PFX + "DELETE { ?s v:v ?o } WHERE "
+                          "{ ?s v:w ?o }").count() == n
+
+
 # --- graph management ------------------------------------------------------
 
 def test_clear_selectors(quads):

@@ -334,10 +334,9 @@ def run_one(spark, seed, stats):
     from rdflib_jsonld_spark.operators.update import update
     df = quads_df(spark, store)
     try:
-        # default materialize (checkpoint): the lazy ;-sequence plan
-        # multiplies each op's subtree (documented in update.py) and a
-        # 3-op request over a monster FILTER blew past Janino codegen
-        # limits — the production path is the checkpointed one
+        # the production path: small deltas stay on the driver, larger
+        # ones fold into a checkpoint (plans.driver.DRIVER_ROWS);
+        # tests/test_driver_bound.py replays the pinned seeds both ways
         got = decode_store(update(df, text))
     except SparqlError as e:
         if "property paths inside GRAPH ?var" in str(e):
