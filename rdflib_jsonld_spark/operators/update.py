@@ -396,25 +396,35 @@ def _conform(df: DataFrame, like: DataFrame) -> DataFrame:
     return df.select(*[f.name for f in like.schema.fields])
 
 
+#: quad identity — RDF 1.1 TERM identity, not storage spelling (sweep
+#: 39): a plain literal ≡ explicit ``xsd:string``, a language tag
+#: normalizes case and implies ``rdf:langString``. The text front-end's
+#: DATA parser spells plain literals with explicit xsd:string while the
+#: store convention is NULL — the raw key silently missed those
+#: deletes. Per key column, the rule as SQL over a column and as Python
+#: over a driver cell; the other key columns compare as stored.
+_KEY_RULES = {
+    "o_datatype": (
+        lambda e: f"nullif(nullif({e}, '{XSD_STRING}'), '{RDF_LANGSTRING}')",
+        lambda v: None if v in (XSD_STRING, RDF_LANGSTRING) else v),
+    "o_lang": (lambda e: f"lower({e})",
+               lambda v: v.lower() if v else v),
+}
+
+
 def _key_sql(c: str) -> str:
     """SQL of the quad-identity expression for key column ``c`` (or a
-    renamed ``__u_<c>``) — RDF 1.1 TERM identity, not storage spelling
-    (sweep 39): a plain literal ≡ explicit ``xsd:string``, a language
-    tag normalizes case and implies ``rdf:langString``. The text
-    front-end's DATA parser spells plain literals with explicit
-    xsd:string while the store convention is NULL — the raw key
-    silently missed those deletes. SQL text, because each Column built
-    through the Py4J gateway is a round trip."""
-    if c.endswith("o_datatype"):
-        return f"nullif(nullif(`{c}`, '{XSD_STRING}'), '{RDF_LANGSTRING}')"
-    if c.endswith("o_lang"):
-        return f"lower(`{c}`)"
-    return f"`{c}`"
+    renamed ``__u_<c>``). SQL text, because each Column built through
+    the Py4J gateway is a round trip."""
+    rule = _KEY_RULES.get(c.removeprefix("__u_"))
+    return rule[0](f"`{c}`") if rule else f"`{c}`"
 
 
-def _key_col(c: str):
-    """:func:`_key_sql` as a Column."""
-    return F.expr(_key_sql(c))
+def _data_key(row: tuple) -> tuple:
+    """:func:`_key_sql` over one driver row ``(g, s, p, o_kind,
+    o_value, o_datatype, o_lang)``."""
+    return tuple(_KEY_RULES[c][1](v) if c in _KEY_RULES else v
+                 for c, v in zip(QUAD_KEY_COLS, row))
 
 
 def _key_join(base: DataFrame, other: DataFrame, how: str) -> DataFrame:
@@ -423,7 +433,7 @@ def _key_join(base: DataFrame, other: DataFrame, how: str) -> DataFrame:
     join never self-references."""
     d = other.select(*[F.col(c).alias(f"__u_{c}") for c in QUAD_KEY_COLS])
     cond = reduce(lambda a, b: a & b,
-                  [_key_col(c).eqNullSafe(_key_col(f"__u_{c}"))
+                  [F.expr(f"{_key_sql(c)} <=> {_key_sql(f'__u_{c}')}")
                    for c in QUAD_KEY_COLS])
     return base.join(d, cond, how)
 
@@ -447,44 +457,40 @@ def _add_fresh(store: DataFrame, rows: DataFrame) -> DataFrame:
         _anti_on_key(rows, _key_join(store, rows, "left_semi")))
 
 
-def _key_text(key: tuple) -> str:
-    """A :func:`_data_key` tuple as one string: each cell
-    length-prefixed (``len:value``, ``-`` for NULL), so distinct keys
-    never collide. :func:`_with_keys` spells a row's key the same way."""
-    return "|".join("-" if v is None else f"{len(v)}:{v}" for v in key)
+#: one key cell in a key string, length-prefixed (``len:value``, ``-``
+#: for NULL) so distinct keys never collide — as SQL and as Python; both
+#: count code points (Spark ``length``, Python ``len``)
+_CELL_SQL = "coalesce(concat(length({e}), ':', {e}), '-')"
+
+
+def _cell_text(v: str | None) -> str:
+    return "-" if v is None else f"{len(v)}:{v}"
 
 
 def _with_keys(df: DataFrame, keys, keep: bool = True) -> DataFrame:
     """The rows of ``df`` whose quad identity is one of the driver-held
     ``keys`` (:func:`_data_key` tuples), or with ``keep=False`` is not.
-    The keys are string literals of one ``IN`` filter — a hash-set
-    probe per row, no join and no build side — in one SQL text: a
-    literal Column built through the Py4J gateway costs a round trip,
-    milliseconds for each of thousands of keys."""
-    spelled = ", ".join(f"coalesce(concat(length({e}), ':', {e}), '-')"
-                        for e in map(_key_sql, QUAD_KEY_COLS))
-    texts = ", ".join("'" + _key_text(k).replace("\\", "\\\\")
-                      .replace("'", "\\'") + "'" for k in keys)
+    Both sides spell a key as its cells joined by ``|``. The keys are
+    string literals of one ``IN`` filter — a hash-set probe per row, no
+    join and no build side — in one SQL text: a literal Column built
+    through the Py4J gateway costs a round trip, milliseconds for each
+    of thousands of keys."""
+    spelled = ", ".join(_CELL_SQL.format(e=_key_sql(c))
+                        for c in QUAD_KEY_COLS)
+    texts = ", ".join("'" + "|".join(map(_cell_text, k))
+                      .replace("\\", "\\\\").replace("'", "\\'") + "'"
+                      for k in keys)
     return df.where(F.expr(f"concat_ws('|', {spelled}) "
                            f"{'' if keep else 'NOT '}IN ({texts})"))
 
 
-def _data_key(row: tuple) -> tuple:
-    """:func:`_key_col` over one parsed DATA row ``(g, s, p, o_kind,
-    o_value, o_datatype, o_lang)``."""
-    *head, dt, lang = row
-    if dt in (XSD_STRING, RDF_LANGSTRING):
-        dt = None
-    return (*head, dt, lang.lower() if lang else lang)
-
-
 def _distinct_on_key(df: DataFrame) -> DataFrame:
-    """One row per quad identity (the :func:`_key_col` key), so a LOAD
+    """One row per quad identity (the :func:`_key_sql` key), so a LOAD
     never stores one term twice: a quad repeated in the file, or
     spelled twice (``"v"@EN`` / ``"v"@en``, plain / ``xsd:string``).
     The kept row is the least of its group, which makes the stored
     spelling deterministic."""
-    keys = [_key_col(c).alias(f"__k_{c}") for c in QUAD_KEY_COLS]
+    keys = [F.expr(_key_sql(c)).alias(f"__k_{c}") for c in QUAD_KEY_COLS]
     return (df.groupBy(*keys)
             .agg(F.min(F.struct(*df.columns)).alias("__row"))
             .select("__row.*"))
@@ -559,7 +565,7 @@ class _Store:
         unsure insert come back, and those inserts are dropped."""
         if self.unsure:
             held = _with_keys(self.base, self.unsure).select(
-                *map(_key_col, QUAD_KEY_COLS)).collect()
+                *(F.expr(_key_sql(c)) for c in QUAD_KEY_COLS)).collect()
             for k in held:
                 self.ins.pop(tuple(k), None)
             self.unsure = set()
@@ -619,8 +625,9 @@ def update(quads: DataFrame, text: str, *,
     (an ``IN`` filter) plus I (a ``LocalRelation``): lazy over the
     input and holding no cached blocks, so persist an expensive input
     before calling.
-    A delta over ``driver.DRIVER_ROWS`` rows (solutions, loaded or
-    moved quads, or D / I themselves) folds the store into one
+    A delta over ``driver.DRIVER_ROWS`` rows (solutions, one
+    template's quads, loaded or moved quads, or D / I themselves)
+    folds the store into one
     ``localCheckpoint``, which the returned frame then reads; a later
     fold releases the earlier one."""
     spark = quads.sparkSession
@@ -683,12 +690,15 @@ def update(quads: DataFrame, text: str, *,
                 loaded = read_nquads(spark, path)
             if op[2] is not None:
                 loaded = loaded.withColumn("g", F.lit(op[2]))
-            loaded = _distinct_on_key(_conform(loaded, quads))
+            # cached: over the bound the fold reads the parsed file
+            # again — parsing it twice cost ~1 s at 20,000 quads
+            loaded = _distinct_on_key(_conform(loaded, quads)).persist()
             rows = collect_bounded(loaded)
             if rows is None:
                 store.fold(ins=loaded)
             else:
                 store.insert(r.asDict() for r in rows)
+            loaded.unpersist()
         elif kind in ("insert_data", "delete_data"):
             # one row per quad identity, first spelling kept: a quad
             # repeated in the block is inserted once
@@ -728,32 +738,34 @@ def update(quads: DataFrame, text: str, *,
                 sols = _eval_group(view, where, graph=scope,
                                    with_types=True, stats=stats)
                 rows = collect_bounded(sols)
-                if rows is not None:
-                    sols = local_frame(spark, rows, sols.schema)
-                    if dels is not None:
-                        store.delete(_data_key(tuple(r)) for r in
-                                     _instantiate_quads(sols, dels, with_g)
-                                     .select(*QUAD_KEY_COLS).collect())
-                    if ins is not None:
-                        # sorted: the kept spelling of a repeated key
-                        # does not depend on row order
-                        store.insert(r.asDict() for r in sorted(
-                            _instantiate_quads(sols, ins, with_g)
-                            .collect(), key=repr))
-                    continue
-                # over the bound: fold this op's delta into the store
                 n_branches = sum(len(t[1]) for t in (dels or [])) \
                     + sum(len(t[1]) for t in (ins or []))
-                if n_branches > 1:
+                if rows is not None:
+                    sols = local_frame(spark, rows, sols.schema)
+                elif n_branches > 1:
                     # each template triple scans the solution set once
                     # — don't re-run the WHERE joins per branch (r02)
                     sols = sols.persist()
-                store.fold(
-                    dels=None if dels is None
-                    else _instantiate_quads(sols, dels, with_g),
-                    ins=None if ins is None
+                d_q = None if dels is None \
+                    else _instantiate_quads(sols, dels, with_g)
+                i_q = None if ins is None \
                     else _instantiate_quads(sols, ins, with_g)
-                    .dropDuplicates(QUAD_KEY_COLS))
-                if n_branches > 1:
+                if rows is not None:
+                    # each solution gives one quad per template triple:
+                    # the quads are bounded on their own
+                    d_rows = [] if d_q is None else collect_bounded(
+                        d_q.select(*QUAD_KEY_COLS))
+                    i_rows = [] if i_q is None else collect_bounded(i_q)
+                    if d_rows is not None and i_rows is not None:
+                        store.delete(_data_key(tuple(r)) for r in d_rows)
+                        # sorted: the kept spelling of a repeated key
+                        # does not depend on row order
+                        store.insert(r.asDict()
+                                     for r in sorted(i_rows, key=repr))
+                        continue
+                # over the bound: fold this op's delta into the store
+                store.fold(dels=d_q, ins=None if i_q is None
+                           else i_q.dropDuplicates(QUAD_KEY_COLS))
+                if rows is None and n_branches > 1:
                     sols.unpersist()
     return store.view()

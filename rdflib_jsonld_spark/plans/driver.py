@@ -25,8 +25,15 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-#: the most rows :func:`collect_bounded` brings to the driver by default
-DRIVER_ROWS = 10_000
+#: the most rows :func:`collect_bounded` brings to the driver by default:
+#: about where an Update delta served from the driver stops beating one
+#: fold into a checkpoint (measured in SCALE.md)
+DRIVER_ROWS = 5_000
+
+#: about the most rows the first job of :func:`collect_bounded` sends:
+#: 16 tasks at the default bound, more than a ``local[8]`` session's
+#: shuffle or file-scan partitions
+FIRST_JOB_ROWS = 16 * (DRIVER_ROWS + 1)
 
 _INITIAL_PARTS = "spark.sql.limit.initialNumPartitions"
 
@@ -34,18 +41,24 @@ _INITIAL_PARTS = "spark.sql.limit.initialNumPartitions"
 def collect_bounded(df: DataFrame, bound: int | None = None
                     ) -> list[Row] | None:
     """``df``'s rows, or None when it has more than ``bound`` rows
-    (default :data:`DRIVER_ROWS`). One Spark job when the rows fit.
+    (default :data:`DRIVER_ROWS`). One Spark job when the rows fit in
+    at most ``FIRST_JOB_ROWS // (bound + 1)`` partitions.
 
-    A plain ``limit(n).collect()`` first scans
-    ``spark.sql.limit.initialNumPartitions`` partitions (1) and then
-    retries on ×4 as many until it has ``n`` rows: two jobs or more on
-    a four-task scan whose rows all fit. Here that setting is raised for
-    the one collect, so the first job scans every partition; each task
-    still sends at most ``bound + 1`` rows."""
+    ``limit(n).collect()`` runs Spark's take loop: each job scans some
+    partitions, each task sends up to ``n`` rows, and the driver holds
+    all the results of a job before it counts them. The first job scans
+    ``spark.sql.limit.initialNumPartitions`` partitions (1 by default),
+    so a four-task scan whose rows all fit costs two jobs or more. Here
+    that setting is raised, for the one collect, to the partitions whose
+    prefixes together stay within :data:`FIRST_JOB_ROWS`, not to every
+    partition: a frame over the bound then sends about that many rows,
+    not ``bound + 1`` per partition. Spark scans further partitions
+    (at most four times the number scanned so far) only while fewer
+    than ``bound + 1`` rows have come back."""
     bound = DRIVER_ROWS if bound is None else bound
     spark = df.sparkSession
     prev = spark.conf.get(_INITIAL_PARTS)
-    spark.conf.set(_INITIAL_PARTS, str(2 ** 31 - 1))
+    spark.conf.set(_INITIAL_PARTS, str(max(1, FIRST_JOB_ROWS // (bound + 1))))
     try:
         rows = df.limit(bound + 1).collect()
     finally:

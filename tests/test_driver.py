@@ -122,3 +122,22 @@ def test_collect_bounded_over_the_bound(spark, four_files, monkeypatch):
     monkeypatch.setattr(driver, "DRIVER_ROWS", 10)
     assert collect_bounded(df) is None
     assert len(collect_bounded(df.limit(10))) == 10
+
+
+def test_collect_bounded_caps_rows_sent_over_the_bound(spark, monkeypatch):
+    """Over the bound, the first job scans only the partitions whose
+    prefixes fit in ``FIRST_JOB_ROWS``; it does not make every one of
+    64 partitions send ``bound + 1`` rows to the driver."""
+    df = spark.range(0, 640, 1, 64).where(F.col("id") % 10 < 5)
+    # rows that fit come back in one job, however many partitions
+    rows, jobs = _jobs(spark, lambda: collect_bounded(
+        df.where(F.col("id") < 40), 20), "fits-64")
+    assert (jobs, len(rows)) == (1, 20)
+    monkeypatch.setattr(driver, "FIRST_JOB_ROWS", 24)
+    out, jobs = _jobs(spark, lambda: collect_bounded(df, 5), "over-bound")
+    assert out is None
+    tracker = spark.sparkContext.statusTracker()
+    tasks = sum(tracker.getStageInfo(s).numTasks
+                for j in tracker.getJobIdsForGroup("over-bound")
+                for s in tracker.getJobInfo(j).stageIds)
+    assert (jobs, tasks) == (1, 24 // 6)

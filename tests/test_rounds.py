@@ -14,6 +14,7 @@ from rdflib_jsonld_spark.operators.linking import (connected_components,
 from rdflib_jsonld_spark.operators.paths import match_path
 from rdflib_jsonld_spark.operators.rounds import frontier_rounds, release
 from rdflib_jsonld_spark.operators.update import update
+from rdflib_jsonld_spark.plans import driver
 from rdflib_jsonld_spark.sources.quads_io import read_graph, write_quads
 
 V = "http://ex.org/v#"
@@ -73,6 +74,18 @@ def test_loop_releases_superseded_checkpoints(spark, name):
     assert out.count() > 0
     # the result itself may be one live checkpoint; nothing else stays
     assert _cached_rdds(spark) - before <= 1, name
+
+
+@pytest.mark.parametrize("name", ["seeded_sameAs_plus", "update_3op",
+                                  "update_paths_2op"])
+def test_distributed_path_releases_superseded_checkpoints(spark, name,
+                                                          monkeypatch):
+    """The same calls with the driver bound at 0: the seeded closure
+    runs ``frontier_rounds`` and every Update op folds into a
+    checkpoint, so the fold's and ``released_on_exit``'s releases are
+    what keeps the count down."""
+    monkeypatch.setattr(driver, "DRIVER_ROWS", 0)
+    test_loop_releases_superseded_checkpoints(spark, name)
 
 
 def test_frontier_rounds_cap_and_conf_restore(spark):
