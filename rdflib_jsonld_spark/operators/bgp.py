@@ -577,6 +577,37 @@ def _typed_lit(dtypes: dict, var: str) -> str | None:
     return _NUM_DTS.get(t, XSD_STRING)
 
 
+def _num_str_sql(sql: str, cls) -> str:
+    """STR() of a computed numeric: integer class renders without the
+    double's trailing '.0'; decimal class drops '.0' for whole values
+    (xsd:decimal lexicals don't require a point); float/double keep
+    the double lexical (the documented formatting deviation)."""
+    i = f"CAST(CAST({sql} AS BIGINT) AS STRING)"
+    d = f"CAST({sql} AS STRING)"
+    whole = f"(CASE WHEN ({sql}) = CAST(({sql}) AS BIGINT) " \
+            f"THEN {i} ELSE {d} END)"
+    if isinstance(cls, int):
+        return i if cls == 0 else (whole if cls == 1 else d)
+    return (f"(CASE WHEN {cls} = 0 THEN {i} "
+            f"WHEN {cls} = 1 THEN {whole} ELSE {d} END)")
+
+
+def _typed_term(dtypes: dict, var: str):
+    """``(lexical, datatype)`` columns of a TYPED solution column. A
+    computed numeric is a DOUBLE whose ``__typ_`` datatype companion,
+    when captured, carries its promoted class: the literal takes that
+    datatype and STR()'s lexical form (``?v * 2`` over an xsd:integer
+    is ``"6"^^xsd:integer``, not ``"6.0"^^xsd:double``)."""
+    comp = f"{TYPED_PREFIX}{var}__datatype"
+    dt = F.lit(_typed_lit(dtypes, var))
+    if comp not in dtypes or dtypes[var] == "boolean":
+        return F.col(var).cast("string"), dt
+    cls = (f"(CASE `{comp}` WHEN '{_XSD}integer' THEN 0 "
+           f"WHEN '{_XSD}decimal' THEN 1 ELSE 3 END)")
+    return (F.expr(_num_str_sql(f"`{var}`", cls)),
+            F.coalesce(F.col(comp), dt))
+
+
 def _qt_template_col(term: tuple, dtypes: dict):
     """Template quoted-triple term → a column building its star.py
     table spelling from the current solution row (SPARQL 1.2 annotation
@@ -598,9 +629,9 @@ def _qt_template_col(term: tuple, dtypes: dict):
             return F.lit(term_to_star(t))
         var = pos[1:]
         v = F.col(var)
-        if (typed := _typed_lit(dtypes, var)) is not None:
-            return F.concat(F.lit('"'), v.cast("string"),
-                            F.lit(f'"^^<{typed}>'))
+        if _typed_lit(dtypes, var) is not None:
+            lex, dt = _typed_term(dtypes, var)
+            return F.concat(F.lit('"'), lex, F.lit('"^^<'), dt, F.lit(">"))
         shape = F.when(v.startswith("_:"), F.lit("bnode")) \
             .when(v.startswith("<<"), F.lit("triple")) \
             .otherwise(F.lit("iri"))
@@ -678,10 +709,9 @@ def instantiate_template(sols: DataFrame,
         elif _is_var(o) and _typed_lit(dtypes, o[1:]) is not None:
             # typed computed column in object position: a literal of
             # the column's promoted datatype, value as its lexical form
-            var = o[1:]
-            o_col = F.col(var).cast("string")
+            o_col, dt = _typed_term(dtypes, o[1:])
             kind = F.when(o_col.isNotNull(), F.lit("literal"))
-            dt = F.when(o_col.isNotNull(), F.lit(_typed_lit(dtypes, var)))
+            dt = F.when(o_col.isNotNull(), dt)
             lang = F.lit(None).cast("string")
         elif _is_var(o):
             var = o[1:]

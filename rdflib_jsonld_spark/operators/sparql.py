@@ -93,9 +93,9 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, functions as F
 
 from .bgp import (TK_PREFIX, TYPED_PREFIX, _companion_cols, _is_var,
-                  _pattern_vars, decode_literal, encode_literal,
-                  instantiate_template, leaves, map_leaves, match_bgp,
-                  patch_companion_refs, term_key_of)
+                  _num_str_sql, _pattern_vars, decode_literal,
+                  encode_literal, instantiate_template, leaves, map_leaves,
+                  match_bgp, patch_companion_refs, term_key_of)
 from .expand import QUAD_KEY_COLS
 from ..plans.driver import local_frame
 from .paths import match_path
@@ -2812,21 +2812,6 @@ def _cls_dt_sql(cls) -> str:
         return _sql_str(_CLS_DT[cls])
     arr = ", ".join(_sql_str(d) for d in _CLS_DT)
     return f"element_at(array({arr}), {cls} + 1)"
-
-
-def _num_str_sql(sql: str, cls) -> str:
-    """STR() of a computed numeric: integer class renders without the
-    double's trailing '.0'; decimal class drops '.0' for whole values
-    (xsd:decimal lexicals don't require a point); float/double keep
-    the double lexical (the documented formatting deviation)."""
-    i = f"CAST(CAST({sql} AS BIGINT) AS STRING)"
-    d = f"CAST({sql} AS STRING)"
-    whole = f"(CASE WHEN ({sql}) = CAST(({sql}) AS BIGINT) " \
-            f"THEN {i} ELSE {d} END)"
-    if isinstance(cls, int):
-        return i if cls == 0 else (whole if cls == 1 else d)
-    return (f"(CASE WHEN {cls} = 0 THEN {i} "
-            f"WHEN {cls} = 1 THEN {whole} ELSE {d} END)")
 
 
 def _as_num(node, typ=None) -> str:

@@ -31,7 +31,12 @@ def build_session(master: str | None = None, app: str = "kg-pipeline",
                   shuffle_partitions: int | None = None,
                   driver_memory: str | None = None) -> SparkSession:
     """The session every entry point uses: Arrow on, UTC session timezone
-    (output never depends on the host), AQE at Spark's default (on).
+    (output never depends on the host), AQE at Spark's default (on), and
+    PySpark's DataFrame call-site capture off. That capture wraps every
+    ``functions``/``Column``/``DataFrame`` call in about ten Py4J round
+    trips plus a failed ``import IPython``, more than half the round
+    trips of a small request's planning; it only adds the Python call
+    site to error messages. The conf is static, so it is set here.
 
     ``master=None`` leaves master and UI to spark-submit, since builder
     options override ``--conf`` (plain python resolves to ``local[*]``);
@@ -42,7 +47,8 @@ def build_session(master: str | None = None, app: str = "kg-pipeline",
     the builder launches the JVM; under spark-submit the submit args win."""
     b = (SparkSession.builder.appName(app)
          .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-         .config("spark.sql.session.timeZone", "UTC"))
+         .config("spark.sql.session.timeZone", "UTC")
+         .config("spark.python.sql.dataFrameDebugging.enabled", "false"))
     if master:
         b = b.master(master).config("spark.ui.enabled", "false")
     if shuffle_partitions:
@@ -69,20 +75,23 @@ def register_views(stages: dict[str, DataFrame],
 
 
 def construct_graph(spark: SparkSession, transcripts: DataFrame,
-                    output: str, n_slices: int = 8, n_buckets: int = 32,
+                    output: str, n_slices: int = 8,
+                    n_buckets: int | None = None,
                     registry: dict | None = None
                     ) -> tuple[dict[str, DataFrame], dict]:
     """Build the graph under ``output``; returns ``(stages, metrics)``.
 
     Writes ``_lineage/`` + ``quads/`` (resumable: a re-run on the same
     ``output`` skips every slice with a marker), ``graph/`` (bucketed
-    canonical quads) and ``entity_counts/``. ``registry`` merges extra
+    canonical quads; ``n_buckets=None`` is :func:`write_quads`' default,
+    one bucket per core) and ``entity_counts/``. ``registry`` merges extra
     pre-fetched contexts over the built-in one. The dedup table is
     persisted once and feeds the mapping, rewrite and counts; it and the
     mapping stay cached for exports and queries over
     ``stages["canonical_quads"]`` (the in-memory rewrite). ``metrics`` is
     the ``metrics.json`` content; ``n_canonical_quads`` is read back from
-    ``graph/`` so the rewrite join does not run twice."""
+    ``graph/`` so the rewrite join does not run twice, and ``n_buckets``
+    is the bucket count the graph was written with."""
     writer = ResumableQuadWriter(spark, output, n_slices=n_slices)
     summary = writer.run(
         transcripts, lambda df: expand_with_metrics(df, registry=registry))
@@ -100,7 +109,7 @@ def construct_graph(spark: SparkSession, transcripts: DataFrame,
     mapping = canonical_mapping(quads).cache()
     canon = canonicalize_quads(quads, mapping)
     graph_path = os.path.join(output, "graph")
-    write_quads(canon, graph_path, n_buckets=n_buckets)
+    n_buckets = write_quads(canon, graph_path, n_buckets=n_buckets)
     counts_path = os.path.join(output, "entity_counts")
     entity_mention_counts(quads, mapping).write.mode("overwrite").parquet(
         counts_path)
@@ -115,5 +124,6 @@ def construct_graph(spark: SparkSession, transcripts: DataFrame,
         "n_quads_dedup": n_quads,
         "n_linked_nodes": mapping.count(),
         "n_canonical_quads": read_graph(spark, graph_path).count(),
+        "n_buckets": n_buckets,
     }
     return stages, metrics

@@ -52,13 +52,16 @@ def test_graph_diff_and_pr(spark):
 
 def test_write_quads_bucket_layout_and_pruned_lookup(spark, tmp_path):
     from rdflib_jsonld_spark.sources.quads_io import (
-        lookup_subjects, write_quads)
+        BUCKETS_FILE, lookup_subjects, write_quads)
     import glob
+    import json
     quads = expand_transcripts(tr.transcripts_df(spark, 6, partitions=2))
     out = str(tmp_path / "graph")
     write_quads(quads, out, n_buckets=8)
     dirs = glob.glob(f"{out}/s_bucket=*")
     assert 1 < len(dirs) <= 8
+    with open(f"{out}/{BUCKETS_FILE}") as f:
+        assert json.load(f)["n_buckets"] == 8
     back = spark.read.parquet(out)
     assert back.count() == quads.count()
     # same subject always lands in one bucket
@@ -71,7 +74,7 @@ def test_write_quads_bucket_layout_and_pruned_lookup(spark, tmp_path):
     subj = back.select("s").where(~F.col("s").startswith("_:")) \
         .distinct().limit(2)
     subjects = [r.s for r in subj.collect()]
-    got = lookup_subjects(spark, out, subjects, n_buckets=8)
+    got = lookup_subjects(spark, out, subjects)
     want = back.where(F.col("s").isin(subjects))
     assert {tuple(r) for r in got.collect()} \
         == {tuple(r) for r in want.collect()}

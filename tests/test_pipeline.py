@@ -114,3 +114,29 @@ def test_build_session_profiles(spark):
     line = [ln for ln in res.stdout.splitlines()
             if ln.startswith("PROFILE ")]
     assert line == ["PROFILE local[*] 1 false 1 UTC"]
+
+
+def test_session_turns_call_site_capture_off(spark, monkeypatch):
+    """build_session sets PySpark's static DataFrame-debugging conf to
+    false, so no functions/Column/DataFrame call captures its Python
+    call site (about ten Py4J round trips each): planning and collecting
+    a 3-pattern star captures none."""
+    import pyspark.errors.utils as eu
+    from rdflib_jsonld_spark.operators.sparql import sparql
+    v = "http://ex.org/v#"
+    quads = spark.createDataFrame(
+        [(None, "urn:a", False, v + p, "literal", o, None, None)
+         for p, o in (("name", "A"), ("age", "3"), ("city", "Oslo"))],
+        "g string, s string, s_is_bnode boolean, p string, o_kind string, "
+        "o_value string, o_datatype string, o_lang string")
+    calls = []
+    capture = eu._capture_call_site
+    monkeypatch.setattr(eu, "_capture_call_site",
+                        lambda depth: calls.append(depth) or capture(depth))
+    rows = sparql(quads, f"PREFIX v: <{v}> SELECT ?n ?a ?c WHERE "
+                         "{ ?x v:name ?n . ?x v:age ?a . ?x v:city ?c }"
+                  ).collect()
+    assert [tuple(r) for r in rows] == [("A", "3", "Oslo")]
+    assert len(calls) == 0
+    assert spark.conf.get(
+        "spark.python.sql.dataFrameDebugging.enabled") == "false"

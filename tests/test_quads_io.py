@@ -1,13 +1,20 @@
 """sources/quads_io.py: the graph table is read with its one fixed
-schema, so a read starts no Spark job."""
+schema, so a read starts no Spark job; it has one bucket file per core
+by default, and its bucket count is recorded with it."""
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+
 import pytest
+from pyspark.sql import functions as F
 
 from rdflib_jsonld_spark.operators.expand import expand_transcripts
 from rdflib_jsonld_spark.sources import transcripts as tr
-from rdflib_jsonld_spark.sources.quads_io import read_graph, write_quads
+from rdflib_jsonld_spark.sources.quads_io import (
+    BUCKETS_FILE, lookup_subjects, read_graph, write_quads)
 
 
 def _jobs(spark, group: str, fn) -> int:
@@ -44,3 +51,40 @@ def test_read_graph_schema_matches_inference(spark, graph):
     assert got.schema == inferred.schema
     assert sorted(map(tuple, got.collect())) \
         == sorted(map(tuple, inferred.collect()))
+
+
+def test_lookup_reads_bucket_count_from_table(spark, graph, tmp_path):
+    """lookup_subjects prunes with the N the table was written with (4
+    here); a table without the record raises instead of guessing."""
+    g = read_graph(spark, graph)
+    subjects = sorted(r.s for r in g.select("s").distinct().collect())[:8]
+    got = lookup_subjects(spark, graph, subjects)
+    want = g.where(F.col("s").isin(subjects))
+    assert sorted(map(tuple, got.collect())) \
+        == sorted(map(tuple, want.collect()))
+    assert got.count() > 0
+    with open(os.path.join(graph, BUCKETS_FILE)) as f:
+        assert json.load(f) == {"n_buckets": 4}
+    bare = str(tmp_path / "bare")
+    write_quads(g, bare)
+    os.remove(os.path.join(bare, BUCKETS_FILE))
+    with pytest.raises(FileNotFoundError, match=BUCKETS_FILE):
+        lookup_subjects(spark, bare, subjects)
+
+
+def test_default_write_is_one_file_per_core(spark, tmp_path):
+    """With no n_buckets the table has at most defaultParallelism
+    buckets, one data file each, and a full scan lists no more files."""
+    cores = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "graph")
+    quads = expand_transcripts(tr.transcripts_df(spark, 6, partitions=2))
+    n = write_quads(quads, path)
+    dirs = glob.glob(os.path.join(path, "s_bucket=*"))
+    assert 1 < len(dirs) <= cores
+    for d in dirs:
+        assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1, d
+    assert len(read_graph(spark, path).inputFiles()) <= cores
+    assert n == cores
+    with open(os.path.join(path, BUCKETS_FILE)) as f:
+        assert json.load(f) == {"n_buckets": cores}
+    assert read_graph(spark, path).count() == quads.count()

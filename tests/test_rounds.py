@@ -2,8 +2,10 @@
 
 Every loop checkpoints each round; a superseded round must be freed
 before the call returns. ``DataFrame.unpersist()`` does not free a
-``localCheckpoint``, so this counts the RDDs that actually hold cached
-blocks in the JVM before and after each call."""
+``localCheckpoint``, so this takes the ids of the RDDs that actually
+hold cached blocks in the JVM before and after each call, and counts
+only the ids the call created: RDDs an earlier case left, freed by the
+ContextCleaner meanwhile, cannot hide a leak."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -64,7 +66,8 @@ CALLS = {
 
 
 def _cached_rdds(spark):
-    return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+    """Ids of the RDDs holding cached blocks."""
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
 
 
 @pytest.mark.parametrize("name", sorted(CALLS))
@@ -73,7 +76,7 @@ def test_loop_releases_superseded_checkpoints(spark, name):
     out = CALLS[name](spark)
     assert out.count() > 0
     # the result itself may be one live checkpoint; nothing else stays
-    assert _cached_rdds(spark) - before <= 1, name
+    assert len(_cached_rdds(spark) - before) <= 1, name
 
 
 @pytest.mark.parametrize("name", ["seeded_sameAs_plus", "update_3op",
@@ -105,10 +108,12 @@ def test_frontier_rounds_cap_and_conf_restore(spark):
         [f"n{i}" for i in range(7)]
     assert sorted(r.node for r in capped.collect()) == ["n0", "n1", "n2"]
     assert spark.conf.get(key) == prev   # the planning guard is undone
-    before = _cached_rdds(spark)
+    ids = {df._jdf.queryExecution().analyzed().rdd().id()
+           for df in (full, capped)}
+    assert len(ids) == 2 and ids <= _cached_rdds(spark)
     release(full)
     release(capped)
-    assert _cached_rdds(spark) <= before - 2
+    assert not ids & _cached_rdds(spark)
 
 
 def _request(i):

@@ -369,6 +369,22 @@ def test_construct_preserves_typing(quads):
     assert typ.o_kind == "iri"
 
 
+def test_construct_types_computed_literal_by_its_class(quads):
+    """A computed numeric is a double typed by its promoted class: the
+    template literal takes that class and STR()'s lexical form, also
+    inside a quoted triple."""
+    out = sparql(quads, PFX + """
+        CONSTRUCT { ?x v:double ?d . ?x v:half ?h . << ?x v:k ?d >> v:q 1 }
+        WHERE { ?x v:age 30 . ?x v:age ?a
+                BIND(?a * 2 AS ?d) BIND(?a / 4 AS ?h) }""")
+    assert vals(out, "p", "o_value", "o_datatype") == [
+        (V + "double", "60", XSD + "integer"),
+        (V + "half", "7.5", XSD + "decimal"),
+        (V + "q", "1", XSD + "integer")]
+    (qt,) = [r.s for r in out.collect() if r.p == V + "q"]
+    assert f'"60"^^<{XSD}integer>' in qt
+
+
 def test_describe_follows_bnodes(quads):
     out = sparql(quads, PFX + "DESCRIBE e:c")
     got = vals(out, "s", "p")

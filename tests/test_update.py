@@ -206,6 +206,16 @@ def test_modify_preserves_literal_typing(quads):
         ("literal", "30", XSD + "integer")
 
 
+def test_insert_types_computed_literal_by_its_class(quads):
+    """INSERT stores a computed integer as "60"^^xsd:integer, the
+    datatype and lexical form SELECT's DATATYPE()/STR() report, not as
+    the double it is computed in."""
+    out = update(quads, PFX + """
+        INSERT { ?x v:double ?d } WHERE { ?x v:age ?a BIND(?a * 2 AS ?d) }""")
+    got = out.where(F.col("p") == V + "double").collect()
+    assert [(r.o_value, r.o_datatype) for r in got] == [("60", XSD + "integer")]
+
+
 def test_modify_insert_into_graph_var(quads):
     # GRAPH ?g in the template routes per-solution
     out = update(quads, PFX + """

@@ -36,7 +36,9 @@ def main() -> None:
                          "'jsonl:<path>' for JSON-Lines JSON-LD documents")
     ap.add_argument("--output", required=True)
     ap.add_argument("--slices", type=int, default=8)
-    ap.add_argument("--buckets", type=int, default=32)
+    ap.add_argument("--buckets", type=int, default=None,
+                    help="s_bucket count of the graph table (default: the "
+                         "session's default parallelism)")
     ap.add_argument("--contexts", default=None,
                     help="directory of pre-fetched remote contexts "
                          "(manifest.json maps IRI -> file) merged into the "
